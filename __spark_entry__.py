@@ -488,17 +488,14 @@ def _host_pagerank_oracle(iters: int = 4) -> str:
 
 
 def _q_host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components (round 6) via alternating large-star/small-star
-    contraction over a deterministic host graph: hosts are source-(doc_id%7)
-    shards, each doc links its shard to shard (doc_id*3+1)%7 WITHIN its
-    source — the shard permutation i→3i+1 (mod 7) leaves shard 3 a fixed
-    point, so every source contributes one 6-host component and one
-    singleton at every sf. The oracle recomputes components as a recursive
-    min-label CTE (transitive closure) — feasible because the node set is
-    host-scale, while the Spark side runs the edge-contraction formulation
-    that survives 10^12-edge graphs."""
-    from batch_doc_vqa_spark.operators.graphs import connected_components
-
+    """Connected components (round 6) via ``dedup.resolve_clusters`` over a
+    deterministic host graph: hosts are source-(doc_id%7) shards, each doc
+    links its shard to shard (doc_id*3+1)%7 WITHIN its source — the shard
+    permutation i→3i+1 (mod 7) leaves shard 3 a fixed point, so every source
+    contributes one 6-host component and one singleton at every sf. The
+    oracle recomputes components as a recursive min-label CTE (transitive
+    closure) — feasible because the node set is host-scale, while the Spark
+    side runs the same resolver the dedup compositions use."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     host = F.concat(
         F.col("source"), F.lit("-"), F.pmod(F.col("doc_id"), F.lit(7)).cast("string")
@@ -510,11 +507,11 @@ def _q_host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = docs.select(host.alias("id_a"), dst_host.alias("id_b"))
     ids = docs.select(host.alias("host"))
-    cc = connected_components(ids, pairs, id_col="host")
-    w = Window.partitionBy("component_id")
+    cc = dedup.resolve_clusters(ids, pairs, id_col="host")
+    w = Window.partitionBy("cluster_id")
     return cc.select(
         F.col("id").alias("host"),
-        "component_id",
+        F.col("cluster_id").alias("component_id"),
         F.count(F.lit(1)).over(w).alias("component_size"),
     )
 
@@ -1097,20 +1094,6 @@ def _q_dedup_resolve_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain (signatures, bands, candidate join, clustering)
     docs = _tp(spark, sf_dir, "documents")
     out = dedup.dedup_resolve_lsh(docs, "doc_id", "text", n=3, threshold=0.5, base_hash="md5")
-    return out.select(F.col("id").alias("doc_id"), "cluster_id", "keep", "cluster_size")
-
-
-def _q_dedup_resolve_starcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resolver tier invariance (round 6b): the SAME LSH composition through
-    the large-star/small-star contraction resolver
-    (`graphs.connected_components`) instead of min-label propagation. Both
-    resolvers label every node with its component minimum, so this shares
-    `dedup_resolve_lsh`'s SQL oracle verbatim — the driver gate proves the
-    unbounded-topology tier is output-identical on the full pipeline."""
-    docs = _tp(spark, sf_dir, "documents")
-    out = dedup.dedup_resolve_lsh(
-        docs, "doc_id", "text", n=3, threshold=0.5, base_hash="md5", resolver="star"
-    )
     return out.select(F.col("id").alias("doc_id"), "cluster_id", "keep", "cluster_size")
 
 
@@ -3491,7 +3474,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # -- not driver-signed in r03 (incl. new-this-round): sampled first --
         "host_components": _q_host_components,
-        "dedup_resolve_starcc": _q_dedup_resolve_starcc,
         "bm25_topk": _q_bm25_topk,
         "bm25_persisted_topk": _q_bm25_persisted,
         "shard_layout": _q_shard_layout,
@@ -3988,9 +3970,6 @@ def oracle_sql() -> dict[str, str]:
     oracles = {
         **_fixture_oracles(),
         "dedup_resolve_lsh": _dedup_resolve_lsh_oracle(),
-        # resolver tier invariance: star contraction shares the label tier's
-        # oracle verbatim (both converge to the component minimum)
-        "dedup_resolve_starcc": _dedup_resolve_lsh_oracle(),
         "pdf_text_extract": _pdf_text_oracle(),
         "cohort_stats": _cohort_stats_oracle(),
         "media_decode": _media_decode_oracle(),
@@ -5238,7 +5217,7 @@ def oracle_sql() -> dict[str, str]:
         "ANTI JOIN cent ON a.vec_id = cent.cent_id\n"
         "                      WHERE a.vec_id % 2 = 0\n",
     )
-    # round-6 additions: large-star/small-star components (recursive-CTE
+    # round-6 additions: host connected components (recursive-CTE
     # mirror), BM25 inverted-index retrieval, token-balanced shard layout
     # (plain prefix-sum mirror of the two-layer distributed form), and the
     # suffix-level domain blocklist

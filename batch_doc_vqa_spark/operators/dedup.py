@@ -565,7 +565,9 @@ def resolve_clusters(
     broadcast join makes (tier-equality tested both ways).
 
     ``ids`` supplies the full id universe so singletons resolve to themselves.
-    ``pairs`` needs columns (id_a, id_b).
+    ``pairs`` needs columns (id_a, id_b); ids must be orderable (the cluster
+    id is the MIN id). Raises after ``max_iter`` rounds without convergence
+    rather than returning a half-propagated labeling.
     """
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = (
@@ -657,6 +659,8 @@ def resolve_clusters(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(f"resolve_clusters: no convergence in {max_iter} rounds")
     resolved = labels.select("id", F.col("label").alias("cluster_id"))
     return (
         ids.select(F.col(id_col).alias("id"))
@@ -666,33 +670,16 @@ def resolve_clusters(
     )
 
 
-def _keep_one(
-    ids: DataFrame, pairs: DataFrame, id_col: str, resolver: str = "label"
-) -> DataFrame:
-    """pairs → clusters → (id, cluster_id, keep, cluster_size) keep-one frame.
+def _keep_one(ids: DataFrame, pairs: DataFrame, id_col: str) -> DataFrame:
+    """pairs → clusters (``resolve_clusters``) → (id, cluster_id, keep,
+    cluster_size) keep-one frame.
 
     cluster_size via a window over cluster_id: ONE shuffle of the frame,
     vs groupBy-then-join's shuffle of both the aggregate and the probe side.
-
-    ``resolver``: ``'label'`` — min-label propagation + pointer jumping
-    (``resolve_clusters``; right for near-dup clusters, whose diameters are
-    tiny); ``'star'`` — large-star/small-star edge contraction
-    (``graphs.connected_components``; the unbounded-topology tier, same
-    labels by construction — both converge to the component minimum, so the
-    tiers are output-identical and share one oracle).
     """
     from pyspark.sql import Window
 
-    if resolver == "label":
-        clusters = resolve_clusters(ids.select(id_col), pairs, id_col=id_col)
-    elif resolver == "star":
-        from .graphs import connected_components
-
-        clusters = connected_components(
-            ids.select(id_col), pairs, id_col=id_col
-        ).select("id", F.col("component_id").alias("cluster_id"))
-    else:
-        raise ValueError(f"_keep_one: unknown resolver {resolver!r}")
+    clusters = resolve_clusters(ids.select(id_col), pairs, id_col=id_col)
     w = Window.partitionBy("cluster_id")
     return clusters.select(
         "id",
@@ -727,10 +714,10 @@ def dedup_resolve_lsh(
     seed: int = 7,
     max_bucket: int | None = None,
     base_hash: str = "xxhash64",
-    resolver: str = "label",
 ) -> DataFrame:
     """The scale dedup composition end-to-end: MinHash+LSH candidate pairs
-    (est_jaccard ≥ threshold) → connected components → keep-one.
+    (est_jaccard ≥ threshold) → connected components (``resolve_clusters``)
+    → keep-one.
 
     This is the plan a 10^12-document dedup actually runs — every stage is
     corpus-linear (banded LSH candidates, min-label-propagation components) —
@@ -742,7 +729,7 @@ def dedup_resolve_lsh(
         df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands,
         seed=seed, max_bucket=max_bucket, base_hash=base_hash,
     ).filter(F.col("est_jaccard") >= threshold)
-    return _keep_one(df, pairs, id_col, resolver=resolver)
+    return _keep_one(df, pairs, id_col)
 
 
 def duplicate_spans(

@@ -1,9 +1,9 @@
 """Link-graph analytics for crawl prioritization: fixed-iteration PageRank
-and large-star/small-star connected components as pure DataFrame loops —
-the host-importance signal web corpora publish alongside their crawls
-(Common Crawl's host-level web graphs carry exactly this statistic) and the
-crawl-frontier ordering a 10^12-page pipeline feeds back into fetch
-scheduling.
+as a pure DataFrame loop — the host-importance signal web corpora publish
+alongside their crawls (Common Crawl's host-level web graphs carry exactly
+this statistic) and the crawl-frontier ordering a 10^12-page pipeline feeds
+back into fetch scheduling. Connected components live in one place,
+``dedup.resolve_clusters``.
 
 Numeric discipline (CLAUDE.md, the repo-wide cross-engine rules): float
 order-dependence is removed by rounding every per-edge contribution to
@@ -124,160 +124,3 @@ def pagerank(
             ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", "rank")
 
-
-def _symmetrize(e: DataFrame) -> DataFrame:
-    """Undirected edge set as both directed rows, self-loops dropped."""
-    return (
-        e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def connected_components(
-    ids: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 50,
-    driver_max_edges: int | None = None,
-) -> DataFrame:
-    """(id, component_id = min id in the component) via alternating
-    large-star / small-star contraction (Kiveris et al., *Connected
-    Components in MapReduce and Beyond*, 2014) — the unbounded-scale tier
-    next to ``dedup.resolve_clusters``'s min-label propagation.
-
-    Why a second CC formulation: min-label + pointer jumping is
-    O(log diameter) ROUNDS but every round re-joins the full label table
-    against the full edge set — the edge set never shrinks. The star
-    operations rewrite the edge set itself toward a forest of depth-1
-    stars rooted at component minima, converging in O(log² n) rounds on
-    ANY topology with the edge count non-increasing (large-star never adds
-    edges, small-star strictly contracts), so each round gets cheaper.
-    That is the formulation that survives adversarial graphs — long
-    chains, lollipops — where near-dup cluster diameters are unbounded
-    (web link graphs, not just dup clusters).
-
-    Per round: each star op is one map-side-combined ``groupBy(src).min``
-    plus a hash join-back (NO window: a partition-only window min sorts and
-    buffers each src group in one task, so a mega-hub would serialize the
-    round — partial aggregation absorbs hubs before the exchange); the
-    convergence probe is ONE aggregate over the current edge set (the
-    contraction's fixed points are exactly the star forests, and
-    star-forest-ness is a per-node degree condition — see
-    ``_is_star_forest``), so the old confirm-contraction + exceptAll
-    set-compare per round is gone. Every
-    intermediate edge set is a pure function of the input edges — no
-    task-dependent state — so the converged labels are deterministic under
-    any partitioning, and equal to ``resolve_clusters``'s by construction
-    (both label every node with its component minimum; tier equality is
-    tested).
-
-    ``ids`` supplies the full id universe (singletons label themselves);
-    ``pairs`` needs columns (id_a, id_b). Ids must be orderable (the
-    component id is the MIN id). Raises after ``max_iter`` rounds without
-    convergence rather than returning a half-contracted labeling.
-    """
-    from .dedup import DRIVER_CC_MAX_EDGES, _union_find_labels
-    from pyspark.sql import types as T
-
-    if driver_max_edges is None:
-        driver_max_edges = DRIVER_CC_MAX_EDGES
-
-    e = _symmetrize(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    # size gate (shared with dedup.resolve_clusters): an edge set small
-    # enough to broadcast is labeled on the driver in one collect — same
-    # component-min labels, none of the per-round contraction jobs. Any
-    # real web graph exceeds the gate and takes the star loop unchanged.
-    if driver_max_edges and e.count() <= driver_max_edges:
-        lab = _union_find_labels((r[0], r[1]) for r in e.collect())
-        id_type = e.schema["src"].dataType
-        schema = T.StructType(
-            [T.StructField("id", id_type), T.StructField("component_id", id_type)]
-        )
-        resolved = e.sparkSession.createDataFrame(sorted(lab.items()), schema)
-        return (
-            ids.select(F.col(id_col).alias("id"))
-            .distinct()
-            .join(F.broadcast(resolved), "id", "left")
-            .select("id", F.coalesce("component_id", F.col("id")).alias("component_id"))
-        )
-
-    def _is_star_forest(edges: DataFrame) -> bool:
-        # The contraction's fixed points are exactly the star forests with
-        # one root per member (root = component min): a member adjacent to
-        # two roots loses the larger one in the next large-star, and a node
-        # with both a smaller and a larger neighbor rewires its larger
-        # neighbor. So "converged" is ONE aggregate over the (symmetrized,
-        # checkpointed) edge set — no confirm contraction, no exceptAll:
-        # bad node ⟺ (has smaller AND larger neighbor) OR (>1 smaller).
-        bad = (
-            edges.groupBy("src")
-            .agg(
-                F.sum((F.col("dst") < F.col("src")).cast("int")).alias("_ns"),
-                F.sum((F.col("dst") > F.col("src")).cast("int")).alias("_nl"),
-            )
-            .filter(((F.col("_ns") > 0) & (F.col("_nl") > 0)) | (F.col("_ns") > 1))
-            .limit(1)
-            .count()
-        )
-        return bad == 0
-
-    converged = False
-    for _ in range(max_iter):
-        if _is_star_forest(e):
-            converged = True
-            break
-        # Per-src minima via groupBy().agg(min) + join-back, NOT a
-        # Window.partitionBy("src") min: a partition-only WindowExec still
-        # sorts and buffers the whole src group in one task, so a
-        # 10^8-out-degree hub (real web graphs have them) would serialize
-        # the round. Partial (map-side) aggregation absorbs the hub before
-        # the exchange and the join-back is a plain hash join that AQE can
-        # broadcast when the min table is small — no per-round full sort.
-        # large-star: node u links every strictly-larger neighbor to
-        # m = min(neighbors ∪ {u}) — emitted as (v, m), v > u ≥ m
-        mins = e.groupBy("src").agg(F.min("dst").alias("_mn"))
-        ls = (
-            e.join(mins, "src")
-            .filter(F.col("dst") > F.col("src"))
-            .select(
-                F.col("dst").alias("src"),
-                F.least(F.col("_mn"), F.col("src")).alias("dst"),
-            )
-        )
-        # small-star: node u links its smaller neighbors AND itself to
-        # m = min of those neighbors (all < u, so m = min(smaller set)).
-        # Its input IS ``ls``: every large-star row is already oriented
-        # dst < src (it emits (v, m) with m = min(..) < v) and has no
-        # self-loops, and the symmetrized mirror rows would all have
-        # dst > src — exactly the rows small-star filters out. Skipping
-        # the intermediate _symmetrize removes one distinct exchange per
-        # round; duplicate (v, m) rows only feed an idempotent min and
-        # are collapsed by the final _symmetrize's distinct.
-        smins = ls.groupBy("src").agg(F.min("dst").alias("_m"))
-        small = ls.join(smins, "src")
-        ss = small.select(F.col("dst").alias("src"), F.col("_m").alias("dst")).unionByName(
-            small.select("src", F.col("_m").alias("dst"))
-        )
-        e = _symmetrize(ss).localCheckpoint(eager=True)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components: no convergence in {max_iter} rounds"
-        )
-    # converged: every edge is (member, root) ∪ (root, member); a node's
-    # minimum neighbor IS its component min (defensive min over the star)
-    labels = (
-        e.filter(F.col("dst") < F.col("src"))
-        .groupBy("src")
-        .agg(F.min("dst").alias("component_id"))
-        .select(F.col("src").alias("id"), "component_id")
-    )
-    return (
-        ids.select(F.col(id_col).alias("id"))
-        .distinct()
-        .join(labels, "id", "left")
-        .select("id", F.coalesce("component_id", F.col("id")).alias("component_id"))
-    )

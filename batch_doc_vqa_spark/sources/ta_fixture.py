@@ -51,7 +51,9 @@ def item_sets(n_docs: int = 12, seed: int = 42) -> tuple[list[tuple], list[tuple
             [rng.choice(_TAGS)] if rng.random() < 0.5 else []
         )
         gt += [(d, t) for t in g]
-        pred += [(d, t) for t in set(p)]
+        # dict.fromkeys: drop duplicates in first-seen order — set() order
+        # depends on PYTHONHASHSEED and would make the oracle text vary
+        pred += [(d, t) for t in dict.fromkeys(p)]
     return gt, pred
 
 

@@ -101,7 +101,7 @@ BENCH_QUERIES = [
     "quantile_sketch",
     "cms_heavy_hitters",
     "weighted_sample_docs",
-    # round 6b: star-contraction CC, inverted-index BM25, shard delivery,
+    # round 6b: host connected components, inverted-index BM25, shard delivery,
     # map-side blocklist
     "host_components",
     "bm25_topk",

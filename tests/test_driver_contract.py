@@ -8,6 +8,10 @@ without an oracle fails this test unless it is consciously allowlisted."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import __spark_entry__ as entrymod
 
 # consciously rows-only: no closed-form SQL exists. Keep this list SHORT and
@@ -26,6 +30,29 @@ def test_queries_and_oracles_cover_each_other():
     assert missing <= NO_ORACLE_ALLOWED, f"queries missing oracles: {sorted(missing - NO_ORACLE_ALLOWED)}"
     assert not (NO_ORACLE_ALLOWED & os_), "allowlisted query grew an oracle — drop it from the list"
     assert len(qs) >= 62
+
+
+def test_oracle_text_independent_of_hash_seed():
+    """The driver fingerprints every oracle string, so oracle_sql() must be a
+    pure function of the source: no set() iteration order may leak into it
+    (the ta item-set fixture once did, via PYTHONHASHSEED)."""
+    probe = (
+        "import hashlib, json, __spark_entry__ as e; "
+        "print(hashlib.sha256(json.dumps(e.oracle_sql(), sort_keys=True).encode()).hexdigest())"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    digests = {
+        subprocess.run(
+            [sys.executable, "-c", probe],
+            cwd=repo,
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+        for seed in ("1", "2")
+    }
+    assert len(digests) == 1, digests
 
 
 def test_entry_returns_flagship_frame(spark):

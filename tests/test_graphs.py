@@ -1,11 +1,16 @@
 """PageRank (round 6): pure-Python mirror hand-math (same round-12 decimal
 fold), dangling redistribution, mass conservation, partition independence,
-multi-edge collapse, validation, JVM-only plan."""
+multi-edge collapse, validation, JVM-only plan. Connected components
+(``dedup.resolve_clusters``): union-find mirror, high-diameter chain, hub,
+driver-gate vs distributed loop for long and string ids, max_iter."""
 
 from __future__ import annotations
 
 from decimal import ROUND_HALF_UP, Decimal
 
+import pytest
+
+from batch_doc_vqa_spark.operators.dedup import resolve_clusters
 from batch_doc_vqa_spark.operators.graphs import pagerank
 
 # a -> b, a -> c, b -> c, d dangling (in-link only), c -> a
@@ -67,8 +72,6 @@ def test_pagerank_partition_independence_and_multiedge(spark):
 
 
 def test_pagerank_validation_and_plan(spark):
-    import pytest
-
     df = spark.createDataFrame(EDGES, "src string, dst string")
     with pytest.raises(ValueError, match="damping"):
         pagerank(df, damping=1.5)
@@ -86,7 +89,7 @@ def test_pagerank_validation_and_plan(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected_components (large-star/small-star)
+# connected components (dedup.resolve_clusters: min-label + pointer jumping)
 
 
 def _cc_py(edges, ids):
@@ -109,24 +112,24 @@ def _cc_py(edges, ids):
     return {i: find(i) for i in parent}
 
 
-def test_cc_chain_high_diameter_and_singleton(spark):
-    from batch_doc_vqa_spark.operators.graphs import connected_components
+def _labels(df):
+    return {r["id"]: r["cluster_id"] for r in df.collect()}
 
+
+def test_cc_chain_high_diameter_and_singleton(spark):
     # a 12-node chain is the adversarial case for plain neighbor
-    # propagation (diameter 11); star contraction must still converge
+    # propagation (diameter 11); the distributed loop must still converge
     chain = [(i, i + 1) for i in range(1, 12)]
     ids = spark.range(1, 13).selectExpr("id AS doc_id").union(
         spark.createDataFrame([(99,)], "doc_id long")
     )
     pairs = spark.createDataFrame(chain, "id_a long, id_b long")
-    got = {r["id"]: r["component_id"] for r in connected_components(ids, pairs).collect()}
-    assert got == {**{i: 1 for i in range(1, 13)}, 99: 99}
+    expected = {**{i: 1 for i in range(1, 13)}, 99: 99}
+    assert _labels(resolve_clusters(ids, pairs)) == expected
+    assert _labels(resolve_clusters(ids, pairs, driver_max_edges=0)) == expected
 
 
-def test_cc_matches_union_find_and_resolver(spark):
-    from batch_doc_vqa_spark.operators.dedup import resolve_clusters
-    from batch_doc_vqa_spark.operators.graphs import connected_components
-
+def test_cc_matches_union_find(spark):
     # deterministic pseudo-random graph: several components, dup edges,
     # self loops, both orientations
     edges = [(i, (i * 7 + 3) % 40) for i in range(40)]
@@ -135,64 +138,57 @@ def test_cc_matches_union_find_and_resolver(spark):
     ids_list = list(range(50))  # 40..49 singletons unless an edge reaches them
     ids = spark.createDataFrame([(i,) for i in ids_list], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    cc = {r["id"]: r["component_id"] for r in connected_components(ids, pairs).collect()}
-    assert cc == {
+    assert _labels(resolve_clusters(ids, pairs, driver_max_edges=0)) == {
         **_cc_py(edges, ids_list),
         **{i: i for i in ids_list if i not in {x for e in edges for x in e}},
     }
-    # tier equality: both CC formulations label with the component minimum
-    rc = {r["id"]: r["cluster_id"] for r in resolve_clusters(ids, pairs).collect()}
-    assert cc == rc
 
 
 def test_cc_partition_independence_and_max_iter(spark):
-    import pytest as _pytest
-
-    from batch_doc_vqa_spark.operators.graphs import connected_components
-
     edges = [(i, i + 1) for i in range(1, 30)]
     ids = spark.range(1, 31).selectExpr("id AS doc_id")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    base = sorted(
-        connected_components(ids, pairs).collect(),
-        key=lambda r: r["id"],
-    )
+    base = sorted(resolve_clusters(ids, pairs, driver_max_edges=0).collect())
     repart = sorted(
-        connected_components(ids.repartition(7), pairs.repartition(5)).collect(),
-        key=lambda r: r["id"],
+        resolve_clusters(
+            ids.repartition(7), pairs.repartition(5), driver_max_edges=0
+        ).collect()
     )
     assert base == repart
-    # max_iter applies to the distributed loop: force past the driver gate
-    with _pytest.raises(RuntimeError, match="no convergence"):
-        connected_components(ids, pairs, max_iter=1, driver_max_edges=0).collect()
+    # max_iter bounds the distributed loop: one round cannot settle a
+    # diameter-29 chain, and a half-propagated labeling must not escape
+    with pytest.raises(RuntimeError, match="no convergence"):
+        resolve_clusters(ids, pairs, max_iter=1, driver_max_edges=0)
 
 
 def test_cc_driver_gate_matches_distributed_tier(spark):
-    """The size-gated driver union-find and the star-contraction loop must
-    label identically (component min); ditto for resolve_clusters' gate vs
-    its min-label-propagation loop — including string ids, which take the
-    join-based convergence probe."""
-    from batch_doc_vqa_spark.operators.dedup import resolve_clusters
-    from batch_doc_vqa_spark.operators.graphs import connected_components
-
+    """The size-gated driver union-find and the min-label-propagation loop
+    must label identically (component min) — including string ids, which
+    take the join-based convergence probe."""
     edges = [(i, (i * 11 + 5) % 60) for i in range(60)] + [(3, 3), (7, 12)]
     ids = spark.createDataFrame([(i,) for i in range(70)], "doc_id long")
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-    drv = sorted(connected_components(ids, pairs).collect())
-    dist = sorted(connected_components(ids, pairs, driver_max_edges=0).collect())
+    drv = sorted(resolve_clusters(ids, pairs).collect())
+    dist = sorted(resolve_clusters(ids, pairs, driver_max_edges=0).collect())
     assert drv == dist
-    drv_rc = sorted(resolve_clusters(ids, pairs).collect())
-    dist_rc = sorted(resolve_clusters(ids, pairs, driver_max_edges=0).collect())
-    assert drv_rc == dist_rc
-    assert [tuple(r) for r in drv] == [tuple(r) for r in drv_rc]
-    # string ids: lexicographic minima, same labels from every tier
+    # string ids: lexicographic minima from both paths
     s_ids = spark.createDataFrame([(f"h{i:02d}",) for i in range(20)], "doc_id string")
-    s_pairs = spark.createDataFrame(
-        [(f"h{i:02d}", f"h{(i * 3 + 1) % 15:02d}") for i in range(15)],
-        "id_a string, id_b string",
-    )
-    s_drv = sorted(connected_components(s_ids, s_pairs).collect())
-    s_dist = sorted(connected_components(s_ids, s_pairs, driver_max_edges=0).collect())
-    s_rc = sorted(resolve_clusters(s_ids, s_pairs, driver_max_edges=0).collect())
+    s_edges = [(f"h{i:02d}", f"h{(i * 3 + 1) % 15:02d}") for i in range(15)]
+    s_pairs = spark.createDataFrame(s_edges, "id_a string, id_b string")
+    s_drv = sorted(resolve_clusters(s_ids, s_pairs).collect())
+    s_dist = sorted(resolve_clusters(s_ids, s_pairs, driver_max_edges=0).collect())
     assert s_drv == s_dist
-    assert [tuple(r) for r in s_drv] == [tuple(r) for r in s_rc]
+    s_list = [f"h{i:02d}" for i in range(20)]
+    assert {r["id"]: r["cluster_id"] for r in s_dist} == _cc_py(s_edges, s_list)
+
+
+def test_cc_hub_star(spark):
+    """One high-degree hub: every leaf reaches the hub's component minimum
+    in the distributed loop, whichever side of the hub the leaves sit on."""
+    hub = 25
+    leaves = [i for i in range(51) if i != hub]
+    ids = spark.createDataFrame([(i,) for i in range(51)], "doc_id long")
+    pairs = spark.createDataFrame([(hub, v) for v in leaves], "id_a long, id_b long")
+    assert _labels(resolve_clusters(ids, pairs, driver_max_edges=0)) == {
+        i: 0 for i in range(51)
+    }
