@@ -100,10 +100,11 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     aggregation) serializes onto one core regardless of cluster size. For
     the compute-heavy constructors a deterministic hash repartition on the
     primary key spreads that map work across the session's cores; the gate
-    compares the PLANNED split count (file size / maxPartitionBytes — no
-    Spark job) against session parallelism, so adequately split inputs
-    (any real multi-file table at scale) pay no extra exchange. Predicate
-    pushdown still reaches the scan through RepartitionByExpression.
+    compares the PLANNED split count (per-file bytes / maxPartitionBytes —
+    no Spark job) against session parallelism, so adequately split inputs
+    (any real multi-file table at scale, any remote store) pay no extra
+    exchange. Predicate pushdown still reaches the scan through
+    RepartitionByExpression.
 
     Opt-in, not blanket: queries whose first operation is already a
     shuffle (plain aggregations, window prefix sums, joins) measured
@@ -116,21 +117,26 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = _SCAN_KEYS.get(name)
     if key is not None:
         target = spark.sparkContext.defaultParallelism
-        if _planned_scan_splits(spark, f"{sf_dir}/{name}.parquet") * 2 < target:
+        splits = _planned_scan_splits(spark, f"{sf_dir}/{name}.parquet")
+        if splits is not None and splits * 2 < target:
             df = df.repartition(target, F.col(key))
     return df
 
 
-_SCAN_SPLIT_CACHE: dict[tuple[str, int], int] = {}
+_SCAN_SPLIT_CACHE: dict[tuple[str, int], int | None] = {}
 
 
-def _planned_scan_splits(spark: SparkSession, path: str) -> int:
-    """Spark's planned split count for a single parquet file: bytes over
-    maxPartitionBytes — computed from the file size directly (a
-    df.rdd.getNumPartitions() probe costs a full plan→RDD conversion,
-    ~0.3 s per table read). Cached per (path, maxPartitionBytes)."""
+def _planned_scan_splits(spark: SparkSession, path: str) -> int | None:
+    """Spark's planned split count for a local parquet path: each data file
+    splits into ceil(bytes / maxPartitionBytes) — computed from file sizes
+    directly (a df.rdd.getNumPartitions() probe costs a full plan→RDD
+    conversion, ~0.3 s per table read). A directory counts each of its
+    non-hidden part files. None ("adequately split") for a remote store or
+    an unreadable path: the gate then adds no exchange rather than a full
+    repartition at scale. Cached per (path, maxPartitionBytes)."""
     import math
     import os
+    from urllib.parse import urlparse
 
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()
     units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -139,14 +145,21 @@ def _planned_scan_splits(spark: SparkSession, path: str) -> int:
         int(s[:-1]) * units[s[-1]] if s and s[-1] in units else int(s or "134217728")
     )
     ck = (path, mpb)
-    n = _SCAN_SPLIT_CACHE.get(ck)
-    if n is None:
+    if ck in _SCAN_SPLIT_CACHE:
+        return _SCAN_SPLIT_CACHE[ck]
+    url = urlparse(path)
+    n = None
+    if url.scheme in ("", "file"):
+        local = url.path if url.scheme else path
         try:
-            size = os.path.getsize(path)
+            sizes = [] if os.path.isdir(local) else [os.path.getsize(local)]
+            for d, subdirs, files in os.walk(local):
+                subdirs[:] = [x for x in subdirs if not x.startswith(("_", "."))]
+                sizes += [os.path.getsize(os.path.join(d, f)) for f in files if not f.startswith(("_", "."))]
+            n = max(1, sum(math.ceil(b / mpb) for b in sizes))
         except OSError:
-            size = 0
-        n = max(1, math.ceil(size / mpb))
-        _SCAN_SPLIT_CACHE[ck] = n
+            pass
+    _SCAN_SPLIT_CACHE[ck] = n
     return n
 
 
@@ -333,12 +346,9 @@ def _q_supplier_customer_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = _t(spark, sf_dir, "supplier")
     # the customer parquet is one row group → one scan task, and the
     # levenshtein fan-out (|sup|×|cust| per nation) runs entirely in that
-    # task; hash-repartition the probe side to the session's parallelism
-    # (derived, not a constant) so the edit-distance stage spreads across
-    # cores. Deterministic key-hash partitioning, value-neutral.
-    cust = _t(spark, sf_dir, "customer").repartition(
-        spark.sparkContext.defaultParallelism, F.col("c_custkey")
-    )
+    # task; _tp spreads the probe side across cores when the scan is
+    # under-split. Deterministic key-hash partitioning, value-neutral.
+    cust = _tp(spark, sf_dir, "customer")
     j = sup.join(cust, sup.s_nationkey == cust.c_nationkey).withColumn(
         "d", F.levenshtein(F.lower("s_name"), F.lower("c_name"))
     )

@@ -106,6 +106,12 @@ def run_extraction(
     (core/run_manager.py:368-407); an Iceberg table with identity
     partitioning on run_id is the drop-in upgrade.
 
+    ``num_buckets`` is the lineage and salting key — one lineage row per
+    bucket, and part of the config fingerprint. The extraction stage runs
+    ``min(num_buckets, spark.sql.shuffle.partitions)`` tasks
+    (``with_salted_partition``), so the task count follows the session's
+    parallelism and the lineage does not.
+
     ``strict`` selects the validate→fail vs validate→coerce behavior of the
     reference's schema ladder (openrouter/inference.py:1920-2070, SURVEY §2.7
     X6): strict ⇒ rows whose extraction came back empty are *failures*
@@ -167,8 +173,10 @@ def run_extraction(
     extracted.write.mode("append").partitionBy("run_id").parquet(results_path)
 
     # lineage from what was actually committed (read-back, not recompute) —
-    # the run_id partition filter prunes the scan to THIS run's directory
-    written = spark.read.parquet(results_path).filter(F.col("run_id") == run_id)
+    # the run_id partition filter prunes the scan to THIS run's directory.
+    # Both read-backs below are pruned to what this call just wrote, so
+    # they take its schema instead of firing a parquet schema-inference job.
+    written = spark.read.schema(extracted.schema).parquet(results_path).filter(F.col("run_id") == run_id)
     lineage = written.groupBy(BUCKET_COL).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_input_bytes").alias("n_bytes"),
@@ -188,7 +196,8 @@ def run_extraction(
     lineage.write.mode("append").partitionBy("run_id").parquet(lineage_path)
 
     summary_rows = (
-        spark.read.parquet(lineage_path)
+        spark.read.schema(lineage.schema)
+        .parquet(lineage_path)
         .filter(F.col("run_id") == run_id)
         .agg(
             F.count(F.lit(1)).alias("n_partitions"),

@@ -11,6 +11,10 @@ large share of rows (the synthetic generator reproduces this — host 0 holds
    are salted: a stats pass counts rows per host, hosts exceeding
    ``target_rows_per_task`` get ``ceil(rows/target)`` salt slots and the key
    becomes ``hash(host, salt)`` — so no single task inherits a whole hot host.
+   The bucket is the *logical* key (lineage granularity, salting, config
+   fingerprint); the *physical* task count is
+   ``min(num_buckets, spark.sql.shuffle.partitions)``, so a small resume on a
+   4-core session runs 4 Python tasks, not one (mostly empty) task per bucket.
 
 2. ``salted_host_stats`` — the classic two-phase (salted partial → final)
    aggregation for skewed-key aggregates, used for per-host rollups so the
@@ -42,35 +46,43 @@ def with_salted_partition(
     url_col: str = "url",
     target_rows_per_task: int | None = None,
 ) -> DataFrame:
-    """Add ``bucket`` and repartition on it.
+    """Add ``bucket`` and hash-repartition on it.
+
+    ``num_buckets`` is the lineage and salting key: ``bucket`` takes
+    ``num_buckets`` values whatever the cluster. The task count is
+    ``min(num_buckets, spark.sql.shuffle.partitions)`` — the session's
+    post-shuffle parallelism — so several buckets share a task when there
+    are more buckets than cores, and a bucket never spans two tasks.
 
     With ``target_rows_per_task`` set, heavy hosts are detected via a counting
     pass and spread over ``ceil(rows/target)`` salt slots (broadcast-joined
     back — the host→salt map is tiny). Without it, pure url-hash bucketing
     (already uniform) is used.
     """
+    n_tasks = min(num_buckets, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
     if target_rows_per_task is None:
         out = with_url_bucket(df, num_buckets, url_col)
-        return out.repartition(num_buckets, F.col(BUCKET_COL))
-
-    host = host_of(F.col(url_col))
-    stats = (
-        df.groupBy(host.alias("_host"))
-        .agg(F.count(F.lit(1)).alias("_host_rows"))
-        .withColumn("_n_salts", F.greatest(F.lit(1), F.ceil(F.col("_host_rows") / target_rows_per_task)).cast("int"))
-        .select("_host", "_n_salts")
-    )
-    out = (
-        df.withColumn("_host", host)
-        .join(F.broadcast(stats), "_host", "left")
-        .withColumn("_salt", F.pmod(F.xxhash64(F.col(url_col)), F.coalesce(F.col("_n_salts"), F.lit(1))))
-        .withColumn(
-            BUCKET_COL,
-            F.pmod(F.xxhash64(F.col("_host"), F.col("_salt")), F.lit(num_buckets)).cast("int"),
+    else:
+        host = host_of(F.col(url_col))
+        stats = (
+            df.groupBy(host.alias("_host"))
+            .agg(F.count(F.lit(1)).alias("_host_rows"))
+            .withColumn(
+                "_n_salts", F.greatest(F.lit(1), F.ceil(F.col("_host_rows") / target_rows_per_task)).cast("int")
+            )
+            .select("_host", "_n_salts")
         )
-        .drop("_host", "_n_salts", "_salt")
-    )
-    return out.repartition(num_buckets, F.col(BUCKET_COL))
+        out = (
+            df.withColumn("_host", host)
+            .join(F.broadcast(stats), "_host", "left")
+            .withColumn("_salt", F.pmod(F.xxhash64(F.col(url_col)), F.coalesce(F.col("_n_salts"), F.lit(1))))
+            .withColumn(
+                BUCKET_COL,
+                F.pmod(F.xxhash64(F.col("_host"), F.col("_salt")), F.lit(num_buckets)).cast("int"),
+            )
+            .drop("_host", "_n_salts", "_salt")
+        )
+    return out.repartition(n_tasks, F.col(BUCKET_COL))
 
 
 def salted_host_stats(df: DataFrame, url_col: str = "url", n_salts: int = 16) -> DataFrame:

@@ -118,6 +118,15 @@ class FieldRule:
     if_then_else: tuple = ()  # (if_rule, then_rule[, else_rule])
     items: object = None  # FieldRule applied to EVERY element of a JSON array
 
+    def __post_init__(self) -> None:
+        # rules are hashable cache keys (_violation): sequence fields given
+        # as lists (e.g. from a JSON schema) become tuples
+        for name in ("enum", "required_keys", "any_of", "one_of", "all_of", "if_then_else"):
+            v = getattr(self, name)
+            if v is not None:
+                object.__setattr__(self, name, tuple(v))
+        object.__setattr__(self, "nested", tuple(tuple(pair) for pair in self.nested))
+
 
 # Unresolved-expression memo: a rule's violation Column is a pure function
 # of the (frozen, hashable) FieldRule — building it costs thousands of py4j

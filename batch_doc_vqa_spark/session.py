@@ -14,14 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """Local core count for sessions, benches and probes: ``SPARK_GRAFT_CPUS``
+    when set, else the machine's core count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app_name: str = "batch_doc_vqa_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
+    master = master or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
         # match parallelism: local[N] → N; local[*] → machine cores
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from batch_doc_vqa_spark.functions.udfs import extract_udf  # noqa: E402
-from batch_doc_vqa_spark.session import get_spark  # noqa: E402
+from batch_doc_vqa_spark.session import default_cpus, get_spark  # noqa: E402
 from batch_doc_vqa_spark.sources.pages import pages_df, rows_for_sf  # noqa: E402
 
 BENCH_QUERIES = [
@@ -160,7 +160,7 @@ def run_interleaved(entries: list[tuple[str, callable]], reps: int = REPS):
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     sf = entrymod._sf_of(sf_dir)
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
 

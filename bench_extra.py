@@ -12,7 +12,7 @@ Usage:
     SPARK_GRAFT_BENCH_REPS=3 controls reps (min is reported).
 
 Prints one JSON line per query:
-    {"query": name, "secs": [..], "min": s, "jobs": n, "stages": n}
+    {"query": name, "secs": [..], "jobs_per_rep": [..], "min": s}
 """
 
 from __future__ import annotations
@@ -27,12 +27,12 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
-from batch_doc_vqa_spark.session import get_spark  # noqa: E402
+from batch_doc_vqa_spark.session import default_cpus, get_spark  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     spark = get_spark("bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
     sc = spark.sparkContext
@@ -71,8 +71,8 @@ def main() -> None:
                 {
                     "query": name,
                     "secs": secs,
+                    "jobs_per_rep": jobs_per_rep,
                     "min": min(secs),
-                    "jobs": jobs_per_rep[-1],
                 }
             ),
             flush=True,

@@ -4,6 +4,7 @@ Cluster usage (the BASELINE.json deployment shape):
 
     zip -r batch_doc_vqa_spark.zip batch_doc_vqa_spark/
     spark-submit --py-files batch_doc_vqa_spark.zip \
+        --conf spark.sql.shuffle.partitions=4096 \
         jobs/extract_submit.py \
         --pages  s3://bucket/pages/          # or any parquet/Iceberg path \
         --out    s3://bucket/extracted/ \
@@ -18,6 +19,10 @@ Local smoke (synthesizes the seeded pages table when --pages is omitted):
 
 Rerunning with the same --out resumes: urls already in the results table are
 anti-joined away, per-partition lineage rows accumulate per run_id.
+
+The extraction stage runs min(--num-buckets, spark.sql.shuffle.partitions)
+tasks: the bucket count fixes the lineage and salting key, the session's
+shuffle parallelism fixes the task count (Spark's default is 200).
 """
 
 from __future__ import annotations
@@ -34,7 +39,13 @@ def main() -> None:
     ap.add_argument("--synthesize", type=int, default=0, help="generate N seeded pages instead")
     ap.add_argument("--out", required=True, help="output dir (results/ + lineage/)")
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--num-buckets", type=int, default=32)
+    ap.add_argument(
+        "--num-buckets",
+        type=int,
+        default=32,
+        help="lineage and salting key: one lineage row per bucket; the extraction "
+        "stage runs min(num_buckets, spark.sql.shuffle.partitions) tasks",
+    )
     ap.add_argument("--target-rows-per-task", type=int, default=None)
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args()

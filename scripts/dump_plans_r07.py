@@ -15,7 +15,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod  # noqa: E402
-from batch_doc_vqa_spark.session import get_spark  # noqa: E402
+from batch_doc_vqa_spark.session import default_cpus, get_spark  # noqa: E402
 
 OUT_DIR = "/root/repo/plans/r07"
 
@@ -24,7 +24,7 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     os.makedirs(OUT_DIR, exist_ok=True)
     spark = get_spark("plans_r07", master=f"local[{cpus}]", shuffle_partitions=cpus)
     qs = entrymod.queries()

@@ -116,6 +116,45 @@ def test_salted_partitioning_bounds_hot_host(spark, tmp_path):
     assert res.count() == N
 
 
+def test_task_count_is_min_of_buckets_and_shuffle_partitions(spark):
+    """The bucket count is the logical key; the repartition runs
+    min(num_buckets, spark.sql.shuffle.partitions) tasks (4 in this
+    session), on the plain and on the salted path alike."""
+    from batch_doc_vqa_spark.plans.skew import with_salted_partition
+
+    pages = pages_df(spark, 60, seed=SEED)
+    for target in (None, 10):
+        wide = with_salted_partition(pages, 32, target_rows_per_task=target)
+        narrow = with_salted_partition(pages, 3, target_rows_per_task=target)
+        assert wide.rdd.getNumPartitions() == 4, target
+        assert narrow.rdd.getNumPartitions() == 3, target
+        # bucket ids still span num_buckets, not the task count
+        assert wide.agg(F.max("bucket")).collect()[0][0] > 4, target
+        assert {r["bucket"] for r in narrow.select("bucket").distinct().collect()} <= {0, 1, 2}
+
+
+def test_lineage_granularity_is_buckets_not_tasks(spark, tmp_path):
+    """The same pages under shuffle.partitions=1 and =4 commit the same
+    url → text bytes and the same per-bucket lineage rows."""
+    pages = pages_df(spark, 120, seed=SEED)
+    committed = {}
+    try:
+        for n in ("1", "4"):
+            spark.conf.set("spark.sql.shuffle.partitions", n)
+            out = str(tmp_path / f"sp{n}")
+            run_extraction(spark, pages, out, run_id="r", num_buckets=8)
+            texts = {r["url"]: r["text"].encode("utf-8") for r in read_results(spark, out).collect()}
+            lineage = sorted(
+                tuple(r)
+                for r in read_lineage(spark, out).select("bucket", "n_docs", "n_bytes", "n_failed").collect()
+            )
+            committed[n] = (texts, lineage)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+    assert committed["1"] == committed["4"]
+    assert len(committed["4"][0]) == 120 and len(committed["4"][1]) == 8
+
+
 def test_lineage_carries_config_identity(spark, tmp_path):
     """X10 reproducibility guard: lineage rows identify the exact job config —
     two runs with different extractor settings have different config hashes,

@@ -58,6 +58,8 @@ def test_extraction_path_is_shuffle_lean(plans):
     # headers "(k) Exchange", not raw word occurrences.
     p = plans("extract_main_content")
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p[:1500]
+    # 16 buckets on a 4-partition session: 4 tasks, not one per bucket
+    assert re.search(r"hashpartitioning\(bucket#\d+, 4\)", p), p[:1500]
     assert "ArrowEvalPython" in p  # extraction is Arrow-batched, not row Python
     assert "BatchEvalPython" not in p  # never a row-at-a-time Python UDF
 
@@ -147,3 +149,24 @@ def test_url_dedup_single_shuffle_on_canonical_key(plans):
     p = plans("url_dedup")
     assert "EvalPython" not in p and "MapInPandas" not in p
     assert _n_exchanges(p) == 1, p[:1500]
+
+
+def test_scan_repair_gate_counts_part_files(spark, tmp_path):
+    """_tp's size gate reads a multi-file parquet directory as one split per
+    part file (no repair exchange) and a single file of the same rows as one
+    split (repair exchange); a remote or missing path counts as adequately
+    split."""
+    docs = spark.range(4000).selectExpr("id AS doc_id", "repeat('x', 50) AS text")
+    docs.repartition(8).write.parquet(str(tmp_path / "multi" / "documents.parquet"))
+    docs.coalesce(1).write.parquet(str(tmp_path / "single" / "documents.parquet"))
+
+    def repaired(sf_dir: str) -> bool:
+        df = entrymod._tp(spark, sf_dir, "documents")
+        return "RepartitionByExpression" in df._jdf.queryExecution().analyzed().toString()
+
+    assert spark.sparkContext.defaultParallelism == 4
+    assert entrymod._planned_scan_splits(spark, str(tmp_path / "multi" / "documents.parquet")) == 8
+    assert not repaired(str(tmp_path / "multi"))
+    assert repaired(str(tmp_path / "single"))
+    assert entrymod._planned_scan_splits(spark, "s3a://bucket/sf1/documents.parquet") is None
+    assert entrymod._planned_scan_splits(spark, str(tmp_path / "missing.parquet")) is None

@@ -286,3 +286,35 @@ def test_allof_not_ifthenelse_items(spark):
     # no Python anywhere in the plan — the whole extended ladder is columns
     plan = validate_coerce(df, rules, strict=True)._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInPandas" not in plan
+
+
+def test_list_valued_rule_fields_are_normalized(spark):
+    """Sequence fields given as lists (as a JSON-schema loader produces)
+    become tuples, so the rule stays hashable and validates like its
+    tuple-valued twin instead of raising TypeError in the violation cache."""
+    listed = FieldRule(
+        "doc",
+        enum=["{}", '{"a": 1}', '{"a": "x"}'],
+        required_keys=["a"],
+        nested=[["a", FieldRule("a", dtype="bigint")]],
+        any_of=[FieldRule("doc", max_length=8), FieldRule("doc", pattern=r"^\{.*$")],
+        one_of=[FieldRule("doc", pattern=r"^\{.*$")],
+        all_of=[FieldRule("doc", max_length=12)],
+        if_then_else=[FieldRule("doc", pattern=r"^$"), FieldRule("doc", required=True)],
+    )
+    tupled = FieldRule(
+        "doc",
+        enum=("{}", '{"a": 1}', '{"a": "x"}'),
+        required_keys=("a",),
+        nested=(("a", FieldRule("a", dtype="bigint")),),
+        any_of=(FieldRule("doc", max_length=8), FieldRule("doc", pattern=r"^\{.*$")),
+        one_of=(FieldRule("doc", pattern=r"^\{.*$"),),
+        all_of=(FieldRule("doc", max_length=12),),
+        if_then_else=(FieldRule("doc", pattern=r"^$"), FieldRule("doc", required=True)),
+    )
+    assert listed == tupled and hash(listed) == hash(tupled)
+    df = spark.createDataFrame(
+        [(1, '{"a": 1}'), (2, "{}"), (3, '{"a": "x"}'), (4, "zz")], "id int, doc string"
+    )
+    out = {r["id"]: r["first_violation"] for r in validate_coerce(df, [listed], strict=True).collect()}
+    assert out == {1: None, 2: "doc:required.a", 3: "doc:a.type", 4: "doc:enum"}
