@@ -821,8 +821,9 @@ _URL_BLOCKLIST_ORACLE = """
     b(domain) AS (VALUES ('example.net'), ('s2.example.org'), ('w1.s3.example.org')),
     hosts AS (
         SELECT doc_id, url,
-               regexp_replace(lower(regexp_extract(url,
-                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)), ':[0-9]+$', '') AS host
+               regexp_replace(regexp_replace(lower(regexp_extract(url,
+                   '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)', 1)), '^.*@', ''),
+                   ':[0-9]+$', '') AS host
         FROM u),
     lab AS (SELECT doc_id, url, string_split(host, '.') AS L FROM hosts),
     sfx AS (

@@ -10,10 +10,10 @@ the invariant, pytest-pinned and driver-oracled via kernel-output VALUES.
 
 Algorithm (Sennrich et al. 2016, learn + greedy encode):
 
-- words come from the repo's ONE shared normalization (lowercase, non-alnum
-  → space, whitespace split — the same rule as ``dedup.normalized_tokens``
-  and every oracle's ``_TOKS`` CTE, so token units can never drift from the
-  dedup/decontam shingles);
+- words come from the repo's ONE shared normalization (the maximal
+  ``[a-z0-9]`` runs of the lowercased text — the same rule as
+  ``dedup.normalized_tokens`` and the oracles' ``_NTOKS`` mirror, so token
+  units can never drift from the dedup/decontam shingles);
 - a word is a symbol sequence: its characters plus a terminal ``</w>``;
 - learning: repeatedly merge the most frequent adjacent symbol pair
   (frequency weighted by word count; ties broken by the lexicographically
@@ -34,7 +34,8 @@ END = "</w>"
 
 
 def normalize_words(text: str) -> list[str]:
-    """The shared tokenizer (mirrors ``dedup.normalized_tokens``)."""
+    """The shared tokenizer (mirrors ``dedup.normalized_tokens``): the
+    maximal ``[a-z0-9]`` runs of the lowercased text."""
     if not text:
         return []
     return _NORM_RE.sub(" ", text.lower()).split()

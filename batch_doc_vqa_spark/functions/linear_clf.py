@@ -33,7 +33,8 @@ _NORM_RE = re.compile(r"[^a-z0-9\s]")
 
 
 def tokens_of(text: str) -> list[str]:
-    """The shared normalization (mirrors ``dedup.normalized_tokens``)."""
+    """The shared normalization (mirrors ``dedup.normalized_tokens``): the
+    maximal ``[a-z0-9]`` runs of the lowercased text."""
     if not text:
         return []
     return _NORM_RE.sub(" ", text.lower()).split()

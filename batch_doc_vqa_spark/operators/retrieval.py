@@ -213,9 +213,10 @@ def bm25_topk(
         score(q, d) = Σ_t idf(t) · tf · (k1+1) / (tf + k1·(1 - b + b·dl/avgdl))
 
     over the distinct query terms t. Tokenization is the repo's shared
-    ``normalized_tokens`` (lower + whitespace split), the same unit every
-    text operator counts in. Repeated query terms count once (standard
-    BM25 query form for short queries). Ties rank by ascending doc id.
+    ``normalized_tokens`` (maximal ``[a-z0-9]`` runs of the lowercased
+    text), the same unit every text operator counts in. Repeated query
+    terms count once (standard BM25 query form for short queries). Ties
+    rank by ascending doc id.
     Documents matching no query term do not appear (score 0 rows are not
     emitted); a query with no indexed term returns no rows.
 

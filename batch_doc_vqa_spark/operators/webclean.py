@@ -146,12 +146,13 @@ def strip_boilerplate_lines(
 
 
 def _host_of(url_col):
-    """Lowercased hostname of a URL, port stripped — the matching unit
-    domain blocklists are published in (UT1/Shallalist-style)."""
-    host = F.lower(
+    """Lowercased hostname of a URL, ``user[:pass]@`` userinfo and port
+    stripped — the matching unit domain blocklists are published in
+    (UT1/Shallalist-style)."""
+    authority = F.lower(
         F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1)
     )
-    return F.regexp_replace(host, r":\d+$", "")
+    return F.regexp_replace(F.regexp_replace(authority, r"^.*@", ""), r":\d+$", "")
 
 
 def blocklist_matches(

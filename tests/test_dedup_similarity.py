@@ -3,9 +3,12 @@ approximate-tier recall measured against the exact oracles."""
 
 from __future__ import annotations
 
+import hashlib
+import json
 import random
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from batch_doc_vqa_spark.operators import dedup, similarity
@@ -184,6 +187,107 @@ def test_short_and_empty_docs_yield_empty_shingles(spark):
     assert lsh.count() >= 0
     sims = dedup.minhash_signatures(df, "doc_id", "text")
     assert sims.count() == sum(1 for v in rows.values() if v)  # only docs with shingles
+
+
+def _replace_split_tokens(text_col):
+    """The tokenizer's earlier form, kept as the reference: negated-class
+    replace → trim → whitespace split → drop empty strings."""
+    cleaned = F.regexp_replace(F.lower(text_col), r"[^a-z0-9\s]", " ")
+    return F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != F.lit(""))
+
+
+def _assert_tokenizers_agree(spark, texts):
+    df = spark.createDataFrame(list(enumerate(texts)), "i long, text string")
+    rows = df.select(
+        "i",
+        dedup.normalized_tokens(F.col("text")).alias("got"),
+        _replace_split_tokens(F.col("text")).alias("want"),
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["got"] == r["want"], (texts[r["i"]], r["got"], r["want"])
+
+
+def test_normalized_tokens_match_replace_split_form(spark):
+    texts = [
+        "", None, "!!! ... ---", "?",
+        "\t\n\x0b\f\r lead and trail \t\n\x0b\f\r",
+        "\x0b\f", "a\x0bb\fc",
+        "non\u00a0breaking\u00a0space", "\u00a0edge\u00a0",
+        "café Straße İstanbul ÉCOLE", "é", "ß", "İ",
+        "emoji \U0001F600 between\U0001F600words",
+        "abc123 4x4 0.5 1,000 x86_64 ipv6::1 MiXeD99Case",
+        "  several   spaces  ", "tab\tsep", "line\nbreak\r\nwin",
+    ]
+    _assert_tokenizers_agree(spark, texts)
+    got = spark.createDataFrame([("",), (None,)], "text string").select(
+        dedup.normalized_tokens(F.col("text")).alias("t")
+    ).collect()
+    assert [r["t"] for r in got] == [[], None]
+
+
+@settings(max_examples=10, deadline=None, derandomize=True)
+@given(st.lists(st.text(), min_size=1, max_size=40))
+def test_normalized_tokens_match_replace_split_form_property(spark, texts):
+    _assert_tokenizers_agree(spark, texts)
+
+
+# MinHash signatures and LSH band hashes of two fixed texts, recorded with
+# the Column-built expressions these now replace. ``dedup_index`` persists
+# both, so they must stay bit-identical. Each digest is
+# sha256(json.dumps(...)) of the value lists built in the test.
+_GOLDEN_TEXTS = [
+    (1, "The quick brown fox jumps over the lazy dog, again and again: 42 times!"),
+    (2, "Ünïcode tëxt — with\tTABS, 3.14 digits & punctuation; the quick brown fox."),
+]
+_GOLDEN = {
+    "xxhash64": (
+        "7bd358f575650ce2ff888b65f4a138512b05aa83ef7266a68f1ac5e93c20145f",
+        "28d968b499027ff43f2ac50ce9bbbb17b1175379266286b9247d6ea1aa3b7379",
+        (419002237, 467481590),
+    ),
+    "md5": (
+        "361c0884f15af16ef9c66662caf7bc3c7e585d3a4f10a4e73fb6533a46ff04b2",
+        "06fa74efe6f1b6a4c2f83e3a2ff92f87f1e47a4da490c4b70d7699ee32e19df8",
+        (311465939, 31674260),
+    ),
+}
+
+
+def _sha(values) -> str:
+    return hashlib.sha256(json.dumps(values).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("base_hash", ["xxhash64", "md5"])
+def test_minhash_signatures_and_bands_golden(spark, base_hash):
+    sig_digest, band_digest, (first, last) = _GOLDEN[base_hash]
+    df = spark.createDataFrame(_GOLDEN_TEXTS, "doc_id long, text string")
+    sigs = dedup.minhash_signatures(df, "doc_id", "text", base_hash=base_hash)
+    s = {r["_id"]: list(r["signature"]) for r in sigs.collect()}
+    assert (s[1][0], s[2][63]) == (first, last)
+    assert _sha([s[1], s[2]]) == sig_digest
+    bands = sorted(
+        (r["_id"], r["band_idx"], r["band_hash"])
+        for r in dedup.banded_rows(sigs, base_hash=base_hash).collect()
+    )
+    assert len(bands) == 32
+    assert _sha(bands) == band_digest
+
+
+def test_base_hash_sql_text_matches_column_form(spark):
+    df = spark.createDataFrame(
+        [("",), ("a",), ("the quick brown fox",), ("Ünï ✓ \U0001F600",), (None,)], "s string"
+    )
+    rows = df.select(
+        F.expr(dedup._base_hash_sql("s", "md5")).alias("sql"),
+        dedup.portable_hash64(F.col("s")).alias("col"),
+        F.expr(dedup._base_hash_sql("s", "xxhash64")).alias("xsql"),
+        F.xxhash64(F.col("s")).alias("xcol"),
+    ).collect()
+    assert [(r["sql"], r["xsql"]) for r in rows] == [(r["col"], r["xcol"]) for r in rows]
+    assert rows[2]["sql"] == int(hashlib.md5(b"the quick brown fox").hexdigest()[:15], 16)
+    with pytest.raises(ValueError, match="unknown base_hash"):
+        dedup._base_hash_sql("s", "crc32")
 
 
 def test_resolve_clusters_transitive_chain(spark):

@@ -10,7 +10,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 
-from batch_doc_vqa_spark.operators.dedup import resolve_clusters
+from batch_doc_vqa_spark.operators.dedup import _union_find_labels, resolve_clusters
 from batch_doc_vqa_spark.operators.graphs import pagerank
 
 # a -> b, a -> c, b -> c, d dangling (in-link only), c -> a
@@ -192,3 +192,31 @@ def test_cc_hub_star(spark):
     assert _labels(resolve_clusters(ids, pairs, driver_max_edges=0)) == {
         i: 0 for i in range(51)
     }
+
+
+@pytest.mark.parametrize("kind", ["long", "string"])
+def test_cc_gate_edges(spark, kind):
+    """The size gate counts candidate pair rows as given — duplicated and
+    reversed pairs included — and both sides of it label like the driver
+    union-find. A chain never settles in one distributed round, so
+    ``max_iter=1`` shows which path ran: only the loop raises."""
+    key = (lambda i: i) if kind == "long" else (lambda i: f"n{i:02d}")
+    ids_list = [key(i) for i in range(12)]
+    ids = spark.createDataFrame([(i,) for i in ids_list], f"doc_id {kind}")
+    schema = f"id_a {kind}, id_b {kind}"
+
+    def resolve(edges, **kw):
+        return _labels(resolve_clusters(ids, spark.createDataFrame(edges, schema), **kw))
+
+    def expected(edges):
+        return {**{i: i for i in ids_list}, **_union_find_labels(edges)}
+
+    # empty pairs, driver path: every id is its own cluster
+    assert resolve([]) == expected([]) == {i: i for i in ids_list}
+    chain = [(key(i), key(i + 1)) for i in range(1, 6)]
+    edges = chain + [chain[0], chain[2][::-1], (key(9), key(8)), (key(8), key(9))]
+    n = len(edges)
+    assert resolve(edges, driver_max_edges=n, max_iter=1) == expected(edges)
+    with pytest.raises(RuntimeError, match="no convergence"):
+        resolve(edges, driver_max_edges=n - 1, max_iter=1)
+    assert resolve(edges, driver_max_edges=n - 1) == expected(edges)
