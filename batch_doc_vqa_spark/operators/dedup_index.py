@@ -20,11 +20,14 @@ meets this month's snapshot bit-for-bit.
 
 Durability: both tables are SNAPSHOT-committed (``sigs/snap=<id>``,
 ``bands/snap=<id>``, visible only once ``_committed/<id>`` exists — the
-same marker protocol as plans/publish.py). A crash between the sigs and
+same ``commit_marker`` as plans/publish.py). A crash between the sigs and
 bands writes therefore cannot strand a document with a signature but no
 band rows (which would silently exclude it from every future candidate
 join): the torn snapshot is invisible, and the retry — which anti-joins
-against COMMITTED ids only — re-writes both halves.
+against COMMITTED ids only — re-writes both halves. ``build_dedup_index``
+is create-only through the same ``clear_for_create`` guard the persisted
+BM25 and IVF×PQ indexes use: it refuses a path holding any committed
+marker and clears only a torn attempt.
 
 Concurrency: compaction holds a ``_compact_lease`` (atomic create-if-
 absent); incremental commits refuse under the lease, and a racer that
@@ -43,6 +46,18 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.publish import (
+    ConcurrentCommitError,
+    MaintenanceInProgressError,
+    _fs,
+    acquire_maintenance_lease,
+    clear_for_create,
+    commit_marker,
+    committed_publish_ids,
+    read_maintenance_lease,
+    recover_marker_store,
+    swap_marker_dir,
+)
 from .dedup import banded_rows, minhash_signatures
 
 INDEX_PARAMS = dict(n=3, num_hashes=64, bands=16, seed=7, base_hash="xxhash64")
@@ -51,16 +66,7 @@ _SIG_COLS = ["_id", "signature"]
 _BAND_COLS = ["_id", "band_idx", "band_hash"]
 
 
-def _fs(spark: SparkSession, path: str):
-    # the marker machinery is the publish protocol's — one definition
-    from ..plans.publish import _fs as publish_fs
-
-    return publish_fs(spark, path)
-
-
 def committed_snapshots(spark: SparkSession, path: str) -> list[str]:
-    from ..plans.publish import committed_publish_ids
-
     return committed_publish_ids(spark, path)
 
 
@@ -99,10 +105,9 @@ def _write_snapshot(
     writes AND again right before the marker create — the remaining
     probe-to-commit race is caught by compaction's post-swap verification,
     which rolls the compaction back rather than lose this snapshot."""
-    from ..plans.publish import commit_marker
 
     def _refuse_under_lease():
-        if _read_lease(spark, path) is not None:
+        if read_maintenance_lease(spark, path) is not None:
             raise CompactionInProgressError(
                 f"incremental index commit blocked: compaction in progress at "
                 f"{path} (lease held) — retry after it finishes, or run "
@@ -128,16 +133,16 @@ def build_dedup_index(
 ) -> None:
     """Signature + band tables for a corpus, committed as one snapshot.
 
-    Always a fresh build (the path is cleared first): growing an existing
-    index goes through ``incremental_dedup_pairs``, refreshing it through
+    Create-only (``plans.publish.clear_for_create``): a path holding any
+    committed marker raises FileExistsError, a torn previous attempt is
+    cleared. Growing an existing index goes through
+    ``incremental_dedup_pairs``, refreshing it through
     ``compact_dedup_index`` — an in-place overwrite of an already-committed
     snapshot would reopen the torn-write window the marker protocol closes.
     """
     p = {**INDEX_PARAMS, **params}
     spark = df.sparkSession
-    fs, jpath = _fs(spark, path)
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
+    clear_for_create(spark, path)
     sigs = minhash_signatures(
         df, id_col, text_col, p["n"], p["num_hashes"], p["seed"], p["base_hash"]
     ).localCheckpoint(eager=True)
@@ -160,8 +165,6 @@ class CompactionInProgressError(RuntimeError):
 
 
 def _acquire_lease(spark: SparkSession, path: str, payload: dict) -> None:
-    from ..plans.publish import MaintenanceInProgressError, acquire_maintenance_lease
-
     try:
         acquire_maintenance_lease(spark, path, payload)
     except MaintenanceInProgressError as exc:
@@ -170,18 +173,6 @@ def _acquire_lease(spark: SparkSession, path: str, payload: dict) -> None:
             "compaction is running, or a crashed one left state behind "
             "(run recover_dedup_index first)"
         ) from exc
-
-
-def _read_lease(spark: SparkSession, path: str) -> dict | None:
-    from ..plans.publish import read_maintenance_lease
-
-    return read_maintenance_lease(spark, path)
-
-
-def _release_lease(spark: SparkSession, path: str) -> None:
-    from ..plans.publish import release_maintenance_lease
-
-    release_maintenance_lease(spark, path)
 
 
 def compact_dedup_index(
@@ -252,8 +243,6 @@ def compact_dedup_index(
     if _test_hook_before_swap is not None:
         _test_hook_before_swap()
 
-    from ..plans.publish import ConcurrentCommitError, swap_marker_dir
-
     try:
         # swap + post-swap racer verification + rollback: the shared
         # maintenance-swap implementation (plans/publish.swap_marker_dir) —
@@ -284,8 +273,6 @@ def recover_dedup_index(spark: SparkSession, path: str) -> str:
 
     Shared implementation: ``plans/publish.recover_marker_store``.
     """
-    from ..plans.publish import recover_marker_store
-
     return recover_marker_store(spark, path)
 
 
@@ -304,7 +291,7 @@ def vacuum_dedup_index(
     marker has not landed yet (deleting it would commit a marker with no
     data). Drop to 0 only when no writer can be active.
     """
-    if _read_lease(spark, path) is not None:
+    if read_maintenance_lease(spark, path) is not None:
         raise CompactionInProgressError(
             f"vacuum refused: compaction lease held at {path} "
             "(finish or recover_dedup_index first)"

@@ -244,10 +244,10 @@ def save_bm25_index(index: dict, path: str) -> None:
     """Persist the BM25 index (postings, vocabulary df table, corpus
     stats) behind the repo's marker-commit protocol: tables land first,
     one ``_committed/index`` marker makes them visible — a torn save is
-    invisible to ``load_bm25_index``. CREATE-ONLY, same stance as
-    ``save_ivfpq_index``: refresh by saving to a new versioned path and
-    flipping the pointer, never by deleting the only good copy under
-    concurrent readers. The index must come from ``bm25_build(vocab=None)``
+    invisible to ``load_bm25_index``. CREATE-ONLY
+    (``plans.publish.clear_for_create``, shared with ``save_ivfpq_index``):
+    refresh by saving to a new versioned path and flipping the pointer,
+    never by deleting the only good copy under concurrent readers. The index must come from ``bm25_build(vocab=None)``
     — a query-restricted df table would silently miss terms for later
     query batches, so a restricted build is refused here.
 
@@ -255,59 +255,27 @@ def save_bm25_index(index: dict, path: str) -> None:
     ``plans.bucketed.write_bucketed`` keyed on ``_term`` so per-batch
     score joins are exchange-free; the plain parquet layout here keeps the
     local path dependency-free."""
-    import json as _json
-
-    from ..plans.publish import _fs, commit_marker, committed_publish_ids
+    from ..plans.publish import save_index
 
     if index.get("restricted"):
         raise ValueError(
             "save_bm25_index: refuse to persist a query-restricted index "
             "(its df table misses every other term) — build with vocab=None"
         )
-    spark = index["postings"].sparkSession
-    committed = committed_publish_ids(spark, path)
-    if committed:
-        # ANY committed id blocks the create (not just 'index'): the path
-        # may hold a marker-committed store from another writer, and the
-        # torn-attempt cleanup below must never recursively delete
-        # committed data (never-delete-committed-data stance)
-        raise FileExistsError(
-            f"committed data already exists at {path} (markers: "
-            f"{sorted(committed)}) — save to a new path (destructive-first "
-            "overwrite would destroy the only good copy mid-rebuild and "
-            "break concurrent readers)"
-        )
-    fs, jpath = _fs(spark, path)
-    if fs.exists(jpath):  # torn previous attempt (no marker) — safe to clear
-        fs.delete(jpath, True)
-    index["postings"].write.parquet(f"{path}/postings")
-    index["terms"].write.parquet(f"{path}/terms")
-    index["stats"].write.parquet(f"{path}/stats")
-    meta = {"id_col": index["id_col"]}
-    out = fs.create(_fs(spark, f"{path}/meta.json")[1], True)
-    out.write(bytearray(_json.dumps(meta).encode()))
-    out.close()
-    commit_marker(spark, path, "index")
+    save_index(
+        index["postings"].sparkSession,
+        path,
+        {t: index[t].write for t in ("postings", "terms", "stats")},
+        {"id_col": index["id_col"]},
+    )
 
 
 def load_bm25_index(spark: SparkSession, path: str) -> dict:
     """Load a persisted BM25 index for ``bm25_query``. Raises loudly when
     the marker is missing (torn save is invisible by design)."""
-    import json as _json
+    from ..plans.publish import load_index_meta
 
-    from ..plans.publish import _fs, committed_publish_ids
-
-    if "index" not in committed_publish_ids(spark, path):
-        raise FileNotFoundError(
-            f"no committed BM25 index under {path} (save_bm25_index first; "
-            "a torn save is invisible by design)"
-        )
-    fs, jpath = _fs(spark, f"{path}/meta.json")
-    stream = fs.open(jpath)
-    try:
-        meta = _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    _, meta = load_index_meta(spark, path, "BM25 index")
     return {
         "postings": spark.read.parquet(f"{path}/postings"),
         "terms": spark.read.parquet(f"{path}/terms"),

@@ -579,33 +579,24 @@ def save_ivfpq_index(index: dict, path: str) -> None:
     the directory level (and a bucketed write would make it
     exchange-free).
 
-    CREATE-ONLY: refuses a path holding a committed index. Deleting the
-    old index before a long rebuild would destroy the only good copy and
-    fail every concurrent reader mid-scan; refresh by saving to a NEW
-    versioned path and flipping the pointer your jobs read (or delete the
-    old path explicitly once its readers drain)."""
-    from ..plans.publish import _fs, commit_marker, committed_publish_ids
+    CREATE-ONLY (``plans.publish.clear_for_create``): refuses a path
+    holding ANY committed marker. Deleting the old index before a long
+    rebuild would destroy the only good copy and fail every concurrent
+    reader mid-scan; refresh by saving to a NEW versioned path and flipping
+    the pointer your jobs read (or delete the old path explicitly once its
+    readers drain)."""
+    from ..plans.publish import save_index
 
-    spark = index["codes"].sparkSession
-    if "index" in committed_publish_ids(spark, path):
-        raise FileExistsError(
-            f"a committed IVF×PQ index already exists at {path} — save to a "
-            "new path (destructive-first overwrite would destroy the only "
-            "good copy mid-rebuild and break concurrent readers)"
-        )
-    fs, jpath = _fs(spark, path)
-    if fs.exists(jpath):  # torn previous attempt (no marker) — safe to clear
-        fs.delete(jpath, True)
-    index["cent"].write.parquet(f"{path}/cent")
-    index["cbm"].write.parquet(f"{path}/cbm")
-    index["codes"].write.partitionBy("cent_id").parquet(f"{path}/codes")
-    import json as _json
-
-    meta = {k: index[k] for k in ("m", "n_codes", "sub", "id_col")}
-    out = fs.create(_fs(spark, f"{path}/meta.json")[1], True)
-    out.write(bytearray(_json.dumps(meta).encode()))
-    out.close()
-    commit_marker(spark, path, "index")
+    save_index(
+        index["codes"].sparkSession,
+        path,
+        {
+            "cent": index["cent"].write,
+            "cbm": index["cbm"].write,
+            "codes": index["codes"].write.partitionBy("cent_id"),
+        },
+        {k: index[k] for k in ("m", "n_codes", "sub", "id_col")},
+    )
 
 
 def append_ivfpq_index(
@@ -635,7 +626,7 @@ def append_ivfpq_index(
     from already-indexed ids (same as the dedup index's re-crawl rule)."""
     import uuid as _uuid
 
-    from ..plans.publish import _fs, commit_marker
+    from ..plans.publish import commit_marker
 
     index = load_ivfpq_index(spark, path)
     snap = snapshot_id or "s" + _uuid.uuid4().hex[:12]
@@ -659,22 +650,9 @@ def load_ivfpq_index(spark: SparkSession, path: str, corpus: DataFrame | None = 
     must cover appended snapshots too when given). The codes table is the
     base build UNION every committed ``append_ivfpq_index`` snapshot —
     uncommitted (torn) appends are invisible."""
-    import json as _json
+    from ..plans.publish import load_index_meta
 
-    from ..plans.publish import _fs, committed_publish_ids
-
-    markers = committed_publish_ids(spark, path)
-    if "index" not in markers:
-        raise FileNotFoundError(
-            f"no committed IVF×PQ index under {path} (save_ivfpq_index first; "
-            "a torn save is invisible by design)"
-        )
-    fs, jpath = _fs(spark, f"{path}/meta.json")
-    stream = fs.open(jpath)
-    try:
-        meta = _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    markers, meta = load_index_meta(spark, path, "IVF×PQ index")
     codes = spark.read.parquet(f"{path}/codes")
     for mname in sorted(m for m in markers if m.startswith("snap-")):
         codes = codes.unionByName(

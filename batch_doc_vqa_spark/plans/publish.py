@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 
 # conservative PII pattern: emails (the reference's scrub list also covers
@@ -152,13 +152,13 @@ def release_maintenance_lease(spark: SparkSession, root: str) -> None:
 
 def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     """The single atomic file-create that makes a run visible — ONE
-    definition shared by every marker-committed sink (batch publish,
-    streaming publish epochs, streaming decontamination verdicts, dedup
-    index snapshots). Refuses while a maintenance lease is held on the same
-    store: a marker committed mid-compaction would not be in the rebuilt
-    marker set (the remaining probe-to-commit race is caught by the
-    compaction's post-swap verification, which rolls back rather than lose
-    the run)."""
+    definition shared by every marker-committed store: ``commit_run`` (batch
+    publish and every streaming epoch), ``save_index`` (persisted BM25 and
+    IVF×PQ indexes), IVF×PQ appends and dedup index snapshots. Refuses
+    while a maintenance lease is held on the same store: a marker committed
+    mid-compaction would not be in the rebuilt marker set (the remaining
+    probe-to-commit race is caught by the compaction's post-swap
+    verification, which rolls back rather than lose the run)."""
     if read_maintenance_lease(spark, out_dir) is not None:
         raise MaintenanceInProgressError(
             f"commit blocked: store maintenance in progress at {out_dir} "
@@ -168,6 +168,65 @@ def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
     fs.mkdirs(marker.getParent())
     fs.create(marker, True).close()
+
+
+def clear_for_create(spark: SparkSession, path: str) -> None:
+    """The create-only guard every persisted index shares: refuse a path
+    holding ANY committed marker — it may be this index, or another
+    writer's marker-committed store, and the torn-attempt cleanup below
+    must never recursively delete committed data — otherwise clear a torn
+    previous attempt (data written, marker never created). Refresh an index
+    by saving to a new versioned path and flipping the pointer your jobs
+    read: a destructive-first overwrite would destroy the only good copy
+    mid-rebuild and break concurrent readers."""
+    committed = committed_publish_ids(spark, path)
+    if committed:
+        raise FileExistsError(
+            f"committed data already exists at {path} (markers: {committed}) "
+            "— save to a new path"
+        )
+    fs, jpath = _fs(spark, path)
+    if fs.exists(jpath):
+        fs.delete(jpath, True)
+
+
+def save_index(
+    spark: SparkSession, path: str, writers: dict[str, DataFrameWriter], meta: dict
+) -> None:
+    """Create-only save of a persisted index: ``clear_for_create``, then
+    each ``DataFrameWriter`` lands at ``<path>/<name>`` and ``meta.json``
+    next to them, then one ``_committed/index`` marker makes the whole
+    index visible — a torn save is invisible to ``load_index_meta``."""
+    import json as _json
+
+    clear_for_create(spark, path)
+    for name, writer in writers.items():
+        writer.parquet(f"{path}/{name}")
+    fs, jpath = _fs(spark, f"{path}/meta.json")
+    out = fs.create(jpath, True)
+    out.write(bytearray(_json.dumps(meta).encode()))
+    out.close()
+    commit_marker(spark, path, "index")
+
+
+def load_index_meta(spark: SparkSession, path: str, what: str) -> tuple[list[str], dict]:
+    """(committed markers, meta) of an index saved by ``save_index``;
+    raises FileNotFoundError when its ``index`` marker is missing (a torn
+    save is invisible by design)."""
+    import json as _json
+
+    markers = committed_publish_ids(spark, path)
+    if "index" not in markers:
+        raise FileNotFoundError(
+            f"no committed {what} under {path} (save it first; a torn save is "
+            "invisible by design)"
+        )
+    fs, jpath = _fs(spark, f"{path}/meta.json")
+    stream = fs.open(jpath)
+    try:
+        return markers, _json.loads(bytes(stream.readAllBytes()).decode())
+    finally:
+        stream.close()
 
 
 def _schema_versions(spark: SparkSession, out_dir: str, table: str) -> list[tuple[int, str]]:
@@ -335,17 +394,14 @@ def read_committed_table(spark: SparkSession, out_dir: str, table: str) -> DataF
     return df
 
 
-_read_committed = read_committed_table
-
-
 def read_published(spark: SparkSession, out_dir: str) -> DataFrame:
     """The published archive — committed runs only (never a torn run)."""
-    return _read_committed(spark, out_dir, "published")
+    return read_committed_table(spark, out_dir, "published")
 
 
 def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame:
     """The quarantine table — committed runs only (never a torn run)."""
-    return _read_committed(spark, out_dir, "quarantine")
+    return read_committed_table(spark, out_dir, "quarantine")
 
 
 def publish_run(
@@ -402,7 +458,7 @@ def publish_run(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    write_tagged_run(spark, tagged, out_dir, run_id, _crash_before_commit)
+    commit_run(spark, out_dir, run_id, tagged_tables(tagged), _crash_before_commit)
     return {
         "published": counts.get(True, 0),
         "quarantined": counts.get(False, 0),
@@ -410,48 +466,43 @@ def publish_run(
     }
 
 
-def write_tagged_run(
+def tagged_tables(tagged: DataFrame) -> dict[str, DataFrame]:
+    """The gate's split of a ``_reject``-tagged frame into the two tables
+    of a publish run — shared by the batch publisher and its streaming
+    twin, so the two sinks cannot drift."""
+    return {
+        "published": tagged.filter(F.col("_reject").isNull()).drop("_reject"),
+        "quarantine": tagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
+            "_reject", "reject_reason"
+        ),
+    }
+
+
+def commit_run(
     spark: SparkSession,
-    tagged: DataFrame,
     out_dir: str,
     run_id: str,
-    _crash_before_commit: str | None = None,
-    skip_if_committed: bool = False,
-) -> bool:
-    """The staged-write + marker-commit protocol, shared by the batch
-    publisher and the streaming twin (one definition — the two sinks cannot
-    drift). ``tagged`` carries a ``_reject`` column; both halves land in
-    run-scoped directories (overwrite = idempotent replay) and become
-    visible only when the single marker file is created.
-
-    ``skip_if_committed=True`` (the streaming epochs): a run_id whose marker
-    already exists is left untouched and False is returned. For a true
-    replay (crash after marker, before the stream checkpoint advanced) the
-    content is identical, so skipping is exact; for a LOST-checkpoint
-    restart (epoch numbering resets over an existing archive) it prevents
-    the new batch 0 from destroying the committed old epoch 0 — that
-    operator mistake needs a fresh out_dir, not a silent overwrite."""
-    if skip_if_committed:
-        fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):
-            return False
-    pub = tagged.filter(F.col("_reject").isNull()).drop("_reject")
-    pub.write.mode("overwrite").parquet(f"{out_dir}/published/run_id={run_id}")
-    if _crash_before_commit == "published":
-        raise RuntimeError("fault injection: crashed after published half")
-    quar = tagged.filter(F.col("_reject").isNotNull()).withColumnRenamed(
-        "_reject", "reject_reason"
-    )
-    quar.write.mode("overwrite").parquet(f"{out_dir}/quarantine/run_id={run_id}")
-    if _crash_before_commit == "quarantine":
-        raise RuntimeError("fault injection: crashed before commit marker")
+    tables: dict[str, DataFrame],
+    _crash_after: str | None = None,
+) -> None:
+    """The staged-write + marker-commit protocol — ONE definition for every
+    marker-committed run (batch publish, every streaming epoch via
+    ``streaming.publish_stream.epoch_stream``). Each table lands in
+    ``<out_dir>/<name>/run_id=<run_id>`` (overwrite = idempotent retry of
+    the same run_id); the run becomes visible to ``read_committed_table``
+    only when the single marker file is created after every write.
+    ``_crash_after`` is a test-only fault-injection point: raise right
+    after the named table's write."""
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_id={run_id}")
+        if _crash_after == name:
+            raise RuntimeError(f"fault injection: crashed after the {name} write")
     # schema store BEFORE the marker: a crash here leaves extra nullable
     # columns in the union (harmless); the reverse order could commit a run
     # whose columns the stored schema lacks
-    update_schema_store(spark, out_dir, "published", pub.schema)
-    update_schema_store(spark, out_dir, "quarantine", quar.schema)
+    for name, df in tables.items():
+        update_schema_store(spark, out_dir, name, df.schema)
     commit_marker(spark, out_dir, run_id)  # single atomic create = the commit point
-    return True
 
 
 def compact_published_store(

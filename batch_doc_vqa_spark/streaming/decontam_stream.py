@@ -3,17 +3,17 @@ screened against the eval set as they land.
 
 Batch form: ``operators/decontam.contamination_report`` over a full corpus.
 Streaming form: new document files flow through the SAME n-gram machinery
-inside ``foreachBatch`` (one definition — the shared
+as an ``epoch_stream`` callback (one definition — the shared
 ``contamination_report`` is called per micro-batch against the pinned
-benchmark frame), and each epoch's verdicts land atomically via the
-publish protocol's run-scoped marker commit: ``clean/run_id=e<batch>`` and
+benchmark frame), and each epoch's verdicts land atomically through
+``commit_run``: ``clean/run_id=e<batch>`` and
 ``contaminated/run_id=e<batch>`` become visible together or not at all.
 
 Scale shape matches the batch op: the benchmark n-gram set broadcasts, the
 snapshot side is map-only, and state never accumulates across epochs (the
-benchmark is static; each micro-batch is independent) —
-``trigger(availableNow=True)`` makes this an incremental screener: rerun
-after new crawl files land and only the new files are checked.
+benchmark is static; each micro-batch is independent) — an incremental
+screener: rerun after new crawl files land and only the new files are
+checked.
 """
 
 from __future__ import annotations
@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.decontam import DEFAULT_DROP_THRESHOLD, DEFAULT_NGRAM, contamination_report
-from ..plans.publish import _fs, commit_marker, read_committed_table
+from ..plans.publish import read_committed_table
+from .publish_stream import epoch_stream
 
 
 def decontam_screen_stream(
@@ -37,7 +38,6 @@ def decontam_screen_stream(
     text_col: str = "text",
     n: int = DEFAULT_NGRAM,
     threshold: float = DEFAULT_DROP_THRESHOLD,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """File-source document stream → contamination screen → atomic epoch
     writes of ``clean`` and ``contaminated`` (with per-item coverage).
@@ -49,14 +49,8 @@ def decontam_screen_stream(
     markers, so a crash between the two table writes never surfaces a torn
     epoch (same contract as the publish archive)."""
     bench = bench.localCheckpoint(eager=True)  # pin the eval set for the run
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
 
-    def screen(batch: DataFrame, batch_id: int) -> None:
-        sess = batch.sparkSession
-        run_id = f"e{batch_id:08d}"
-        fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):  # replay of a committed epoch / stale archive
-            return
+    def screen(batch: DataFrame, run_id: str) -> dict[str, DataFrame]:
         # materialized once: the report feeds both the anti-join build side
         # and the contaminated-table write. strategy pinned to 'broadcast':
         # the eval set is localCheckpointed once for the whole run, and
@@ -65,25 +59,14 @@ def decontam_screen_stream(
             batch, id_col, text_col, bench, "bench_id", "bench_text", n=n,
             strategy="broadcast",
         ).localCheckpoint(eager=True)
-        flagged = (
-            report.filter(F.col("coverage") >= threshold)
-            .select(F.col("doc_id").alias(id_col))
-            .distinct()
-        )
-        batch.join(F.broadcast(flagged), id_col, "left_anti").write.mode("overwrite").parquet(
-            f"{out_dir}/clean/run_id={run_id}"
-        )
-        report.filter(F.col("coverage") >= threshold).write.mode("overwrite").parquet(
-            f"{out_dir}/contaminated/run_id={run_id}"
-        )
-        commit_marker(sess, out_dir, run_id)
+        contaminated = report.filter(F.col("coverage") >= threshold)
+        flagged = contaminated.select(F.col("doc_id").alias(id_col)).distinct()
+        return {
+            "clean": batch.join(F.broadcast(flagged), id_col, "left_anti"),
+            "contaminated": contaminated,
+        }
 
-    writer = stream.writeStream.foreachBatch(screen).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epoch_stream(spark, docs_dir, schema, out_dir, checkpoint_dir, screen)
 
 
 def read_clean(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -3,11 +3,11 @@ stream in, each micro-batch dedups against the persisted index and appends
 itself as one committed index snapshot.
 
 Batch form: ``operators/dedup_index.incremental_dedup_pairs``. Streaming
-form: the SAME operator runs inside ``foreachBatch`` with the epoch id as
-the snapshot id, so the index grows exactly-once:
+form: the SAME operator runs as an ``epoch_stream`` callback with the epoch
+id as the snapshot id, so the index grows exactly-once:
 
-- the epoch's PAIRS land at ``out_dir/pairs/run_id=e<batch>`` behind the
-  marker protocol (a torn epoch is invisible to ``read_stream_pairs``);
+- the epoch's PAIRS land at ``out_dir/pairs/run_id=e<batch>`` through
+  ``commit_run`` (a torn epoch is invisible to ``read_stream_pairs``);
 - the epoch's INDEX snapshot commits through the index's own marker
   protocol (re-ingestion anti-join ⇒ a replayed epoch never bloats it);
 - the one asymmetric crash window — index snapshot committed, pairs output
@@ -38,7 +38,8 @@ from ..operators.dedup_index import (
     incremental_dedup_pairs,
     pairs_for_snapshot,
 )
-from ..plans.publish import _fs, commit_marker, read_committed_table, update_schema_store
+from ..plans.publish import read_committed_table
+from .publish_stream import epoch_stream
 
 
 def dedup_index_stream(
@@ -51,7 +52,6 @@ def dedup_index_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    available_now: bool = True,
     _crash_after_index_commit: set | None = None,
     **params,
 ) -> StreamingQuery:
@@ -62,20 +62,15 @@ def dedup_index_stream(
     (publish's ``_crash_before_commit`` precedent): raise after the named
     batch ids' index snapshot committed but before their pairs landed —
     the exact window the ``pairs_for_snapshot`` heal exists for."""
-    stream = spark.readStream.schema(schema).parquet(docs_dir)
     # only the FIRST batch this stream instance processes can be a replay
     # of a crashed epoch (later batches imply their predecessors committed)
     # — scopes the compacted-away audit below to one batch per (re)start
     first_processed = {"v": True}
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
+    def ingest(batch: DataFrame, run_id: str) -> dict[str, DataFrame]:
         import logging
 
         sess = batch.sparkSession
-        run_id = f"e{batch_id:08d}"
-        fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):  # replay of a fully committed epoch
-            return
         snaps = committed_snapshots(sess, index_path)
         if run_id in snaps:
             # crashed between the index commit and the pairs write: the
@@ -115,19 +110,12 @@ def dedup_index_stream(
                 sess, batch, id_col, text_col, index_path, threshold,
                 update_index=True, snapshot_id=run_id, **params,
             )
-            if _crash_after_index_commit and batch_id in _crash_after_index_commit:
+            if _crash_after_index_commit and int(run_id[1:]) in _crash_after_index_commit:
                 raise RuntimeError("fault injection: crashed after index commit")
-        pairs.write.mode("overwrite").parquet(f"{out_dir}/pairs/run_id={run_id}")
-        update_schema_store(sess, out_dir, "pairs", pairs.schema)
-        commit_marker(sess, out_dir, run_id)
         first_processed["v"] = False
+        return {"pairs": pairs}
 
-    writer = stream.writeStream.foreachBatch(ingest).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return epoch_stream(spark, docs_dir, schema, out_dir, checkpoint_dir, ingest)
 
 
 def read_stream_pairs(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -43,8 +43,8 @@ def hourly_rollup_stream(
 def extraction_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
     """Streaming extraction: same Arrow UDF, incremental over arriving files.
 
-    Pair with ``.writeStream.trigger(availableNow=True)`` + checkpointLocation
-    for an incremental batch job with exactly-once sink semantics.
+    Pair with an available-now trigger + checkpointLocation for an
+    incremental batch job with exactly-once sink semantics.
     """
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     stream = spark.readStream.schema(schema).parquet(pages_dir)

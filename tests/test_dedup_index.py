@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from batch_doc_vqa_spark.operators import dedup
 from batch_doc_vqa_spark.operators.dedup_index import build_dedup_index, incremental_dedup_pairs
+from batch_doc_vqa_spark.plans.publish import release_maintenance_lease
 
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu".split()
 
@@ -54,6 +55,19 @@ def test_incremental_matches_full_batch(spark, corpora, tmp_path):
     assert inc[("new_exact", "old10")] == 1.0
     assert inc[("new_pair_a", "new_pair_b")] == 1.0
     assert any(a == f"new{j}" or b == f"new{j}" for j in range(6) for a, b in inc)
+
+
+def test_rebuild_over_committed_index_refuses(spark, corpora, tmp_path):
+    """build_dedup_index is create-only: a second build on a committed path
+    raises instead of deleting the live index."""
+    from batch_doc_vqa_spark.operators.dedup_index import read_index_sigs
+
+    old, new = corpora
+    path = str(tmp_path / "idx_twice")
+    build_dedup_index(old, "doc_id", "text", path)
+    with pytest.raises(FileExistsError, match="committed data"):
+        build_dedup_index(new, "doc_id", "text", path)
+    assert read_index_sigs(spark, path).count() == 30
 
 
 def test_index_append_makes_next_snapshot_see_previous(spark, corpora, tmp_path):
@@ -157,7 +171,6 @@ def test_incremental_commit_blocked_during_compaction(spark, corpora, tmp_path):
     from batch_doc_vqa_spark.operators.dedup_index import (
         CompactionInProgressError,
         _acquire_lease,
-        _release_lease,
     )
 
     old, new = corpora
@@ -170,7 +183,7 @@ def test_incremental_commit_blocked_during_compaction(spark, corpora, tmp_path):
     # the blocked attempt committed nothing
     from batch_doc_vqa_spark.operators.dedup_index import committed_snapshots
     assert committed_snapshots(spark, path) == ["base"]
-    _release_lease(spark, path)
+    release_maintenance_lease(spark, path)
     incremental_dedup_pairs(spark, new, "doc_id", "text", path,
                             update_index=True, snapshot_id="snapX")
     assert committed_snapshots(spark, path) == ["base", "snapX"]
@@ -276,7 +289,6 @@ def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
     from batch_doc_vqa_spark.operators.dedup_index import (
         CompactionInProgressError,
         _acquire_lease,
-        _release_lease,
         compact_dedup_index,
         read_index_sigs,
         vacuum_dedup_index,
@@ -298,7 +310,7 @@ def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
     _acquire_lease(spark, path, {"snap": "x", "pre_markers": []})
     with pytest.raises(CompactionInProgressError):
         vacuum_dedup_index(spark, path)
-    _release_lease(spark, path)
+    release_maintenance_lease(spark, path)
     # the default retention grace protects a marker-less dir that might be
     # an IN-FLIGHT commit (data written, marker not yet landed): these dirs
     # are seconds old, so the default-grace vacuum must not touch them

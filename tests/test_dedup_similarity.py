@@ -791,6 +791,21 @@ def test_ivfpq_index_save_load_roundtrip(vectors, tmp_path):
     assert similarity.load_ivfpq_index(spark, path)["m"] == 8
 
 
+def test_ivfpq_save_refuses_path_with_foreign_committed_store(vectors, tmp_path):
+    """A path committed under ANY other marker id is refused — the
+    torn-attempt cleanup must never delete another store's committed data."""
+    from batch_doc_vqa_spark.plans.publish import commit_marker
+
+    spark = vectors.sparkSession
+    foreign = str(tmp_path / "foreign")
+    spark.createDataFrame([(1,)], "x long").write.parquet(f"{foreign}/data")
+    commit_marker(spark, foreign, "someone_elses_store")
+    index = similarity.ivfpq_build(vectors, n_centroids=8, m=8, n_codes=16, dim=16)
+    with pytest.raises(FileExistsError, match="committed data"):
+        similarity.save_ivfpq_index(index, foreign)
+    assert spark.read.parquet(f"{foreign}/data").count() == 1
+
+
 def test_codebook_shape_validated_at_every_acceptance_point(vectors, spark):
     """ADVICE r5 (low): the ADC position arithmetic assumes every sub-space
     carries codes 1..n_codes contiguously with equal counts — a ragged or

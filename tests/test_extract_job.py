@@ -460,24 +460,29 @@ def test_read_archive_before_any_commit_raises_clearly(spark, tmp_path):
 
 
 def test_committed_epoch_is_never_overwritten_with_skip_guard(spark, tmp_path):
-    """skip_if_committed: a colliding run_id (lost-checkpoint restart over an
-    existing archive) leaves the committed epoch untouched."""
-    from pyspark.sql import functions as F2
+    """A colliding epoch (lost-checkpoint restart over an existing archive)
+    leaves the committed epoch untouched and flags the collision."""
+    import os
 
-    from batch_doc_vqa_spark.plans import read_published
-    from batch_doc_vqa_spark.plans.publish import write_tagged_run
+    from batch_doc_vqa_spark.plans import committed_publish_ids, read_published
+    from batch_doc_vqa_spark.streaming.publish_stream import gated_publish_stream
 
     out = str(tmp_path / "guard")
-    first = spark.createDataFrame([(1, "original")], "id long, text string").withColumn(
-        "_reject", F2.lit(None).cast("string")
-    )
-    assert write_tagged_run(spark, first, out, "e0", skip_if_committed=True) is True
-    collider = spark.createDataFrame([(9, "intruder")], "id long, text string").withColumn(
-        "_reject", F2.lit(None).cast("string")
-    )
-    assert write_tagged_run(spark, collider, out, "e0", skip_if_committed=True) is False
+    schema = "id long, text string"
+    first, collider = tmp_path / "first_in", tmp_path / "collider_in"
+    spark.createDataFrame([(1, "original")], schema).write.parquet(str(first))
+    spark.createDataFrame([(9, "intruder")], schema).write.parquet(str(collider))
+    gated_publish_stream(
+        spark, str(first), schema, out, str(tmp_path / "ckpt_lost")
+    ).awaitTermination(120)
+    assert committed_publish_ids(spark, out) == ["e00000000"]
+    # a fresh checkpoint restarts epoch numbering at e00000000
+    gated_publish_stream(
+        spark, str(collider), schema, out, str(tmp_path / "ckpt_new")
+    ).awaitTermination(120)
     rows = read_published(spark, out).collect()
     assert [r["id"] for r in rows] == [1] and rows[0]["text"] == "original"
+    assert os.path.exists(f"{out}/_collisions/e00000000")
 
 
 def test_resume_raises_on_unreadable_populated_store(spark, tmp_path):

@@ -227,6 +227,80 @@ def test_decontam_screen_stream_incremental(spark, tmp_path):
     assert batch_flagged == {2, 4}
 
 
+def test_decontam_stream_lost_checkpoint_restart_keeps_committed_epoch(spark, tmp_path):
+    """A restart with a fresh checkpoint over the same out_dir renumbers its
+    first batch e00000000: the committed epoch's verdicts stay as they were
+    and the collision leaves a ``_collisions/<run_id>`` flag."""
+    import os
+
+    from batch_doc_vqa_spark.streaming.decontam_stream import (
+        decontam_screen_stream,
+        read_clean,
+        read_contaminated,
+    )
+
+    out = str(tmp_path / "screen_out")
+    schema = "doc_id long, text string"
+    bench_text = "q1 q2 q3 q4 q5 q6 q7 q8 q9 q10 q11 q12"
+    bench = spark.createDataFrame([("b0", bench_text)], "bench_id string, bench_text string")
+    clean_text = " ".join(f"w{i}" for i in range(40))
+    first, second = tmp_path / "first_in", tmp_path / "second_in"
+    spark.createDataFrame([(1, clean_text), (2, bench_text)], schema).write.parquet(str(first))
+    spark.createDataFrame([(3, clean_text), (4, bench_text)], schema).write.parquet(str(second))
+
+    decontam_screen_stream(
+        spark, str(first), schema, bench, out, str(tmp_path / "ckpt_lost")
+    ).awaitTermination(120)
+    decontam_screen_stream(
+        spark, str(second), schema, bench, out, str(tmp_path / "ckpt_new")
+    ).awaitTermination(120)
+    assert {r["doc_id"] for r in read_clean(spark, out).collect()} == {1}
+    assert {r["doc_id"] for r in read_contaminated(spark, out).collect()} == {2}
+    assert os.path.exists(f"{out}/_collisions/e00000000")
+
+
+def test_streaming_sinks_write_schema_store(spark, tmp_path):
+    """Every epoch commit records its tables in the schema store, so the
+    committed-table readers never fall back to mergeSchema."""
+    from batch_doc_vqa_spark.operators.sketches import hll_partial
+    from batch_doc_vqa_spark.plans.publish import read_schema_store
+    from batch_doc_vqa_spark.streaming.decontam_stream import decontam_screen_stream
+    from batch_doc_vqa_spark.streaming.hll_stream import sketch_stream
+    from batch_doc_vqa_spark.streaming.quality_stream import quality_gate_stream
+
+    src = tmp_path / "docs_in"
+    schema = "doc_id long, text string"
+    spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "q1 q2 q3 q4 q5 q6 q7 q8 q9")], schema
+    ).write.parquet(str(src))
+    bench = spark.createDataFrame(
+        [("b0", "q1 q2 q3 q4 q5 q6 q7 q8 q9")], "bench_id string, bench_text string"
+    )
+    sinks = {
+        "decontam": (
+            lambda out, ck: decontam_screen_stream(spark, str(src), schema, bench, out, ck),
+            ["clean", "contaminated"],
+        ),
+        "quality": (
+            lambda out, ck: quality_gate_stream(
+                spark, str(src), schema, 0.0, {0: 0.5, 1: -0.5}, out, ck, n_buckets=2
+            ),
+            ["kept", "rejected"],
+        ),
+        "sketch": (
+            lambda out, ck: sketch_stream(
+                spark, str(src), schema, lambda b: hll_partial(b, "text", [], 8), out, ck
+            ),
+            ["partials"],
+        ),
+    }
+    for name, (start, tables) in sinks.items():
+        out = str(tmp_path / f"{name}_out")
+        start(out, str(tmp_path / f"{name}_ckpt")).awaitTermination(120)
+        for table in tables:
+            assert read_schema_store(spark, out, table) is not None, (name, table)
+
+
 def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
     """Streaming twin of the incremental dedup index: epochs commit pairs +
     index snapshot exactly-once; the asymmetric crash window (index
@@ -393,12 +467,12 @@ def test_hll_stream_incremental_and_idempotent(spark, tmp_path):
     import os
     import shutil
 
-    from batch_doc_vqa_spark.operators.sketches import hll_count_distinct
-    from batch_doc_vqa_spark.streaming.hll_stream import (
-        hll_stream,
-        read_hll_estimate,
-        read_hll_partials,
+    from batch_doc_vqa_spark.operators.sketches import (
+        hll_count_distinct,
+        hll_estimate,
+        hll_partial,
     )
+    from batch_doc_vqa_spark.streaming.hll_stream import read_sketch_partials, sketch_stream
 
     src = tmp_path / "docs_in"
     out = str(tmp_path / "hll_out")
@@ -407,10 +481,18 @@ def test_hll_stream_incremental_and_idempotent(spark, tmp_path):
     rows = [(i, f"u{i % 300}", ["a", "b"][i % 2]) for i in range(900)]
     spark.createDataFrame(rows[:500], schema).write.mode("append").parquet(str(src))
 
-    hll_stream(spark, str(src), schema, "uid", ["g"], out, ckpt, p=8).awaitTermination(120)
+    def run_stream():
+        sketch_stream(
+            spark, str(src), schema, lambda b: hll_partial(b, "uid", ["g"], 8), out, ckpt
+        ).awaitTermination(120)
+
+    def estimate():
+        return {r["g"]: r["est_distinct"]
+                for r in hll_estimate(read_sketch_partials(spark, out), ["g"], 8).collect()}
+
+    run_stream()
     assert os.path.exists(f"{out}/_committed/e00000000")
-    est1 = {r["g"]: r["est_distinct"]
-            for r in read_hll_estimate(spark, out, ["g"], p=8).collect()}
+    est1 = estimate()
     batch1 = {r["g"]: r["est_distinct"]
               for r in hll_count_distinct(
                   spark.createDataFrame(rows[:500], schema), "uid", ["g"], p=8
@@ -419,9 +501,8 @@ def test_hll_stream_incremental_and_idempotent(spark, tmp_path):
 
     # epoch 2: only the new file is sketched; union estimate == batch on all
     spark.createDataFrame(rows[500:], schema).write.mode("append").parquet(str(src))
-    hll_stream(spark, str(src), schema, "uid", ["g"], out, ckpt, p=8).awaitTermination(120)
-    est2 = {r["g"]: r["est_distinct"]
-            for r in read_hll_estimate(spark, out, ["g"], p=8).collect()}
+    run_stream()
+    est2 = estimate()
     batch2 = {r["g"]: r["est_distinct"]
               for r in hll_count_distinct(
                   spark.createDataFrame(rows, schema), "uid", ["g"], p=8
@@ -433,16 +514,14 @@ def test_hll_stream_incremental_and_idempotent(spark, tmp_path):
     shutil.copytree(f"{out}/partials/run_id=e00000000",
                     f"{out}/partials/run_id=zdup")
     open(f"{out}/_committed/zdup", "w").close()
-    est_dup = {r["g"]: r["est_distinct"]
-               for r in read_hll_estimate(spark, out, ["g"], p=8).collect()}
+    est_dup = estimate()
     assert est_dup == est2
 
     # torn epoch invisibility
     os.remove(f"{out}/_committed/e00000001")
-    est_torn = {r["g"]: r["est_distinct"]
-                for r in read_hll_estimate(spark, out, ["g"], p=8).collect()}
+    est_torn = estimate()
     assert est_torn == est1
-    n_epochs = read_hll_partials(spark, out).select("run_id").distinct().count()
+    n_epochs = read_sketch_partials(spark, out).select("run_id").distinct().count()
     assert n_epochs == 2  # e0 + the forged dup; e1 retracted
 
 
@@ -460,12 +539,7 @@ def test_sketch_stream_twins_loghist_cms(spark, tmp_path):
         loghist_partial,
         loghist_quantile,
     )
-    from batch_doc_vqa_spark.streaming.hll_stream import (
-        cms_stream,
-        loghist_stream,
-        read_cms_lookup,
-        read_loghist_quantile,
-    )
+    from batch_doc_vqa_spark.streaming.hll_stream import read_sketch_partials, sketch_stream
 
     src = tmp_path / "docs_in"
     schema = "doc_id long, v long, k string, g string"
@@ -474,23 +548,28 @@ def test_sketch_stream_twins_loghist_cms(spark, tmp_path):
 
     lh_out, lh_ck = str(tmp_path / "lh_out"), str(tmp_path / "lh_ck")
     cm_out, cm_ck = str(tmp_path / "cm_out"), str(tmp_path / "cm_ck")
-    loghist_stream(spark, str(src), schema, "v", ["g"], lh_out, lh_ck, b=5).awaitTermination(120)
-    cms_stream(spark, str(src), schema, "k", ["g"], cm_out, cm_ck, w=256, d=3).awaitTermination(120)
 
+    def run_streams():
+        sketch_stream(spark, str(src), schema, lambda b: loghist_partial(b, "v", ["g"], 5),
+                      lh_out, lh_ck).awaitTermination(120)
+        sketch_stream(spark, str(src), schema, lambda b: cms_partial(b, "k", ["g"], 256, 3),
+                      cm_out, cm_ck).awaitTermination(120)
+
+    run_streams()
     spark.createDataFrame(rows[450:], schema).write.mode("append").parquet(str(src))
-    loghist_stream(spark, str(src), schema, "v", ["g"], lh_out, lh_ck, b=5).awaitTermination(120)
-    cms_stream(spark, str(src), schema, "k", ["g"], cm_out, cm_ck, w=256, d=3).awaitTermination(120)
+    run_streams()
 
     full = spark.createDataFrame(rows, schema)
     qs = [0.5, 0.9]
-    got_q = sorted(map(tuple, read_loghist_quantile(spark, lh_out, ["g"], qs, b=5).collect()))
+    got_q = sorted(map(tuple, loghist_quantile(
+        read_sketch_partials(spark, lh_out), ["g"], qs, b=5).collect()))
     want_q = sorted(map(tuple, loghist_quantile(
         loghist_partial(full, "v", ["g"], b=5), ["g"], qs, b=5).collect()))
     assert got_q == want_q
 
     keys = full.select("g", "k").distinct()
-    got_c = sorted(map(tuple, read_cms_lookup(
-        spark, cm_out, keys, "k", ["g"], w=256, d=3).collect()))
+    got_c = sorted(map(tuple, cms_lookup(
+        read_sketch_partials(spark, cm_out), keys, "k", ["g"], w=256, d=3).collect()))
     want_c = sorted(map(tuple, cms_lookup(
         cms_partial(full, "k", ["g"], w=256, d=3), keys, "k", ["g"], w=256, d=3).collect()))
     assert got_c == want_c
@@ -498,7 +577,8 @@ def test_sketch_stream_twins_loghist_cms(spark, tmp_path):
     # torn epoch invisibility: retract epoch 1's marker -> stats == epoch 0
     os.remove(f"{lh_out}/_committed/e00000001")
     early = spark.createDataFrame(rows[:450], schema)
-    got_torn = sorted(map(tuple, read_loghist_quantile(spark, lh_out, ["g"], qs, b=5).collect()))
+    got_torn = sorted(map(tuple, loghist_quantile(
+        read_sketch_partials(spark, lh_out), ["g"], qs, b=5).collect()))
     want_torn = sorted(map(tuple, loghist_quantile(
         loghist_partial(early, "v", ["g"], b=5), ["g"], qs, b=5).collect()))
     assert got_torn == want_torn
