@@ -4,8 +4,9 @@ extract → validate → results + per-partition lineage.
 This is the Spark-native shape of the reference's inference run
 (/root/reference/src/batch_doc_vqa/openrouter/inference.py:2173-2294): its
 thread-pool fan-out becomes partition parallelism, its incremental
-``save_results`` after every image (inference.py:2206-2207) becomes
-per-partition commits recorded in a lineage table, and its resumable cost
+``save_results`` after every image (inference.py:2206-2207) becomes one
+marker-committed run per call (results + per-bucket lineage, committed
+together through plans/publish.py's protocol), and its resumable cost
 backfill's "only rows not yet done" predicate (api.py:505-515) becomes a left
 anti-join of the input against the done-set.
 
@@ -15,8 +16,8 @@ Contract (BASELINE.json north rule):
 - lineage: one row per (run_id, bucket): doc count, byte count, failure count,
   failure urls, status;
 - resume: rerunning with the same output dir processes only urls absent from
-  the results table — reruns are idempotent and the final table is identical
-  to a single-shot run;
+  the committed results — reruns are idempotent, a torn run leaves no trace,
+  and the final table is identical to a single-shot run;
 - failures are recorded, not retried (status='error' rows, failure urls in
   lineage) — the analogue of the reference's record-and-continue retry ladder.
 """
@@ -32,6 +33,13 @@ from pyspark.sql import functions as F
 
 from .. import __version__ as ENGINE_VERSION
 from ..functions.udfs import extract_udf
+from .publish import (
+    commit_marker,
+    committed_publish_ids,
+    read_committed_table,
+    read_schema_store,
+    stage_table,
+)
 from .skew import BUCKET_COL, with_salted_partition
 
 MAX_FAILURE_URLS_PER_PARTITION = 100
@@ -47,28 +55,14 @@ def config_fingerprint(config: dict) -> tuple[str, str]:
     return config_json, hashlib.sha256(config_json.encode()).hexdigest()[:16]
 
 
-def _table_exists(spark: SparkSession, path: str) -> bool:
-    """O(1) filesystem existence probe — no file listing, no scan, no collect.
-
-    The old read+collect form cost a full directory listing per call; at
-    100 TB with thousands of prior runs that is a driver-side stall on every
-    incremental run.
-    """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
 def _has_data_files(spark: SparkSession, path: str) -> bool:
-    """True iff the directory holds at least one non-hidden data file.
-
-    Recursive listing with an early break: returns at the FIRST data file,
-    so a populated store costs one listing step, and only the
-    crashed-before-any-commit empty-directory case walks the (empty) tree.
-    """
+    """True iff the directory exists and holds at least one non-hidden data
+    file. Recursive listing with an early break: returns at the FIRST data
+    file, so a populated store costs one listing step."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return False
     it = fs.listFiles(jpath, True)
     while it.hasNext():
         name = it.next().getPath().getName()
@@ -78,11 +72,14 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
 
 
 def read_results(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/results")
+    """The extraction results — committed runs only (a torn run is
+    invisible, and the next resume re-extracts its urls)."""
+    return read_committed_table(spark, out_dir, "results")
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{out_dir}/lineage")
+    """Per-(run_id, bucket) lineage — committed runs only."""
+    return read_committed_table(spark, out_dir, "lineage")
 
 
 def run_extraction(
@@ -98,13 +95,26 @@ def run_extraction(
 
     ``pages`` must have columns (url, warc_ts, html, text, lang) — the
     BASELINE.json input shape. Results land at ``{out_dir}/results`` and
-    lineage at ``{out_dir}/lineage``, both append-mode and PARTITIONED BY
-    ``run_id``: every per-run read-back (lineage computation, summary) prunes
-    to this run's partition directory instead of filter-scanning all prior
-    runs' files — O(|run|), not O(corpus), per incremental run. This is the
-    parquet emulation of the reference's run-scoped artifact dirs
+    lineage at ``{out_dir}/lineage``, both PARTITIONED BY ``run_id``, as
+    ONE marker-committed run (plans/publish.py): ``stage_table`` writes
+    each table to its ``run_id=<id>`` directory, then ``commit_marker``
+    makes both visible at once. A run that dies before its marker is
+    invisible to ``read_results``/``read_lineage`` and to the done-set, so
+    the next resume re-extracts its urls and the lineage never has holes.
+    The per-run lineage read-back prunes to this run's directory —
+    O(|run|), not O(corpus), per incremental run. This is the parquet
+    emulation of the reference's run-scoped artifact dirs
     (core/run_manager.py:368-407); an Iceberg table with identity
     partitioning on run_id is the drop-in upgrade.
+
+    A ``run_id`` that is already committed in ``out_dir`` is refused with
+    ``FileExistsError``: restaging it would overwrite the committed rows.
+    A call with nothing left to do commits nothing (no lineage, no marker;
+    its empty results dir stays an invisible torn run). A ``results``
+    directory holding data files but no committed marker and no stored
+    ``results`` schema was written before this protocol: it is refused with
+    ``FileExistsError``, never read as an empty done-set (which would
+    duplicate every row it holds).
 
     ``num_buckets`` is the lineage and salting key — one lineage row per
     bucket, and part of the config fingerprint. The extraction stage runs
@@ -120,8 +130,6 @@ def run_extraction(
     """
     # 'r' prefix keeps an all-hex-digit id unambiguous as a directory name
     run_id = run_id or "r" + uuid.uuid4().hex[:12]
-    results_path = f"{out_dir}/results"
-    lineage_path = f"{out_dir}/lineage"
     config_json, config_hash = config_fingerprint(
         {
             "num_buckets": num_buckets,
@@ -130,22 +138,25 @@ def run_extraction(
         }
     )
 
+    committed = committed_publish_ids(spark, out_dir)
+    if run_id in committed:
+        # restaging it would overwrite committed rows the done-set reads
+        raise FileExistsError(
+            f"run {run_id!r} is already committed in {out_dir}: resume under a new run_id"
+        )
     todo = pages
-    if _table_exists(spark, results_path):
-        # checkpoint/resume: anti-join against the done-set (J7 pattern).
-        # The existence probe is O(1) and can be true for a directory a
-        # crashed first run created but never committed data into — an
-        # EMPTY store means an empty done-set, not a dead job. Distinguish
-        # the two cases by probing for data FILES (not by catching
-        # AnalysisException: a populated store whose read fails for any
-        # other analysis reason — conflicting directory layouts, a missing
-        # 'url' column — must surface loudly; silently treating it as an
-        # empty done-set would duplicate every prior run's rows). The probe
-        # short-circuits at the first data file, so it stays O(1)-ish even
-        # over thousands of run_id partitions.
-        if _has_data_files(spark, results_path):
-            done = spark.read.parquet(results_path).select("url")
-            todo = pages.join(done, "url", "left_anti")
+    if committed:
+        # checkpoint/resume: anti-join against the committed done-set (J7
+        # pattern); the stored schema spares a schema-inference job
+        todo = pages.join(read_results(spark, out_dir).select("url"), "url", "left_anti")
+    elif read_schema_store(spark, out_dir, "results") is None and _has_data_files(
+        spark, f"{out_dir}/results"
+    ):
+        raise FileExistsError(
+            f"{out_dir}/results holds data but no committed run and no stored "
+            "schema: it was written before the marker-commit protocol — extract "
+            "into a new output dir"
+        )
 
     bucketed = with_salted_partition(todo, num_buckets, target_rows_per_task=target_rows_per_task)
     # unsupported_format (e.g. encrypted / non-Flate real PDFs) is always a
@@ -167,17 +178,15 @@ def run_extraction(
             F.col("_ex.error").alias("error"),
             F.coalesce(F.length("_ex.text"), F.lit(0)).alias("n_chars"),
             F.length("html").alias("n_input_bytes"),
-            F.lit(run_id).alias("run_id"),
         )
     )
-    extracted.write.mode("append").partitionBy("run_id").parquet(results_path)
+    stage_table(spark, out_dir, run_id, "results", extracted)
 
-    # lineage from what was actually committed (read-back, not recompute) —
-    # the run_id partition filter prunes the scan to THIS run's directory.
-    # Both read-backs below are pruned to what this call just wrote, so
-    # they take its schema instead of firing a parquet schema-inference job.
-    written = spark.read.schema(extracted.schema).parquet(results_path).filter(F.col("run_id") == run_id)
-    lineage = written.groupBy(BUCKET_COL).agg(
+    # lineage from what was actually staged (read-back, not recompute),
+    # pruned to THIS run's directory and read with the schema just written;
+    # ≤ num_buckets rows, collected once and staged as a single file
+    staged = spark.read.schema(extracted.schema).parquet(f"{out_dir}/results/run_id={run_id}")
+    lineage = staged.groupBy(BUCKET_COL).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_input_bytes").alias("n_bytes"),
         F.sum((F.col("status") == "failed").cast("long")).alias("n_failed"),
@@ -191,22 +200,17 @@ def run_extraction(
         F.lit(config_hash).alias("config_hash"),
         F.lit(config_json).alias("config_json"),
         F.lit(ENGINE_VERSION).alias("engine_version"),
-        F.lit(run_id).alias("run_id"),
     )
-    lineage.write.mode("append").partitionBy("run_id").parquet(lineage_path)
-
-    summary_rows = (
-        spark.read.schema(lineage.schema)
-        .parquet(lineage_path)
-        .filter(F.col("run_id") == run_id)
-        .agg(
-            F.count(F.lit(1)).alias("n_partitions"),
-            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
-            F.coalesce(F.sum("n_bytes"), F.lit(0)).alias("n_bytes"),
-            F.coalesce(F.sum("n_failed"), F.lit(0)).alias("n_failed"),
-        )
-        .collect()
-    )
-    s = summary_rows[0].asDict()
-    s["run_id"] = run_id
-    return s
+    rows = lineage.toPandas()
+    summary = {
+        "n_partitions": len(rows),
+        "n_docs": int(rows["n_docs"].sum()),
+        "n_bytes": int(rows["n_bytes"].sum()),
+        "n_failed": int(rows["n_failed"].sum()),
+        "run_id": run_id,
+    }
+    if rows.empty:
+        return summary  # nothing left to do: no lineage, no marker
+    stage_table(spark, out_dir, run_id, "lineage", spark.createDataFrame(rows, lineage.schema).coalesce(1))
+    commit_marker(spark, out_dir, run_id)  # results + lineage visible at once
+    return summary

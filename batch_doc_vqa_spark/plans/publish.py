@@ -153,8 +153,9 @@ def release_maintenance_lease(spark: SparkSession, root: str) -> None:
 def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     """The single atomic file-create that makes a run visible — ONE
     definition shared by every marker-committed store: ``commit_run`` (batch
-    publish and every streaming epoch), ``save_index`` (persisted BM25 and
-    IVF×PQ indexes), IVF×PQ appends and dedup index snapshots. Refuses
+    publish and every streaming epoch), ``run_extraction`` (the extraction
+    results + lineage), ``save_index`` (persisted BM25 and IVF×PQ indexes),
+    IVF×PQ appends and dedup index snapshots. Refuses
     while a maintenance lease is held on the same store: a marker committed
     mid-compaction would not be in the rebuilt marker set (the remaining
     probe-to-commit race is caught by the compaction's post-swap
@@ -485,24 +486,31 @@ def commit_run(
     tables: dict[str, DataFrame],
     _crash_after: str | None = None,
 ) -> None:
-    """The staged-write + marker-commit protocol — ONE definition for every
-    marker-committed run (batch publish, every streaming epoch via
-    ``streaming.publish_stream.epoch_stream``). Each table lands in
-    ``<out_dir>/<name>/run_id=<run_id>`` (overwrite = idempotent retry of
-    the same run_id); the run becomes visible to ``read_committed_table``
-    only when the single marker file is created after every write.
-    ``_crash_after`` is a test-only fault-injection point: raise right
+    """The staged-write + marker-commit protocol for runs whose tables are
+    all known up front (batch publish, every streaming epoch via
+    ``streaming.publish_stream.epoch_stream``): ``stage_table`` per table,
+    then ``commit_marker``. ``run_extraction`` stages its two tables itself
+    (lineage is computed from the staged results) and commits the same
+    way. ``_crash_after`` is a test-only fault-injection point: raise right
     after the named table's write."""
     for name, df in tables.items():
-        df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_id={run_id}")
+        stage_table(spark, out_dir, run_id, name, df)
         if _crash_after == name:
             raise RuntimeError(f"fault injection: crashed after the {name} write")
-    # schema store BEFORE the marker: a crash here leaves extra nullable
-    # columns in the union (harmless); the reverse order could commit a run
-    # whose columns the stored schema lacks
-    for name, df in tables.items():
-        update_schema_store(spark, out_dir, name, df.schema)
     commit_marker(spark, out_dir, run_id)  # single atomic create = the commit point
+
+
+def stage_table(spark: SparkSession, out_dir: str, run_id: str, name: str, df: DataFrame) -> None:
+    """One table of a marker-committed run: its schema into the schema
+    store, then its data to ``<out_dir>/<name>/run_id=<run_id>``
+    (overwrite = idempotent retry of the same run_id). Invisible to
+    ``read_committed_table`` until ``commit_marker`` creates the run's
+    marker. Schema BEFORE data (and so before the marker): a crash leaves
+    extra nullable columns in the union (harmless), every populated table
+    has a stored schema, and no run can commit columns the stored schema
+    lacks."""
+    update_schema_store(spark, out_dir, name, df.schema)
+    df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_id={run_id}")
 
 
 def compact_published_store(

@@ -17,8 +17,10 @@ Local smoke (synthesizes the seeded pages table when --pages is omitted):
     spark-submit --py-files batch_doc_vqa_spark.zip jobs/extract_submit.py \
         --synthesize 5000 --out /tmp/extract_out
 
-Rerunning with the same --out resumes: urls already in the results table are
-anti-joined away, per-partition lineage rows accumulate per run_id.
+Each call commits results + per-bucket lineage as one marker-committed run
+(--out/_committed/<run_id>). Rerunning with the same --out and a new --run-id
+(or none) resumes: urls in committed runs are anti-joined away, and lineage
+rows accumulate per run_id. A --run-id that is already committed is refused.
 
 The extraction stage runs min(--num-buckets, spark.sql.shuffle.partitions)
 tasks: the bucket count fixes the lineage and salting key, the session's

@@ -12,7 +12,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from batch_doc_vqa_spark.functions import extract_payload
-from batch_doc_vqa_spark.plans import read_lineage, read_results, run_extraction, salted_host_stats
+from batch_doc_vqa_spark.plans import (
+    committed_publish_ids,
+    read_lineage,
+    read_results,
+    run_extraction,
+    salted_host_stats,
+)
 from batch_doc_vqa_spark.sources import page_row, pages_df
 
 N = 300
@@ -80,9 +86,10 @@ def test_resume_is_idempotent_and_incremental(spark, tmp_path):
     assert s1["n_docs"] + s2["n_docs"] == N
     assert s2["n_docs"] < N  # second run did only the remainder
 
-    # third run: nothing left to do
+    # third run: nothing left to do, so nothing is committed
     s3 = run_extraction(spark, full, out, run_id="runC", num_buckets=8)
     assert s3["n_docs"] == 0
+    assert committed_publish_ids(spark, out) == ["runA", "runB"]
 
     resumed = read_results(spark, out)
     assert resumed.count() == N
@@ -206,8 +213,8 @@ def test_run_scoped_readback_is_partition_pruned(spark, tmp_path):
         "run_id=runA", "run_id=runB",
     ]
 
-    # the exact read-back plan run_extraction uses: partition filter present,
-    # and no pushed/data filter needed — the scan prunes at the directory level
+    # a run_id filter on read_results (the committed store the done-set
+    # reads) prunes at the directory level: partition filter present
     scan = read_results(spark, out).filter(F.col("run_id") == "runB")
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "run_id" in plan.split("PartitionFilters", 1)[1]
@@ -215,6 +222,8 @@ def test_run_scoped_readback_is_partition_pruned(spark, tmp_path):
     assert scan.count() == 60
     # partition column read back as string (type inference disabled)
     assert dict(scan.dtypes)["run_id"] == "string"
+    # runB's lineage is computed from its own run_id=runB dir only
+    assert sum(r["n_docs"] for r in read_lineage(spark, out).filter(F.col("run_id") == "runB").collect()) == 60
 
 
 def test_publish_gate_quarantines_invalid_rows(spark, tmp_path):
@@ -464,7 +473,7 @@ def test_committed_epoch_is_never_overwritten_with_skip_guard(spark, tmp_path):
     leaves the committed epoch untouched and flags the collision."""
     import os
 
-    from batch_doc_vqa_spark.plans import committed_publish_ids, read_published
+    from batch_doc_vqa_spark.plans import read_published
     from batch_doc_vqa_spark.streaming.publish_stream import gated_publish_stream
 
     out = str(tmp_path / "guard")
@@ -486,14 +495,75 @@ def test_committed_epoch_is_never_overwritten_with_skip_guard(spark, tmp_path):
 
 
 def test_resume_raises_on_unreadable_populated_store(spark, tmp_path):
-    """A POPULATED results store whose read fails analysis (here: the 'url'
-    column is missing) must surface the error, not be silently treated as an
-    empty done-set — that would duplicate every prior run's rows (ADVICE r4:
-    the old blanket AnalysisException catch swallowed exactly this)."""
+    """A POPULATED results store written outside the marker-commit protocol
+    (data files, no committed marker, no stored schema) must fail loudly,
+    not be silently treated as an empty done-set — that would duplicate
+    every prior run's rows (ADVICE r4: the old blanket AnalysisException
+    catch swallowed exactly this)."""
     import pytest
-    from pyspark.errors import AnalysisException
 
     out = str(tmp_path / "corrupt")
     spark.createDataFrame([("a", 1)], "not_url string, x int").write.parquet(f"{out}/results")
-    with pytest.raises(AnalysisException):
+    with pytest.raises(FileExistsError, match="results"):
         run_extraction(spark, pages_df(spark, 20, seed=SEED), out, run_id="r2", num_buckets=4)
+
+
+def test_rerun_with_committed_run_id_is_refused(spark, tmp_path):
+    """Reusing a committed run_id must not restage (overwrite) that run's
+    results: the call raises and the committed run reads back unchanged."""
+    import pytest
+
+    out = str(tmp_path / "reuse")
+    run_extraction(spark, pages_df(spark, 40, seed=SEED), out, run_id="once", num_buckets=4)
+
+    def snapshot():
+        res = sorted((r["url"], r["text"]) for r in read_results(spark, out).collect())
+        lin = sorted(
+            (r["run_id"], r["bucket"], r["n_docs"], r["n_bytes"])
+            for r in read_lineage(spark, out).collect()
+        )
+        return res, lin
+
+    before = snapshot()
+    with pytest.raises(FileExistsError, match="once"):
+        run_extraction(spark, pages_df(spark, 60, seed=SEED), out, run_id="once", num_buckets=4)
+    assert snapshot() == before and len(before[0]) == 40
+
+
+def test_torn_run_leaves_no_trace_and_no_lineage_hole(spark, tmp_path, monkeypatch):
+    """A run that dies after staging results + lineage but before its marker
+    is invisible: the resume re-extracts its urls, the committed url → text
+    sha256 equals a single-shot run's, and lineage has exactly one row per
+    (run_id, bucket) of committed runs, covering every doc."""
+    import pytest
+
+    from batch_doc_vqa_spark.plans import extract_job
+
+    full = pages_df(spark, 200, seed=SEED)
+    out = str(tmp_path / "torn")
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("killed before the commit marker")
+
+    with monkeypatch.context() as m:
+        m.setattr(extract_job, "commit_marker", crash)
+        with pytest.raises(RuntimeError, match="killed"):
+            run_extraction(spark, full.limit(120), out, run_id="torn", num_buckets=8)
+    s = run_extraction(spark, full, out, run_id="resume", num_buckets=8)
+    assert s["n_docs"] == 200
+
+    def digests(d: str) -> dict:
+        rows = read_results(spark, d).select("url", F.sha2("text", 256).alias("h")).collect()
+        assert len(rows) == len({r["url"] for r in rows})  # no url twice
+        return {r["url"]: r["h"] for r in rows}
+
+    oneshot = str(tmp_path / "oneshot")
+    run_extraction(spark, full, oneshot, run_id="solo", num_buckets=8)
+    got = digests(out)
+    assert len(got) == 200 and got == digests(oneshot)
+
+    lin = read_lineage(spark, out).select("run_id", "bucket", "n_docs").collect()
+    keys = [(r["run_id"], r["bucket"]) for r in lin]
+    assert len(keys) == len(set(keys)) == s["n_partitions"]
+    assert {r["run_id"] for r in lin} == {"resume"}
+    assert sum(r["n_docs"] for r in lin) == 200

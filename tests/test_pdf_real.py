@@ -101,7 +101,7 @@ def test_dispatch_never_html_tokenizes_pdf_bytes():
 
 def test_extraction_job_records_unsupported_pdfs_in_lineage(spark, tmp_path):
     """unsupported_format rows are counted failures with urls in lineage."""
-    from batch_doc_vqa_spark.plans.extract_job import run_extraction
+    from batch_doc_vqa_spark.plans.extract_job import read_lineage, read_results, run_extraction
 
     import datetime as dt
 
@@ -118,14 +118,14 @@ def test_extraction_job_records_unsupported_pdfs_in_lineage(spark, tmp_path):
     out = str(tmp_path / "job")
     summary = run_extraction(spark, pages, out, num_buckets=2)
     assert summary["n_docs"] == 3 and summary["n_failed"] == 1
-    res = {r["url"]: r for r in spark.read.parquet(f"{out}/results").collect()}
+    res = {r["url"]: r for r in read_results(spark, out).collect()}
     assert res["https://a.example.org/good.pdf"]["status"] == "pdf_text"
     assert res["https://a.example.org/good.pdf"]["text"] == "good pdf text"
     enc = res["https://a.example.org/enc.pdf"]
     assert enc["status"] == "failed" and enc["text"] is None
     failed_urls = [
         u
-        for r in spark.read.parquet(f"{out}/lineage").collect()
+        for r in read_lineage(spark, out).collect()
         for u in (r["failure_urls"] or [])
     ]
     assert failed_urls == ["https://a.example.org/enc.pdf"]
