@@ -26,6 +26,10 @@ def _norm(a):
 
 
 def cosine_sim(a, b, digits: int = 6):
+    """Cosine of two array columns, rounded to ``digits``. A zero-norm
+    operand raises DIVIDE_BY_ZERO under Spark's ANSI mode (the default,
+    which session.py keeps), so no NaN cosine ever reaches a ranking or the
+    IVF ``min(struct(-cos, …))`` argmax."""
     return F.round(_dot(a, b) / (_norm(a) * _norm(b)), digits)
 
 
@@ -614,10 +618,11 @@ def append_ivfpq_index(
     ``_ivfpq_assign``/``_ivfpq_encode`` definitions the build uses, so an
     appended vector gets bit-identical codes to a rebuilt one), written as
     a marker-committed snapshot ``codes_snap/<id>`` partitioned by
-    ``cent_id`` — the dedup-index protocol: a torn append is invisible to
-    ``load_ivfpq_index``, re-running a failed append with the same
-    snapshot_id is idempotent (overwrite data, marker create is the
-    commit), and ``commit_marker`` refuses mid-maintenance. Quantization
+    ``cent_id`` (not ``stage_table``'s unpartitioned ``run_id=`` dirs, so the
+    ADC join still prunes unprobed cells; see TABLE_FORMAT.md): a torn
+    append is invisible to ``load_ivfpq_index``, re-running a failed
+    append with the same snapshot_id is idempotent (overwrite data, marker
+    create is the commit), and ``commit_marker`` refuses mid-maintenance. Quantization
     drift is the caller's policy knob: after enough appends the frozen
     model under-fits the grown corpus — rebuild to a NEW versioned path
     and flip the pointer (``save_ivfpq_index``'s create-only stance).

@@ -86,7 +86,7 @@ def committed_publish_ids(spark: SparkSession, out_dir: str) -> list[str]:
 
 class MaintenanceInProgressError(RuntimeError):
     """A store-maintenance lease (compaction) is held — a live maintenance
-    pass, or a crashed one awaiting its recover_* function."""
+    pass, or a crashed one awaiting ``recover_marker_store``."""
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -117,7 +117,7 @@ def acquire_maintenance_lease(spark: SparkSession, root: str, payload: dict) -> 
         raise MaintenanceInProgressError(
             f"maintenance lease already held at {root}/_compact_lease — another "
             "compaction is running, or a crashed one left state behind "
-            "(run the store's recover function first)"
+            "(run recover_marker_store first)"
         ) from exc
     out.write(bytearray(_json.dumps(payload).encode()))
     out.close()
@@ -150,12 +150,37 @@ def release_maintenance_lease(spark: SparkSession, root: str) -> None:
     fs.delete(lease, False)
 
 
+def _write_lease(spark: SparkSession, root: str, body: dict) -> None:
+    """Overwrite the body of a lease this pass already HOLDS (never
+    release/re-acquire: that window would let a commit slip in unrecorded)."""
+    import json as _json
+
+    fs, lease = _fs(spark, f"{root}/_compact_lease")
+    out = fs.create(lease, True)
+    out.write(bytearray(_json.dumps(body).encode()))
+    out.close()
+
+
+def begin_maintenance(spark: SparkSession, root: str, distinguished: str) -> list[str]:
+    """The prologue of every store's compaction: claim the lease, capture
+    the committed marker set UNDER it (markers committed between a first
+    look and the claim belong to that set), and record the set in the lease
+    body so ``recover_marker_store`` adjudicates from the same set the live
+    pass uses. Returns the captured markers."""
+    acquire_maintenance_lease(spark, root, {"distinguished": distinguished, "pre_markers": []})
+    pre = committed_publish_ids(spark, root)
+    _write_lease(spark, root, {"distinguished": distinguished, "pre_markers": pre})
+    return pre
+
+
 def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     """The single atomic file-create that makes a run visible — ONE
     definition shared by every marker-committed store: ``commit_run`` (batch
-    publish and every streaming epoch), ``run_extraction`` (the extraction
-    results + lineage), ``save_index`` (persisted BM25 and IVF×PQ indexes),
-    IVF×PQ appends and dedup index snapshots. Refuses
+    publish, every streaming epoch and every dedup index snapshot),
+    ``run_extraction`` (the extraction results + lineage), ``save_index``
+    (persisted BM25 and IVF×PQ indexes) and IVF×PQ appends. It is the only
+    lease check on the write path: staging under a lease is harmless (the
+    dirs stay invisible), so the refusal sits at the commit point. Refuses
     while a maintenance lease is held on the same store: a marker committed
     mid-compaction would not be in the rebuilt marker set (the remaining
     probe-to-commit race is caught by the compaction's post-swap
@@ -163,8 +188,8 @@ def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     if read_maintenance_lease(spark, out_dir) is not None:
         raise MaintenanceInProgressError(
             f"commit blocked: store maintenance in progress at {out_dir} "
-            "(lease held) — retry after it finishes, or run the store's "
-            "recover function if it crashed"
+            "(lease held) — retry after it finishes, or run "
+            "recover_marker_store if it crashed"
         )
     fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
     fs.mkdirs(marker.getParent())
@@ -330,16 +355,14 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
     )
 
 
-def read_schema_store(spark: SparkSession, out_dir: str, table: str):
-    """The latest READABLE persisted store-level schema, or None (no run
-    committed yet). A torn write of the newest version file falls back to
-    the version before it — never to None, which would make the next
-    update's union start from scratch and drop prior columns."""
+def _latest_schema(spark: SparkSession, out_dir: str, table: str):
+    """(version, StructType) of the latest READABLE schema version, or None.
+    A torn newest version file falls back to the version before it."""
     import json as _json
 
     from pyspark.sql.types import StructType
 
-    for _, name in reversed(_schema_versions(spark, out_dir, table)):
+    for n, name in reversed(_schema_versions(spark, out_dir, table)):
         fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
         stream = fs.open(jpath)
         try:
@@ -349,10 +372,42 @@ def read_schema_store(spark: SparkSession, out_dir: str, table: str):
         try:
             d = _json.loads(data.decode())
             # nonce-wrapped (current) or bare StructType json (early r5)
-            return StructType.fromJson(d["schema"] if "schema" in d else d)
+            return n, StructType.fromJson(d["schema"] if "schema" in d else d)
         except Exception:
             continue  # torn version file — try the one before it
     return None
+
+
+def read_schema_store(spark: SparkSession, out_dir: str, table: str):
+    """The latest READABLE persisted store-level schema, or None (no run
+    committed yet). A torn write of the newest version file falls back to
+    the version before it — never to None, which would make the next
+    update's union start from scratch and drop prior columns."""
+    latest = _latest_schema(spark, out_dir, table)
+    return latest[1] if latest is not None else None
+
+
+def _read_table(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
+    """Every run dir of a table (committed or not): read with the stored
+    schema, or with ``mergeSchema`` for stores written before the schema
+    store existed. A table dir without ``run_id=`` partitions (a dedup
+    index written before the shared layout, with ``snap=`` dirs) raises
+    ValueError naming the path — never an unfiltered or empty read."""
+    stored = read_schema_store(spark, out_dir, table)
+    if stored is not None:
+        # Spark appends the run_id partition column to a user schema and
+        # NULL-fills fields absent from older files — mergeSchema semantics
+        # at zero footer cost
+        df = spark.read.schema(stored).parquet(f"{out_dir}/{table}")
+    else:
+        df = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/{table}")
+    if "run_id" not in df.columns:
+        raise ValueError(
+            f"{out_dir}/{table} has no run_id= run dirs (columns {df.columns}): "
+            "its layout predates the shared commit protocol. Rebuild it at a new "
+            "path (a dedup index: build_dedup_index from the corpus)"
+        )
+    return df
 
 
 def read_committed_table(spark: SparkSession, out_dir: str, table: str) -> DataFrame:
@@ -377,17 +432,9 @@ def read_committed_table(spark: SparkSession, out_dir: str, table: str) -> DataF
             f"no committed runs under {out_dir} (the _committed marker set is "
             "empty — a torn first run is invisible by design)"
         )
-    stored = read_schema_store(spark, out_dir, table)
-    if stored is not None:
-        # Spark appends the run_id partition column to a user schema and
-        # NULL-fills fields absent from older files — mergeSchema semantics
-        # at zero footer cost
-        df = spark.read.schema(stored).parquet(f"{out_dir}/{table}")
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/{table}")
     # partition filter on the committed id set: torn (marker-less) run dirs
     # are pruned at the directory level, never scanned
-    df = df.filter(F.col("run_id").isin(ids))
+    df = _read_table(spark, out_dir, table).filter(F.col("run_id").isin(ids))
     if "src_run_id" in df.columns:
         df = df.withColumn(
             "run_id", F.coalesce(F.col("src_run_id"), F.col("run_id"))
@@ -535,24 +582,12 @@ def compact_published_store(
     marker-dir swap is verified post-swap, and a run that slipped the
     probe-to-commit window triggers a full rollback that preserves it
     (``ConcurrentCommitError``). Crashes are adjudicated by
-    ``recover_published_store``; superseded run directories are reclaimed
-    by the separate ``vacuum_published_store`` step so concurrent readers
-    never lose files mid-scan.
+    ``recover_marker_store``; superseded run directories are reclaimed
+    by the separate ``vacuum_store`` step so concurrent readers never lose
+    files mid-scan.
     """
     compact_id = "compact" + uuid.uuid4().hex[:12]
-    acquire_maintenance_lease(
-        spark, out_dir, {"distinguished": compact_id, "pre_markers": []}
-    )
-    pre = committed_publish_ids(spark, out_dir)  # re-capture under the lease
-    # keep the lease body authoritative for recover: overwrite in place
-    # (we HOLD the lease — never release/re-acquire, that window would let
-    # a commit slip in unrecorded)
-    import json as _json
-
-    fs_l, lease = _fs(spark, f"{out_dir}/_compact_lease")
-    out_l = fs_l.create(lease, True)
-    out_l.write(bytearray(_json.dumps({"distinguished": compact_id, "pre_markers": pre}).encode()))
-    out_l.close()
+    pre = begin_maintenance(spark, out_dir, compact_id)
     targets = list(run_ids) if run_ids is not None else list(pre)
     unknown = [r for r in targets if r not in pre]
     if unknown:
@@ -563,26 +598,22 @@ def compact_published_store(
         raise ValueError("compact_published_store: nothing to compact")
 
     for table in ("published", "quarantine"):
-        stored = read_schema_store(spark, out_dir, table)
-        if stored is not None:
-            df = spark.read.schema(stored).parquet(f"{out_dir}/{table}")
-        else:
-            df = spark.read.option("mergeSchema", "true").parquet(f"{out_dir}/{table}")
-        df = df.filter(F.col("run_id").isin(targets))
+        df = _read_table(spark, out_dir, table).filter(F.col("run_id").isin(targets))
         if "src_run_id" in df.columns:  # re-compacting an already-compacted store
             df = df.withColumn(
                 "_src", F.coalesce(F.col("src_run_id"), F.col("run_id"))
             ).drop("src_run_id")
         else:
             df = df.withColumn("_src", F.col("run_id"))
-        out = df.drop("run_id").withColumnRenamed("_src", "src_run_id")
-        out.write.mode("overwrite").parquet(f"{out_dir}/{table}/run_id={compact_id}")
-        update_schema_store(spark, out_dir, table, out.schema)
+        stage_table(
+            spark, out_dir, compact_id, table,
+            df.drop("run_id").withColumnRenamed("_src", "src_run_id"),
+        )
     if _test_hook_before_swap is not None:
         _test_hook_before_swap()
 
     new_markers = sorted(set(pre) - set(targets)) + [compact_id]
-    swap_marker_dir(spark, out_dir, new_markers, pre, "recover_published_store")
+    swap_marker_dir(spark, out_dir, new_markers, pre)
     return compact_id
 
 
@@ -591,17 +622,15 @@ def swap_marker_dir(
     root: str,
     new_markers: list[str],
     pre_markers: list[str],
-    recover_name: str,
 ) -> None:
     """Replace ``{root}/_committed`` with ``new_markers`` — the ONE
     maintenance-swap implementation every marker-committed store uses
     (publish compaction here, index compaction in operators/dedup_index),
     so the racer handling cannot drift between stores.
 
-    Caller must HOLD the maintenance lease with body
-    ``{"distinguished": <the new marker pre_markers lacks>, "pre_markers":
-    [...]}``; this function releases it on every exit path except a raised
-    IOError (crash-equivalent — ``recover_marker_store`` adjudicates).
+    Caller must HOLD the maintenance lease (``begin_maintenance``); this
+    function releases it on every exit path except a raised IOError
+    (crash-equivalent — ``recover_marker_store`` adjudicates).
 
     Racer handling — a commit whose lease probe passed before the lease
     landed can appear in THREE windows, all resolved as "the racer wins,
@@ -618,22 +647,17 @@ def swap_marker_dir(
        (for the publish store that is exactly right; the dedup index
        additionally documents the possible duplicate-signature overlap).
     """
-    import json as _json
-
     fs, committed = _fs(spark, f"{root}/_committed")
     nxt = _fs(spark, f"{root}/_committed_next")[1]
     old = _fs(spark, f"{root}/_committed_old")[1]
     # record the full plan in the HELD lease so recover can tell racer
     # markers from our own in every crash state
     dist = sorted(set(new_markers) - set(pre_markers))
-    lease_body = {
+    _write_lease(spark, root, {
         "distinguished": dist[0] if dist else new_markers[-1],
         "pre_markers": list(pre_markers),
         "new_markers": list(new_markers),
-    }
-    out_l = fs.create(_fs(spark, f"{root}/_compact_lease")[1], True)
-    out_l.write(bytearray(_json.dumps(lease_body).encode()))
-    out_l.close()
+    })
     for stale in (nxt, old):  # debris from a previously recovered pass
         if fs.exists(stale):
             fs.delete(stale, True)
@@ -668,12 +692,12 @@ def swap_marker_dir(
         if fs.exists(committed) and not fs.delete(committed, True):
             raise IOError(
                 f"maintenance rollback: could not retract marker dir at {root} "
-                f"(run {recover_name})"
+                "(run recover_marker_store)"
             )
         if not fs.rename(old, committed):
             raise IOError(
                 f"maintenance rollback: could not restore marker dir at {root} "
-                f"(run {recover_name})"
+                "(run recover_marker_store)"
             )
         if fs.exists(nxt):
             fs.delete(nxt, True)
@@ -694,7 +718,7 @@ def swap_marker_dir(
             _rollback([], "inside")
         raise IOError(
             f"maintenance swap: could not activate new marker dir at {root} "
-            f"(run {recover_name})"
+            "(run recover_marker_store)"
         )
     # post-activation audit: unwind a nested move (the racer-dir-existed
     # rename semantics that return true), then verify the live set
@@ -726,9 +750,19 @@ def recover_marker_store(spark: SparkSession, root: str) -> str:
     """Adjudicate a crashed maintenance swap from the lease record:
     complete it or roll it back. Idempotent; 'clean' when nothing is wrong.
     ONE implementation for every marker-committed store (publish archive,
-    dedup index). A mid-swap racer's markers found in a live dir the
-    distinguished marker never reached are merged into the restored set —
-    committed markers are never stranded in ``_committed_old``."""
+    dedup index). Decision table (the lease body records the distinguished
+    marker, the marker set it superseded and, once the swap started, the
+    new set):
+
+    - no lease → 'clean';
+    - live ``_committed`` holds the distinguished marker: racers in the
+      aside dir or live dir → ROLL BACK (restore the aside set, racers
+      folded in; the maintenance pass loses); no racers, or no aside dir
+      left (the swap's audit already passed) → COMPLETE;
+    - live ``_committed`` missing or pre-swap → ROLL BACK: restore the
+      aside dir, merging in any markers a mid-swap racer committed into a
+      recreated live dir — committed markers are never stranded in
+      ``_committed_old``."""
     lease = read_maintenance_lease(spark, root)
     if lease is None:
         return "clean"
@@ -795,76 +829,54 @@ def recover_marker_store(spark: SparkSession, root: str) -> str:
     return "rolled_back"
 
 
-def recover_published_store(spark: SparkSession, out_dir: str) -> str:
-    """Adjudicate a crashed publish-store compaction (see
-    ``recover_marker_store`` — the shared implementation)."""
-    return recover_marker_store(spark, out_dir)
-
-
-def vacuum_published_store(
-    spark: SparkSession, out_dir: str, grace_seconds: int = 86400
-) -> list[str]:
-    """Delete run directories whose marker is gone (compacted away, or torn
-    runs that never committed) — the deferred-GC half of compaction. Refuses
-    under a live lease. Returns the removed run_ids.
+def vacuum_store(spark: SparkSession, root: str, grace_seconds: int = 86400) -> list[str]:
+    """The deferred-GC half of compaction, one for every marker-committed
+    store: delete run directories whose marker is gone (compacted away, or
+    torn runs that never committed) and prune superseded schema versions.
+    A table is each child dir of ``root`` whose name does not start with
+    ``_`` and that has a stored schema (``stage_table`` writes the schema
+    before any data, so every run dir the protocol wrote has one); only
+    its ``run_id=`` dirs are candidates. Anything else is never touched: a
+    pre-protocol extraction store's unmarked ``results|lineage/run_id=``
+    dirs (no schema store), a pre-protocol index's ``snap=`` dirs, a
+    persisted index's files. Refuses under a live lease. Returns the
+    removed run_ids.
 
     ``grace_seconds`` (Iceberg/Delta vacuum-retention analogue): a
     marker-less directory modified within the window is SKIPPED — it may be
-    an IN-FLIGHT publish that has written data but not yet committed its
-    marker; deleting it would leave a committed run with missing data.
-    Only drop the grace (0) when no writer can be active.
+    an IN-FLIGHT commit that has written data but not yet its marker;
+    deleting it would leave a committed run with missing data. Only drop
+    the grace (0) when no writer can be active.
     """
-    if read_maintenance_lease(spark, out_dir) is not None:
+    if read_maintenance_lease(spark, root) is not None:
         raise MaintenanceInProgressError(
-            f"vacuum refused: maintenance lease held at {out_dir} "
-            "(finish or recover_published_store first)"
+            f"vacuum refused: maintenance lease held at {root} "
+            "(finish or recover_marker_store first)"
         )
-    live = set(committed_publish_ids(spark, out_dir))
+    live = set(committed_publish_ids(spark, root))
     now_ms = spark._jvm.System.currentTimeMillis()
-    deleted: list[str] = []
-    for table in ("published", "quarantine"):
-        tfs, tdir = _fs(spark, f"{out_dir}/{table}")
-        if not tfs.exists(tdir):
-            continue
-        for st in tfs.listStatus(tdir):
+    fs, jroot = _fs(spark, root)
+    tables = [
+        st.getPath()
+        for st in (fs.listStatus(jroot) if fs.exists(jroot) else [])
+        if st.isDirectory() and not st.getPath().getName().startswith("_")
+    ]
+    deleted: set[str] = set()
+    for tdir in tables:
+        latest = _latest_schema(spark, root, tdir.getName())
+        if latest is None:
+            continue  # not written through the protocol
+        for st in fs.listStatus(tdir):
             name = st.getPath().getName()
             if not name.startswith("run_id=") or name[len("run_id="):] in live:
                 continue
             if now_ms - st.getModificationTime() < grace_seconds * 1000:
                 continue  # possibly an in-flight commit — not torn, just young
-            tfs.delete(st.getPath(), True)
-            if name[len("run_id="):] not in deleted:
-                deleted.append(name[len("run_id="):])
-    # prune superseded schema versions: keep everything from the latest
-    # READABLE version up (a torn newest file must keep its predecessor)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    for table in ("published", "quarantine"):
-        versions = _schema_versions(spark, out_dir, table)
-        keep_from = None
-        for n, name in reversed(versions):
-            fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
-            stream = fs.open(jpath)
-            try:
-                data = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-            try:
-                # same dual-format parse as read_schema_store: current
-                # versions are nonce-wrapped {"nonce":…,"schema":…}; a raw
-                # StructType.fromJson on the wrapper always fails, which
-                # would anchor keep_from to a stale bare-format version
-                # (or never prune at all on current-format stores)
-                d = _json.loads(data.decode())
-                StructType.fromJson(d["schema"] if "schema" in d else d)
-                keep_from = n
-                break
-            except Exception:
-                continue
-        for n, name in versions:
-            if keep_from is not None and n < keep_from:
-                fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
-                fs.delete(jpath, False)
+            fs.delete(st.getPath(), True)
+            deleted.add(name[len("run_id="):])
+        # keep everything from the latest READABLE version up (a torn
+        # newest file must keep its predecessor)
+        for n, name in _schema_versions(spark, root, tdir.getName()):
+            if n < latest[0]:
+                fs.delete(_fs(spark, f"{root}/_schema/{name}")[1], False)
     return sorted(deleted)

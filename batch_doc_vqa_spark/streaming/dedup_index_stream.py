@@ -8,8 +8,8 @@ id as the snapshot id, so the index grows exactly-once:
 
 - the epoch's PAIRS land at ``out_dir/pairs/run_id=e<batch>`` through
   ``commit_run`` (a torn epoch is invisible to ``read_stream_pairs``);
-- the epoch's INDEX snapshot commits through the index's own marker
-  protocol (re-ingestion anti-join ⇒ a replayed epoch never bloats it);
+- the epoch's INDEX snapshot commits through ``commit_run`` into the
+  index store (re-ingestion anti-join ⇒ a replayed epoch never bloats it);
 - the one asymmetric crash window — index snapshot committed, pairs output
   not yet — is healed by ``dedup_index.pairs_for_snapshot``: the retry
   recomputes the epoch's pairs FROM THE INDEX ALONE (signatures are
@@ -33,12 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.dedup_index import (
-    committed_snapshots,
-    incremental_dedup_pairs,
-    pairs_for_snapshot,
-)
-from ..plans.publish import read_committed_table
+from ..operators.dedup_index import incremental_dedup_pairs, pairs_for_snapshot
+from ..plans.publish import committed_publish_ids, read_committed_table
 from .publish_stream import epoch_stream
 
 
@@ -71,7 +67,7 @@ def dedup_index_stream(
         import logging
 
         sess = batch.sparkSession
-        snaps = committed_snapshots(sess, index_path)
+        snaps = committed_publish_ids(sess, index_path)
         if run_id in snaps:
             # crashed between the index commit and the pairs write: the
             # docs are already indexed, so recompute the pairs from the

@@ -10,7 +10,15 @@ from pyspark.sql import functions as F
 
 from batch_doc_vqa_spark.operators import dedup
 from batch_doc_vqa_spark.operators.dedup_index import build_dedup_index, incremental_dedup_pairs
-from batch_doc_vqa_spark.plans.publish import release_maintenance_lease
+from batch_doc_vqa_spark.plans.publish import (
+    ConcurrentCommitError,
+    MaintenanceInProgressError,
+    acquire_maintenance_lease,
+    committed_publish_ids,
+    recover_marker_store,
+    release_maintenance_lease,
+    vacuum_store,
+)
 
 WORDS = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu".split()
 
@@ -153,7 +161,7 @@ def test_torn_snapshot_is_invisible_and_retry_heals(spark, corpora, tmp_path):
     assert read_index_sigs(spark, path).count() == 30 + new.count()
     # tear snapA: delete its marker — the data dirs stay on disk
     os.remove(f"{path}/_committed/snapA")
-    assert os.path.isdir(f"{path}/sigs/snap=snapA")
+    assert os.path.isdir(f"{path}/sigs/run_id=snapA")
     assert read_index_sigs(spark, path).count() == 30  # invisible
     assert read_index_bands(spark, path).filter("_id like 'new%'").count() == 0
     # retry heals: the snapshot's ids look un-indexed again and recommit
@@ -168,37 +176,29 @@ def test_incremental_commit_blocked_during_compaction(spark, corpora, tmp_path):
     """The lease enforces single-writer: an incremental commit attempted
     while a compaction is in flight fails LOUDLY instead of being silently
     lost by the compaction's marker swap (VERDICT r4 #1)."""
-    from batch_doc_vqa_spark.operators.dedup_index import (
-        CompactionInProgressError,
-        _acquire_lease,
-    )
-
     old, new = corpora
     path = str(tmp_path / "idx_lease")
     build_dedup_index(old, "doc_id", "text", path)
-    _acquire_lease(spark, path, {"snap": "compact-test", "pre_markers": ["base"]})
-    with pytest.raises(CompactionInProgressError):
+    acquire_maintenance_lease(spark, path, {"snap": "compact-test", "pre_markers": ["base"]})
+    with pytest.raises(MaintenanceInProgressError):
         incremental_dedup_pairs(spark, new, "doc_id", "text", path,
                                 update_index=True, snapshot_id="snapX")
     # the blocked attempt committed nothing
-    from batch_doc_vqa_spark.operators.dedup_index import committed_snapshots
-    assert committed_snapshots(spark, path) == ["base"]
+    assert committed_publish_ids(spark, path) == ["base"]
     release_maintenance_lease(spark, path)
     incremental_dedup_pairs(spark, new, "doc_id", "text", path,
                             update_index=True, snapshot_id="snapX")
-    assert committed_snapshots(spark, path) == ["base", "snapX"]
+    assert committed_publish_ids(spark, path) == ["base", "snapX"]
 
 
 def test_compaction_rolls_back_and_preserves_racing_snapshot(spark, corpora, tmp_path):
     """A snapshot that slips past the lease probe and commits mid-compaction
     (simulated via the pre-swap hook committing a marker directly) is
     PRESERVED: the compaction detects it post-swap, restores the previous
-    marker dir exactly, and raises ConcurrentSnapshotError."""
+    marker dir exactly, and raises ConcurrentCommitError."""
     from batch_doc_vqa_spark.operators.dedup import banded_rows, minhash_signatures
     from batch_doc_vqa_spark.operators.dedup_index import (
         INDEX_PARAMS,
-        ConcurrentSnapshotError,
-        committed_snapshots,
         compact_dedup_index,
         read_index_sigs,
     )
@@ -216,36 +216,34 @@ def test_compaction_rolls_back_and_preserves_racing_snapshot(spark, corpora, tmp
                                   p["seed"], p["base_hash"])
         bands = banded_rows(sigs, p["num_hashes"], p["bands"], p["base_hash"])
         sigs.select("_id", "signature").write.mode("overwrite").parquet(
-            f"{path}/sigs/snap=racer")
+            f"{path}/sigs/run_id=racer")
         bands.select("_id", "band_idx", "band_hash").write.mode("overwrite").parquet(
-            f"{path}/bands/snap=racer")
+            f"{path}/bands/run_id=racer")
         open(f"{path}/_committed/racer", "w").close()
 
-    with pytest.raises(ConcurrentSnapshotError):
+    with pytest.raises(ConcurrentCommitError):
         compact_dedup_index(spark, old, "doc_id", "text", path,
                             _test_hook_before_swap=racer_commit)
     # rollback: both the original snapshot AND the racer survive, readable
-    assert committed_snapshots(spark, path) == ["base", "racer"]
+    assert committed_publish_ids(spark, path) == ["base", "racer"]
     assert read_index_sigs(spark, path).count() == 30 + new.count()
     # the lease was released — a re-run compaction (now including the racer
     # docs in current state) succeeds
     current = old.unionByName(new)
     compact_dedup_index(spark, current, "doc_id", "text", path)
-    assert len(committed_snapshots(spark, path)) == 1
+    assert len(committed_publish_ids(spark, path)) == 1
     assert read_index_sigs(spark, path).count() == 30 + new.count()
 
 
 def test_recover_completes_or_rolls_back_crashed_compaction(spark, corpora, tmp_path):
     """Crash between the swap renames leaves NO live marker dir; readers
-    fail loudly (never silently-empty) and recover_dedup_index restores the
+    fail loudly (never silently-empty) and recover_marker_store restores the
     exact pre-compaction state (ADVICE r4: no manual recovery)."""
     import os
 
     from batch_doc_vqa_spark.operators.dedup_index import (
-        committed_snapshots,
         compact_dedup_index,
         read_index_sigs,
-        recover_dedup_index,
     )
 
     old, _ = corpora
@@ -262,36 +260,31 @@ def test_recover_completes_or_rolls_back_crashed_compaction(spark, corpora, tmp_
 
     with pytest.raises(Crash):
         compact_dedup_index(spark, old, "doc_id", "text", path, _test_hook_before_swap=boom)
-    assert recover_dedup_index(spark, path) == "rolled_back"
-    assert committed_snapshots(spark, path) == ["base"]
+    assert recover_marker_store(spark, path) == "rolled_back"
+    assert committed_publish_ids(spark, path) == ["base"]
     assert read_index_sigs(spark, path).count() == 30
 
     # crash AFTER the aside rename (no live _committed): simulate by moving
     # the live dir aside and re-planting the lease the crashed run held
-    from batch_doc_vqa_spark.operators.dedup_index import _acquire_lease
-
     os.rename(f"{path}/_committed", f"{path}/_committed_old")
-    _acquire_lease(spark, path, {"snap": "compact-crashed", "pre_markers": ["base"]})
+    acquire_maintenance_lease(spark, path, {"snap": "compact-crashed", "pre_markers": ["base"]})
     with pytest.raises(FileNotFoundError):
         read_index_sigs(spark, path)  # loud, not silently empty
-    assert recover_dedup_index(spark, path) == "rolled_back"
-    assert committed_snapshots(spark, path) == ["base"]
+    assert recover_marker_store(spark, path) == "rolled_back"
+    assert committed_publish_ids(spark, path) == ["base"]
     assert read_index_sigs(spark, path).count() == 30
-    assert recover_dedup_index(spark, path) == "clean"  # idempotent
+    assert recover_marker_store(spark, path) == "clean"  # idempotent
 
 
 def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
     """Compaction defers GC (concurrent readers keep scanning old snapshot
-    files); vacuum_dedup_index is the separate reclaim step and refuses to
+    files); vacuum_store is the separate reclaim step and refuses to
     run under a live lease (ADVICE r4)."""
     import os
 
     from batch_doc_vqa_spark.operators.dedup_index import (
-        CompactionInProgressError,
-        _acquire_lease,
         compact_dedup_index,
         read_index_sigs,
-        vacuum_dedup_index,
     )
 
     old, new = corpora
@@ -304,21 +297,21 @@ def test_vacuum_reclaims_only_uncommitted_snapshots(spark, corpora, tmp_path):
     compact_dedup_index(spark, old.unionByName(new), "doc_id", "text", path)
     # old snapshot data dirs survive the compaction → the pre-swap reader
     # still scans without FileNotFound
-    assert os.path.isdir(f"{path}/sigs/snap=base") and os.path.isdir(f"{path}/sigs/snap=snapV")
+    assert os.path.isdir(f"{path}/sigs/run_id=base") and os.path.isdir(f"{path}/sigs/run_id=snapV")
     assert pre_reader.count() == 30 + new.count()
 
-    _acquire_lease(spark, path, {"snap": "x", "pre_markers": []})
-    with pytest.raises(CompactionInProgressError):
-        vacuum_dedup_index(spark, path)
+    acquire_maintenance_lease(spark, path, {"snap": "x", "pre_markers": []})
+    with pytest.raises(MaintenanceInProgressError):
+        vacuum_store(spark, path)
     release_maintenance_lease(spark, path)
     # the default retention grace protects a marker-less dir that might be
     # an IN-FLIGHT commit (data written, marker not yet landed): these dirs
     # are seconds old, so the default-grace vacuum must not touch them
-    assert vacuum_dedup_index(spark, path) == []
-    assert os.path.isdir(f"{path}/sigs/snap=base")
-    deleted = vacuum_dedup_index(spark, path, grace_seconds=0)
+    assert vacuum_store(spark, path) == []
+    assert os.path.isdir(f"{path}/sigs/run_id=base")
+    deleted = vacuum_store(spark, path, grace_seconds=0)
     assert set(deleted) == {"base", "snapV"}
-    assert not os.path.isdir(f"{path}/sigs/snap=base")
+    assert not os.path.isdir(f"{path}/sigs/run_id=base")
     assert read_index_sigs(spark, path).count() == 30 + new.count()  # live snapshot intact
 
 
@@ -353,3 +346,60 @@ def test_pairs_for_snapshot_rejects_random_ids_sorting_after_target(
     # explicit override: the random snapshot genuinely ingested later here
     healed = pairs_for_snapshot(spark, path, "e00000001", allow_unsorted_ids=True)
     assert healed.count() >= 0
+
+
+def test_pre_protocol_index_fails_loudly_and_vacuum_leaves_it(spark, corpora, tmp_path):
+    """An index written before the shared layout (committed markers over
+    ``sigs|bands/snap=<id>`` dirs) has no ``run_id`` column: its reads
+    raise instead of returning an empty index (which would make every doc
+    look new), and ``vacuum_store`` only ever deletes ``run_id=`` dirs."""
+    import os
+    import re
+
+    from batch_doc_vqa_spark.operators.dedup import banded_rows, minhash_signatures
+    from batch_doc_vqa_spark.operators.dedup_index import (
+        INDEX_PARAMS,
+        pairs_for_snapshot,
+        read_index_sigs,
+    )
+
+    old, _ = corpora
+    path = str(tmp_path / "idx_legacy")
+    p = INDEX_PARAMS
+    sigs = minhash_signatures(old, "doc_id", "text", p["n"], p["num_hashes"],
+                              p["seed"], p["base_hash"])
+    bands = banded_rows(sigs, p["num_hashes"], p["bands"], p["base_hash"])
+    sigs.select("_id", "signature").write.parquet(f"{path}/sigs/snap=base")
+    bands.select("_id", "band_idx", "band_hash").write.parquet(f"{path}/bands/snap=base")
+    os.makedirs(f"{path}/_committed")
+    open(f"{path}/_committed/base", "w").close()
+
+    legacy = re.escape(f"{path}/sigs has no run_id= run dirs") + ".*predates.*build_dedup_index"
+    with pytest.raises(ValueError, match=legacy):
+        read_index_sigs(spark, path).count()
+    with pytest.raises(ValueError, match=legacy):
+        incremental_dedup_pairs(spark, old, "doc_id", "text", path).count()
+    with pytest.raises(ValueError, match="predates"):
+        pairs_for_snapshot(spark, path, "base")
+    assert vacuum_store(spark, path, grace_seconds=0) == []
+    assert os.path.isdir(f"{path}/sigs/snap=base") and os.path.isdir(f"{path}/bands/snap=base")
+
+
+def test_pairs_for_snapshot_reads_one_marker_set(spark, corpora, tmp_path, monkeypatch):
+    """The crash-heal recompute filters both tables on the marker set it
+    captured once: a compaction swap landing mid-read (simulated by a
+    later listing that no longer holds the target) must not filter the
+    target snapshot out and heal the epoch with zero pairs."""
+    from batch_doc_vqa_spark.operators.dedup_index import pairs_for_snapshot
+    from batch_doc_vqa_spark.plans import publish
+
+    old, new = corpora
+    path = str(tmp_path / "idx_one_set")
+    build_dedup_index(old, "doc_id", "text", path)
+    incremental_dedup_pairs(spark, new, "doc_id", "text", path,
+                            threshold=0.5, snapshot_id="e00000001").collect()
+    expected = sorted(tuple(r) for r in pairs_for_snapshot(spark, path, "e00000001").collect())
+    assert expected
+    monkeypatch.setattr(publish, "committed_publish_ids", lambda *a: ["compact-later"])
+    healed = sorted(tuple(r) for r in pairs_for_snapshot(spark, path, "e00000001").collect())
+    assert healed == expected

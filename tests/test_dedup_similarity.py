@@ -356,6 +356,23 @@ def test_ivf_topk_recall_vs_exact(vectors):
     assert (0, 100) in ivf and (1, 101) in ivf
 
 
+def test_ivf_topk_zero_vector_fails_loudly(spark, vectors):
+    """A zero vector has no direction: ``cosine_sim`` divides by its zero
+    norm, which Spark's ANSI mode (the default, kept by session.py) raises
+    as DIVIDE_BY_ZERO. So the ``min(struct(-cos, …))`` cell assignment never
+    orders a NaN cosine and never returns a silent assignment for it."""
+    from pyspark.errors import ArithmeticException
+
+    zero = spark.createDataFrame([(999, [0.0] * 16)], "vec_id long, embedding array<double>")
+    queries = vectors.filter(F.col("vec_id") == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        similarity.ivf_cosine_topk(
+            vectors.unionByName(zero), queries, n_centroids=8, nprobe=4, k=3
+        ).collect()
+
+
 def test_minhash_max_bucket_caps_megabuckets(spark, corpus):
     """max_bucket=None is exact banding; a generous cap keeps all true pairs
     (near-dups share rare bands); a cap of 1 kills every bucket."""

@@ -515,19 +515,62 @@ def test_rerun_with_committed_run_id_is_refused(spark, tmp_path):
 
     out = str(tmp_path / "reuse")
     run_extraction(spark, pages_df(spark, 40, seed=SEED), out, run_id="once", num_buckets=4)
-
-    def snapshot():
-        res = sorted((r["url"], r["text"]) for r in read_results(spark, out).collect())
-        lin = sorted(
-            (r["run_id"], r["bucket"], r["n_docs"], r["n_bytes"])
-            for r in read_lineage(spark, out).collect()
-        )
-        return res, lin
-
-    before = snapshot()
+    before = _store_rows(spark, out)
     with pytest.raises(FileExistsError, match="once"):
         run_extraction(spark, pages_df(spark, 60, seed=SEED), out, run_id="once", num_buckets=4)
-    assert snapshot() == before and len(before[0]) == 40
+    assert _store_rows(spark, out) == before and len(before[0]) == 40
+
+
+def _store_rows(spark, out):
+    """(url, text) results and (run_id, bucket, n_docs, n_bytes) lineage."""
+    res = sorted((r["url"], r["text"]) for r in read_results(spark, out).collect())
+    lin = sorted(
+        (r["run_id"], r["bucket"], r["n_docs"], r["n_bytes"])
+        for r in read_lineage(spark, out).collect()
+    )
+    return res, lin
+
+
+def test_vacuum_store_sweeps_noop_resume_dirs(spark, tmp_path):
+    """A no-op resume commits nothing but leaves an empty, uncommitted
+    ``results/run_id=<id>`` dir; ``vacuum_store`` sweeps it, and the
+    committed results and lineage read back unchanged."""
+    import os
+
+    from batch_doc_vqa_spark.plans.publish import vacuum_store
+
+    out = str(tmp_path / "sweep")
+    pages = pages_df(spark, 40, seed=SEED)
+    run_extraction(spark, pages, out, run_id="first", num_buckets=4)
+    assert run_extraction(spark, pages, out, run_id="noop", num_buckets=4)["n_docs"] == 0
+    assert os.path.isdir(f"{out}/results/run_id=noop")
+    before = _store_rows(spark, out)
+    assert vacuum_store(spark, out, grace_seconds=0) == ["noop"]
+    assert not os.path.isdir(f"{out}/results/run_id=noop")
+    assert _store_rows(spark, out) == before and len(before[0]) == 40
+
+
+def test_vacuum_store_leaves_pre_protocol_extraction_store(spark, tmp_path):
+    """A store written before the marker protocol holds unmarked
+    ``results|lineage/run_id=`` dirs and no schema store. ``vacuum_store``
+    must not read them as torn runs and delete them (no marker is live, so
+    every dir would qualify); ``run_extraction`` refuses the store."""
+    import os
+
+    import pytest
+
+    from batch_doc_vqa_spark.plans.publish import vacuum_store
+
+    out = str(tmp_path / "pre_protocol")
+    spark.createDataFrame([("u1", "text")], "url string, text string") \
+        .write.parquet(f"{out}/results/run_id=old")
+    spark.createDataFrame([(0, 1)], "bucket int, n_docs long") \
+        .write.parquet(f"{out}/lineage/run_id=old")
+    assert vacuum_store(spark, out, grace_seconds=0) == []
+    assert os.path.isdir(f"{out}/results/run_id=old")
+    assert os.path.isdir(f"{out}/lineage/run_id=old")
+    with pytest.raises(FileExistsError, match="before the marker-commit protocol"):
+        run_extraction(spark, pages_df(spark, 4, seed=SEED), out, run_id="new", num_buckets=2)
 
 
 def test_torn_run_leaves_no_trace_and_no_lineage_hole(spark, tmp_path, monkeypatch):

@@ -19,9 +19,9 @@ from batch_doc_vqa_spark.plans.publish import (
     read_published,
     read_quarantine,
     read_schema_store,
-    recover_published_store,
+    recover_marker_store,
     release_maintenance_lease,
-    vacuum_published_store,
+    vacuum_store,
 )
 
 
@@ -59,7 +59,7 @@ def test_compaction_preserves_output_and_shrinks_markers(spark, tmp_path):
     assert run_ids == {"r1", "r2", "r3"}
 
     # vacuum reclaims the superseded run dirs; output still identical
-    deleted = vacuum_published_store(spark, out, grace_seconds=0)
+    deleted = vacuum_store(spark, out, grace_seconds=0)
     assert set(deleted) == {"r1", "r2"}
     assert not os.path.isdir(f"{out}/published/run_id=r1")
     assert _rows(read_published(spark, out)) == pub_before
@@ -67,7 +67,7 @@ def test_compaction_preserves_output_and_shrinks_markers(spark, tmp_path):
 
     # a full re-compaction (everything incl. the prior compact partition)
     cid2 = compact_published_store(spark, out)
-    vacuum_published_store(spark, out, grace_seconds=0)
+    vacuum_store(spark, out, grace_seconds=0)
     assert committed_publish_ids(spark, out) == [cid2]
     assert _rows(read_published(spark, out)) == pub_before
 
@@ -135,7 +135,7 @@ def test_store_compaction_rolls_back_on_racing_run(spark, tmp_path):
     assert _rows(pub.filter("run_id != 'racer'")) == pub_before
 
     cid = compact_published_store(spark, out)
-    vacuum_published_store(spark, out, grace_seconds=0)
+    vacuum_store(spark, out, grace_seconds=0)
     assert committed_publish_ids(spark, out) == [cid]
     assert {r["doc_id"] for r in read_published(spark, out).collect()} >= {"dr", "d1a"}
 
@@ -153,7 +153,7 @@ def test_recover_store_after_crashes(spark, tmp_path):
 
     with pytest.raises(Crash):  # crash before the swap
         compact_published_store(spark, out, _test_hook_before_swap=boom)
-    assert recover_published_store(spark, out) == "rolled_back"
+    assert recover_marker_store(spark, out) == "rolled_back"
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3"]
     assert _rows(read_published(spark, out)) == pub_before
 
@@ -163,11 +163,11 @@ def test_recover_store_after_crashes(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         read_published(spark, out)  # loud, never silently empty
     with pytest.raises(MaintenanceInProgressError):
-        vacuum_published_store(spark, out, grace_seconds=0)  # vacuum refuses mid-crash
-    assert recover_published_store(spark, out) == "rolled_back"
+        vacuum_store(spark, out, grace_seconds=0)  # vacuum refuses mid-crash
+    assert recover_marker_store(spark, out) == "rolled_back"
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3"]
     assert _rows(read_published(spark, out)) == pub_before
-    assert recover_published_store(spark, out) == "clean"
+    assert recover_marker_store(spark, out) == "clean"
 
 
 def test_schema_store_versioned_cas_never_loses_columns(spark, tmp_path):
@@ -219,7 +219,7 @@ def test_vacuum_grace_protects_in_flight_runs(spark, tmp_path):
     # an in-flight run: data written, marker not yet committed
     spark.createDataFrame([("dx", "inflight")], "doc_id string, text string") \
         .write.parquet(f"{out}/published/run_id=rX")
-    assert vacuum_published_store(spark, out) == []  # default grace: skipped
+    assert vacuum_store(spark, out) == []  # default grace: skipped
     assert os.path.isdir(f"{out}/published/run_id=rX")
     # the writer then commits; the run reads back complete
     spark.createDataFrame([], "doc_id string, text string, reject_reason string") \
@@ -231,7 +231,7 @@ def test_vacuum_grace_protects_in_flight_runs(spark, tmp_path):
     # once genuinely torn (grace 0), vacuum reclaims
     spark.createDataFrame([("dy", "torn")], "doc_id string, text string") \
         .write.parquet(f"{out}/published/run_id=rY")
-    assert "rY" in vacuum_published_store(spark, out, grace_seconds=0)
+    assert "rY" in vacuum_store(spark, out, grace_seconds=0)
 
 
 def test_recover_merges_mid_swap_racer_markers(spark, tmp_path):
@@ -252,7 +252,7 @@ def test_recover_merges_mid_swap_racer_markers(spark, tmp_path):
     acquire_maintenance_lease(
         spark, out, {"distinguished": "cZ", "pre_markers": ["r1", "r2", "r3"]}
     )
-    assert recover_published_store(spark, out) == "rolled_back"
+    assert recover_marker_store(spark, out) == "rolled_back"
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3", "racer"]
     pub = read_published(spark, out)
     assert {r["doc_id"] for r in pub.filter("run_id = 'racer'").collect()} == {"dr"}
@@ -281,7 +281,7 @@ def test_recover_preserves_window3_racer_in_live_dir(spark, tmp_path):
     acquire_maintenance_lease(spark, out, {
         "distinguished": cid, "pre_markers": ["r1", "r2", "r3"], "new_markers": [cid],
     })
-    res = recover_published_store(spark, out)
+    res = recover_marker_store(spark, out)
     assert res.startswith("rolled_back")
     assert committed_publish_ids(spark, out) == ["r1", "r2", "r3", "racer3"]
     assert {r["doc_id"] for r in read_published(spark, out)
@@ -309,14 +309,14 @@ def test_recover_post_audit_crash_is_completed_not_rollback(spark, tmp_path):
     acquire_maintenance_lease(spark, out, {
         "distinguished": cid, "pre_markers": ["r1", "r2", "r3"], "new_markers": [cid],
     })
-    res = recover_published_store(spark, out)
+    res = recover_marker_store(spark, out)
     assert res.startswith("completed")
     # compacted marker survived alongside the racer; data intact
     assert committed_publish_ids(spark, out) == sorted([cid, "racerP"])
     pub_after = read_published(spark, out)
     assert _rows(pub_after.filter("run_id != 'racerP'")) == pub_before
     # and vacuum must NOT reclaim the compacted data
-    vacuum_published_store(spark, out, grace_seconds=0)
+    vacuum_store(spark, out, grace_seconds=0)
     assert _rows(read_published(spark, out).filter("run_id != 'racerP'")) == pub_before
 
 
@@ -338,7 +338,7 @@ def test_vacuum_prunes_superseded_schema_versions(spark, tmp_path):
         )
     versions = _schema_versions(spark, out, "published")
     assert len(versions) >= 3
-    vacuum_published_store(spark, out, grace_seconds=0)
+    vacuum_store(spark, out, grace_seconds=0)
     kept = _schema_versions(spark, out, "published")
     assert kept == [versions[-1]]  # only the latest readable version survives
     stored = read_schema_store(spark, out, "published")

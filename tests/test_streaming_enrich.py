@@ -312,11 +312,11 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
 
     from batch_doc_vqa_spark.operators.dedup_index import (
         build_dedup_index,
-        committed_snapshots,
         incremental_dedup_pairs,
         pairs_for_snapshot,
         read_index_sigs,
     )
+    from batch_doc_vqa_spark.plans.publish import committed_publish_ids
     from batch_doc_vqa_spark.streaming.dedup_index_stream import (
         dedup_index_stream,
         read_stream_pairs,
@@ -339,7 +339,7 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
     q.awaitTermination(120)
     pairs0 = {(r["id_a"], r["id_b"]) for r in read_stream_pairs(spark, out).collect()}
     assert pairs0 == {("base0", "n0")}
-    assert committed_snapshots(spark, idx) == ["base", "e00000000"]
+    assert committed_publish_ids(spark, idx) == ["base", "e00000000"]
     assert read_index_sigs(spark, idx).count() == 10  # 8 base + 2 new
 
     # epoch 1: dup of the EPOCH-0 doc — with a REAL injected crash in the
@@ -353,7 +353,7 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
     with pytest.raises(Exception, match="fault injection"):
         q2.awaitTermination(120)
     # the window state: index grew, but epoch 1's pairs are uncommitted
-    assert "e00000001" in committed_snapshots(spark, idx)
+    assert "e00000001" in committed_publish_ids(spark, idx)
     assert not os.path.exists(f"{out}/_committed/e00000001")
     pairs_now = {(r["id_a"], r["id_b"]) for r in read_stream_pairs(spark, out).collect()}
     assert ("base0", "m0") not in pairs_now  # torn epoch invisible
