@@ -19,4 +19,6 @@ behavior only), re-expressed Spark-first:
 - ``streaming/``  : Structured Streaming variants (windowed event rollups).
 """
 
+from . import _zipimport  # noqa: F401  (installed for its effect)
+
 __version__ = "0.1.0"

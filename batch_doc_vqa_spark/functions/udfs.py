@@ -9,6 +9,11 @@ of digit images into one model call instead of looping.
 
 The UDF bodies delegate to the pure kernels in ``html_extract``/``pdf_extract``
 so the Spark output is byte-identical to the oracle by construction.
+
+Unpickling any of these UDFs imports the package, which on CPython 3.10-3.12
+makes the per-task ``importlib.invalidate_caches()`` lazy: without it every
+Python task re-read the central directory of each zip archive on the worker's
+path (``pyspark.zip`` and the spark-core jar), about 200 ms of CPU a task.
 """
 
 from __future__ import annotations

@@ -14,10 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _usable_cpus() -> int:
+    """Cores this process may run on: its CPU affinity where the OS reports
+    one (as ``nproc`` does), else the machine's core count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def default_cpus() -> int:
     """Local core count for sessions, benches and probes: ``SPARK_GRAFT_CPUS``
-    when set, else the machine's core count."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    when set, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or _usable_cpus())
 
 
 def get_spark(
@@ -28,9 +36,9 @@ def get_spark(
 ) -> SparkSession:
     master = master or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
-        # match parallelism: local[N] → N; local[*] → machine cores
+        # match parallelism: local[N] → N; local[*] → usable cores
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = os.cpu_count() or 8 if inner == "*" else int(inner)
+        shuffle_partitions = _usable_cpus() if inner == "*" else int(inner)
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
