@@ -25,6 +25,12 @@ def _norm(a):
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
+def _as_double(a):
+    """array<float> → array<double>, so float-array inputs (the parquet
+    embeddings are FLOAT[]) get the same IEEE math the oracles use."""
+    return F.transform(a, lambda x: x.cast("double"))
+
+
 def cosine_sim(a, b, digits: int = 6):
     """Cosine of two array columns, rounded to ``digits``. A zero-norm
     operand raises DIVIDE_BY_ZERO under Spark's ANSI mode (the default,
@@ -81,7 +87,15 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine: broadcast queries × corpus scan + window rank."""
     joined = corpus.crossJoin(F.broadcast(queries)).filter(F.col(id_col) != F.col(q_id_col))
-    scored = joined.select(
+    return _cosine_rank(joined, k, id_col, vec_col, q_id_col, q_vec_col)
+
+
+def _cosine_rank(
+    cand: DataFrame, k: int, id_col: str, vec_col: str, q_id_col: str, q_vec_col: str
+) -> DataFrame:
+    """Exact top-k of (query, candidate) rows by cosine, neighbor id
+    ascending as the tie — the one ranking of every cosine tier."""
+    scored = cand.select(
         F.col(q_id_col),
         F.col(id_col).alias("neighbor_id"),
         cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
@@ -155,13 +169,7 @@ def lsh_cosine_topk(
         .filter(F.col(id_col) != F.col(q_id_col))
         .dropDuplicates([q_id_col, id_col])
     )
-    scored = cand.select(
-        F.col(q_id_col),
-        F.col(id_col).alias("neighbor_id"),
-        cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _cosine_rank(cand, k, id_col, vec_col, q_id_col, q_vec_col)
 
 
 def embedding_dup_pairs(
@@ -251,30 +259,9 @@ def ivf_cosine_topk(
     Everything is in-plan: centroid selection, assignment (broadcast argmax
     join), probing, and ranking — no driver-side collect.
     """
-    cent = (
-        corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
-        .orderBy(F.md5(F.col("cent_id").cast("string")))
-        .limit(n_centroids)
-    )
-    # argmax as a map-side-combinable MIN over struct(-cos, cent_id, vec):
-    # negation of the rounded cosine is exact, (cos, cent_id) is unique per
-    # group so the trailing vec is never compared, and the corpus×centroid
-    # rows partial-aggregate BEFORE the exchange instead of shuffling into
-    # a per-vector sort (the old row_number window)
-    assign = (
-        corpus.crossJoin(F.broadcast(cent))
-        .withColumn("_cs", cosine_sim(F.col(vec_col), F.col("cent_vec")))
-        .groupBy(id_col)
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("_cs")).alias("n"),
-                    F.col("cent_id").alias("c"),
-                    F.col(vec_col).alias("v"),
-                )
-            ).alias("_b")
-        )
-        .select(id_col, F.col("_b.v").alias(vec_col), F.col("_b.c").alias("cent_id"))
+    cent = _md5_centroids(corpus, id_col, vec_col, n_centroids)
+    assign = _nearest_cosine(corpus, id_col, vec_col, cent).select(
+        id_col, F.col("_b.v").alias(vec_col), F.col("_b.c").alias("cent_id")
     )
     w_probe = Window.partitionBy(q_id_col).orderBy(F.desc("_cs"), F.asc("cent_id"))
     probe = (
@@ -284,17 +271,42 @@ def ivf_cosine_topk(
         .filter(F.col("_rn") <= nprobe)
         .select(q_id_col, q_vec_col, "cent_id")
     )
-    scored = (
-        probe.join(assign, "cent_id")
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(
-            F.col(q_id_col),
-            F.col(id_col).alias("neighbor_id"),
-            cosine_sim(F.col(vec_col), F.col(q_vec_col)).alias("cosine"),
+    cand = probe.join(assign, "cent_id").filter(F.col(id_col) != F.col(q_id_col))
+    return _cosine_rank(cand, k, id_col, vec_col, q_id_col, q_vec_col)
+
+
+def _md5_centroids(corpus: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
+    """(cent_id, cent_vec): the ``n`` corpus vectors with the smallest
+    md5(id) — the deterministic, engine-portable centroid sample of the IVF
+    tiers and ``semdedup``."""
+    cent = corpus.select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
+    return cent.orderBy(F.md5(F.col("cent_id").cast("string"))).limit(n)
+
+
+def _nearest_cosine(df: DataFrame, key: str, vcol: str, cent: DataFrame) -> DataFrame:
+    """(key, _b): each row's highest-cosine centroid of ``cent`` (cent_id,
+    cent_vec) as ``_b = struct(n = -cos, c = cent_id, v = vector)`` — the
+    one cosine assignment of ``ivf_cosine_topk`` and ``semdedup``.
+
+    The argmax is a map-side-combinable MIN over struct(-cos, cent_id,
+    vec): negation of the rounded cosine is exact, (cos, cent_id) is unique
+    per group so the trailing vec is never compared, and the corpus×centroid
+    rows partial-aggregate BEFORE the exchange instead of shuffling into a
+    per-vector sort (the old row_number window)."""
+    return (
+        df.crossJoin(F.broadcast(cent))
+        .withColumn("_cs", cosine_sim(F.col(vcol), F.col("cent_vec")))
+        .groupBy(key)
+        .agg(
+            F.min(
+                F.struct(
+                    (-F.col("_cs")).alias("n"),
+                    F.col("cent_id").alias("c"),
+                    F.col(vcol).alias("v"),
+                )
+            ).alias("_b")
         )
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 _PRESAMPLE_OVERSHOOT = 16  # expected survivors = OVERSHOOT × sample_size
@@ -324,6 +336,56 @@ def _md5_presample(df: DataFrame, md5_col, sample_size: int, corpus_hint: int | 
     if fast.count() >= sample_size:
         return fast
     return ordered  # hint was badly wrong — exact fallback, same output
+
+
+def _train_sample(
+    corpus: DataFrame, id_col: str, vec_col: str, sample_size: int, corpus_hint: int | None
+) -> DataFrame:
+    """(_ord = md5(id), _v): the ``sample_size`` md5-smallest vectors both
+    trainers fit on."""
+    keyed = corpus.select(
+        F.md5(F.col(id_col).cast("string")).alias("_ord"), _as_double(vec_col).alias("_v")
+    )
+    return _md5_presample(keyed, F.col("_ord"), sample_size, corpus_hint)
+
+
+def _kmeans_per_group(
+    rows: DataFrame, group: str, vcol: str, k: int, iters: int, seed: int, schema: str
+) -> DataFrame:
+    """One ``functions.kmeans.kmeans_fit`` per ``group`` value g over that
+    group's ``vcol`` vectors, seeded ``seed + g`` (from parameters and data
+    shape, never from task/partition ids): rows (g, label 1..k, center)
+    under ``schema``. Rows are re-sorted by the md5 key INSIDE the group:
+    Spark hands groups in arbitrary row order, and k-means++ draws row
+    indices, so order is model identity."""
+
+    # references no module-level function, so a Python worker unpickles it
+    # without importing this module (and the whole operators package)
+    def fit(pdf):
+        import pandas as pd
+
+        from ..functions.kmeans import kmeans_fit
+
+        g = int(pdf[group].iloc[0])
+        X = np.array(pdf.sort_values("_ord")[vcol].tolist(), dtype=np.float64)
+        C = kmeans_fit(X, k, iters, seed + g)
+        centers = [[float(x) for x in c] for c in C]
+        # integer column labels: applyInPandas matches them to schema by position
+        return pd.DataFrame({0: g, 1: np.arange(1, len(C) + 1), 2: centers})
+
+    return rows.groupBy(group).applyInPandas(fit, schema)
+
+
+def _fit_subspace_codebooks(
+    samp: DataFrame, vcol: str, m: int, sub: int, n_codes: int, iters: int, seed: int
+) -> DataFrame:
+    """(m, code, center): one k-means per sub-space over the ``vcol``
+    slices of a training sample (_ord, vcol) — the sample's vectors for
+    ``train_pq_codebook``, its residuals for ``train_ivfpq_model``. The
+    per-sub-space seed is ``seed·1000 + m``."""
+    rows = _subvectors(samp, ["_ord"], vcol, m, sub, "_vs")
+    schema = "m int, code int, center array<double>"
+    return _kmeans_per_group(rows, "m", "_vs", n_codes, iters, seed * 1000, schema)
 
 
 def train_ivfpq_model(
@@ -356,73 +418,22 @@ def train_ivfpq_model(
     Trained centroids are synthetic points (cent_id = 1..K), so
     ``ivfpq_build`` skips its centroid-doc codebook exclusion for them.
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    md5_id = F.md5(F.col(id_col).cast("string"))
-    keyed = corpus.select(
-        md5_id.alias("_ord"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    samp = _md5_presample(keyed, F.col("_ord"), sample_size, corpus_hint)
+    sub = _sub_width(dim, m)
+    samp = _train_sample(corpus, id_col, vec_col, sample_size, corpus_hint)
     samp = samp.localCheckpoint(eager=True)  # two consumers: centroid fit + residuals
 
-    def fit_cents(pdf):
-        import pandas as pd
-
-        from ..functions.kmeans import kmeans_fit
-
-        pdf = pdf.sort_values("_ord")
-        X = np.array(pdf["_v"].tolist(), dtype=np.float64)
-        C = kmeans_fit(X, n_centroids, iters, seed)
-        return pd.DataFrame(
-            {
-                "cent_id": np.arange(1, len(C) + 1),
-                "cent_vec": [[float(x) for x in c] for c in C],
-            }
-        )
-
+    one = samp.withColumn("_g", F.lit(0))  # a single group: full vectors, seed + 0
+    schema = "_g int, cent_id long, cent_vec array<double>"
     cents = (
-        samp.withColumn("_g", F.lit(0))
-        .groupBy("_g")
-        .applyInPandas(fit_cents, "cent_id long, cent_vec array<double>")
+        _kmeans_per_group(one, "_g", "_v", n_centroids, iters, seed, schema)
+        .drop("_g")
         .localCheckpoint(eager=True)
     )
-    # assign the sample to the trained centroids (in-plan) → residuals
-    w_assign = Window.partitionBy("_ord").orderBy("_cd", "cent_id")
-    residuals = (
-        samp.crossJoin(F.broadcast(cents))
-        .withColumn("_cd", F.round(_sq_l2(F.col("_v"), F.col("cent_vec")), 6))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "_ord", F.zip_with(F.col("_v"), F.col("cent_vec"), lambda x, y: x - y).alias("_r")
-        )
-    )
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-    rows = residuals.select("_ord", "_r", ms).select(
-        "_ord", "m", F.slice(F.col("_r"), F.col("m") * sub + 1, sub).alias("_vs")
-    )
-
-    def fit_cb(pdf):
-        import pandas as pd
-
-        from ..functions.kmeans import kmeans_fit
-
-        pdf = pdf.sort_values("_ord")
-        X = np.array(pdf["_vs"].tolist(), dtype=np.float64)
-        mm = int(pdf["m"].iloc[0])
-        C = kmeans_fit(X, n_codes, iters, seed * 1000 + mm)
-        return pd.DataFrame(
-            {
-                "m": mm,
-                "code": np.arange(1, len(C) + 1),
-                "center": [[float(x) for x in c] for c in C],
-            }
-        )
-
-    codebook = rows.groupBy("m").applyInPandas(fit_cb, "m int, code int, center array<double>")
-    return cents, codebook
+    # assign the sample to the trained centroids (in-plan) → residuals, by
+    # the same assignment the index build uses
+    model = cents.select("cent_id", F.col("cent_vec").alias("_cv"))
+    residuals = _ivfpq_assign(samp, model, "_ord")
+    return cents, _fit_subspace_codebooks(residuals, "_r", m, sub, n_codes, iters, seed)
 
 
 def _ivfpq_assign(corpus_d: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
@@ -455,30 +466,161 @@ def _ivfpq_assign(corpus_d: DataFrame, cent: DataFrame, id_col: str) -> DataFram
     )
 
 
-def _ivfpq_encode(assign: DataFrame, cbm: DataFrame, m: int, sub: int, id_col: str) -> DataFrame:
-    """(id, cent_id, m codes packed in m-order) — residual sub-vectors →
-    nearest code; shared by build and append (same rounding, same
-    (dist, code) tiebreak)."""
+def _sub_width(dim: int, m: int) -> int:
+    if dim % m:
+        raise ValueError("dim must divide into m sub-spaces")
+    return dim // m
+
+
+# Product quantization, shared by flat PQ (``pq_topk``: vectors keyed on
+# [id]) and IVF×PQ (``ivfpq_build``/``ivfpq_query``: residuals keyed on
+# [id, cent_id]). A codebook ``cbm`` is (code, m, _cs) with 1-based codes;
+# every distance rounds to 6 BEFORE each argmin/rank (cross-engine float
+# discipline).
+
+
+def _subvectors(df: DataFrame, cols: list, vcol: str, m: int, sub: int, out: str) -> DataFrame:
+    """``cols`` + (m, ``out``): one row per sub-space m, carrying the m-th
+    ``sub``-wide slice of ``vcol``."""
     ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
+    return df.select(*cols, F.col(vcol).alias("_sv"), ms).select(
+        *cols, "m", F.slice(F.col("_sv"), F.col("m") * sub + 1, sub).alias(out)
+    )
+
+
+def _subspace_dists(df: DataFrame, keys: list, vcol: str, cbm: DataFrame, m: int, sub: int):
+    """``keys`` + (m, code, dist): every sub-vector of ``vcol`` scored
+    against every code of its sub-space (broadcast codebook)."""
     return (
-        assign.select(id_col, "cent_id", F.col("_r").alias("_rv"), ms)
-        .select(
-            id_col, "cent_id", "m",
-            F.slice(F.col("_rv"), F.col("m") * sub + 1, sub).alias("_vs"),
-        )
+        _subvectors(df, keys, vcol, m, sub, "_vs")
         .join(F.broadcast(cbm), "m")
         .withColumn("dist", F.round(_sq_l2(F.col("_vs"), F.col("_cs")), 6))
-        # per-(id, m) argmin as min(struct(dist, code)) — map-side partial
+    )
+
+
+def _pq_encode(df: DataFrame, keys: list, vcol: str, cbm: DataFrame, m: int, sub: int):
+    """``keys`` + _codes: the nearest code per sub-space, packed in m-order.
+    The one encoder: the IVF×PQ build and append share it, so an appended
+    vector gets bit-identical codes to a rebuilt one."""
+    return (
+        _subspace_dists(df, keys, vcol, cbm, m, sub)
+        # per-(key, m) argmin as min(struct(dist, code)) — map-side partial
         # aggregation over the ×n_codes scored rows, no window sort
-        .groupBy(id_col, "cent_id", "m")
+        .groupBy(*keys, "m")
         .agg(F.min(F.struct("dist", "code")).alias("_mc"))
-        .select(id_col, "cent_id", "m", F.col("_mc.code").alias("code"))
-        .groupBy(id_col, "cent_id")
+        .select(*keys, "m", F.col("_mc.code").alias("code"))
+        .groupBy(*keys)
         .agg(
             F.transform(
                 F.sort_array(F.collect_list(F.struct("m", "code"))), lambda s: s["code"]
             ).alias("_codes")
         )
+    )
+
+
+def _adc_table(df: DataFrame, keys: list, vcol: str, cbm: DataFrame, m: int, sub: int):
+    """``keys`` + _qd: the ADC lookup table of a query (flat PQ) or of a
+    (query, probed cell) residual (IVF×PQ) — the full (m, code) distance
+    table packed as one array in (m, code) order: position = m*n_codes +
+    code (1-based codes)."""
+    return (
+        _subspace_dists(df, keys, vcol, cbm, m, sub)
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("m", "code", "dist"))),
+                lambda s: s["dist"],
+            ).alias("_qd")
+        )
+    )
+
+
+def _accept_codebook(
+    codebook: DataFrame | None,
+    sample: DataFrame,
+    vcol: str,
+    id_col: str,
+    m: int,
+    sub: int,
+    n_codes: int,
+    where: str,
+) -> tuple[DataFrame, int]:
+    """(cbm, n_codes). A trained ``codebook=`` (m, code, center) is
+    checkpointed and shape-checked by ``_validate_codebook``; without one,
+    the codebook is the sub-space slices of ``vcol`` of the ``n_codes``
+    md5(id)-smallest rows of ``sample`` — deterministic and SQL-oracle-
+    checkable."""
+    if codebook is not None:
+        cbm = codebook.select("code", "m", F.col("center").alias("_cs")).localCheckpoint(
+            eager=True
+        )
+        return cbm, _validate_codebook(cbm, m, where)
+    md5_id = F.md5(F.col(id_col).cast("string"))
+    cb = (
+        sample.orderBy(md5_id)
+        .limit(n_codes)
+        .withColumn("code", F.row_number().over(Window.orderBy(md5_id)))
+        .localCheckpoint(eager=True)  # ≤ n_codes rows; also fixes the count
+    )
+    # a corpus smaller than n_codes yields a short codebook — the ADC
+    # position arithmetic must use the ACTUAL size or lookups land in the
+    # wrong (or out-of-range) slots; degrade gracefully like ivf_cosine_topk
+    return _subvectors(cb, ["code"], vcol, m, sub, "_cs"), cb.count()
+
+
+def _adc_rank(
+    joined: DataFrame,
+    m: int,
+    n_codes: int,
+    k: int,
+    rerank: int,
+    id_col: str,
+    q_id_col: str,
+    corpus_d: DataFrame,
+    qd: DataFrame,
+) -> DataFrame:
+    """Top-k from ``joined``: code rows (id, _codes) already paired with
+    ADC tables (q_id, _qd). The caller's join is the search scope: flat PQ
+    crossJoins every code row, IVF×PQ joins on cent_id to the probed cells.
+    The ADC sum folds the per-sub-space lookups in fixed m-order — never a
+    float sum through an order-free aggregate. ``rerank=R`` fetches the
+    true vectors (``corpus_d``: id, _v) of the R-deep shortlist and re-ranks
+    by exact squared-L2 to the query vectors (``qd``: q_id, _q)."""
+    adc = joined.filter(F.col(id_col) != F.col(q_id_col)).select(
+        q_id_col,
+        F.col(id_col).alias("neighbor_id"),
+        F.round(
+            F.aggregate(
+                F.sequence(F.lit(0), F.lit(m - 1)),
+                F.lit(0.0),
+                lambda acc, i: acc
+                + F.element_at(
+                    F.col("_qd"),
+                    (i * n_codes + F.element_at(F.col("_codes"), i + 1)).cast("int"),
+                ),
+            ),
+            6,
+        ).alias("approx_dist"),
+    )
+    w = Window.partitionBy(q_id_col).orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
+    if not rerank:
+        return adc.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    shortlist = (
+        adc.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= rerank).drop("_rn")
+    )
+    vecs = corpus_d.select(F.col(id_col).alias("neighbor_id"), F.col("_v").alias("_nv"))
+    # broadcast the R×Q shortlist (small by construction) so the corpus
+    # vector fetch is a map-side semi-join — never a corpus shuffle
+    exact = (
+        vecs.join(F.broadcast(shortlist), "neighbor_id")
+        .join(F.broadcast(qd), q_id_col)
+        .withColumn("exact_dist", F.round(_sq_l2(F.col("_nv"), F.col("_q")), 6))
+    )
+    w2 = Window.partitionBy(q_id_col).orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
+    return (
+        exact.withColumn("rank", F.row_number().over(w2))
+        .filter(F.col("rank") <= k)
+        .select(q_id_col, "neighbor_id", "approx_dist", "exact_dist", "rank")
     )
 
 
@@ -506,18 +648,13 @@ def ivfpq_build(
     ``train_ivfpq_model`` — zero plan change; defaults stay the
     deterministic md5-sample model (the SQL-oracle-checkable one).
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    corpus_d = corpus.select(id_col, dbl(F.col(vec_col)).alias("_v"))
-    md5_id = F.md5(F.col(id_col).cast("string"))
+    sub = _sub_width(dim, m)
+    corpus_d = corpus.select(id_col, _as_double(vec_col).alias("_v"))
     sampled_centroids = centroids is None
     if sampled_centroids:
         cent = (
-            corpus_d.orderBy(md5_id)
-            .limit(n_centroids)
-            .select(F.col(id_col).alias("cent_id"), F.col("_v").alias("_cv"))
+            _md5_centroids(corpus_d, id_col, "_v", n_centroids)
+            .withColumnRenamed("cent_vec", "_cv")
             .localCheckpoint(eager=True)  # ≤ n_centroids rows, two consumers
         )
     else:
@@ -528,40 +665,21 @@ def ivfpq_build(
     assign = _ivfpq_assign(corpus_d, cent, id_col).localCheckpoint(
         eager=True  # residuals feed codebook + encoding
     )
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-
-    def subvec(col):
-        return F.slice(col, F.col("m") * sub + 1, sub)
-
-    if codebook is not None:
-        cbm = codebook.select(
-            "code", "m", F.col("center").alias("_cs")
-        ).localCheckpoint(eager=True)
-        n_codes = _validate_codebook(cbm, m, "ivfpq_build")
-    else:
-        # shared residual codebook (sample; train_ivfpq_model trains it).
-        # With SAMPLED centroids, centroid docs are excluded: each is its
-        # own nearest centroid, so its residual is the ZERO vector — and
-        # the smallest-md5 docs are exactly the centroid picks (same
-        # ordering), which would collapse the whole codebook to zeros and
-        # every doc to one code. Trained centroids are synthetic points
-        # (cent_id 1..K, no doc is its own centroid), so no exclusion.
-        cb_src = assign
-        if sampled_centroids:
-            cb_src = assign.join(
-                F.broadcast(cent.select(F.col("cent_id").alias(id_col))), id_col, "left_anti"
-            )
-        cb = (
-            cb_src.orderBy(md5_id)
-            .limit(n_codes)
-            .withColumn("code", F.row_number().over(Window.orderBy(md5_id)))
-            .localCheckpoint(eager=True)
+    # the sample the shared residual codebook is cut from when no trained
+    # codebook is given (train_ivfpq_model trains one). With SAMPLED
+    # centroids, centroid docs are excluded: each is its own nearest
+    # centroid, so its residual is the ZERO vector — and the smallest-md5
+    # docs are exactly the centroid picks (same ordering), which would
+    # collapse the whole codebook to zeros and every doc to one code.
+    # Trained centroids are synthetic points (cent_id 1..K, no doc is its
+    # own centroid), so no exclusion.
+    cb_src = assign
+    if sampled_centroids:
+        cb_src = assign.join(
+            F.broadcast(cent.select(F.col("cent_id").alias(id_col))), id_col, "left_anti"
         )
-        n_codes = cb.count()  # degrade gracefully when the corpus is tiny
-        cbm = cb.select("code", F.col("_r").alias("_cr"), ms).select(
-            "code", "m", subvec(F.col("_cr")).alias("_cs")
-        )
-    codes = _ivfpq_encode(assign, cbm, m, sub, id_col)
+    cbm, n_codes = _accept_codebook(codebook, cb_src, "_r", id_col, m, sub, n_codes, "ivfpq_build")
+    codes = _pq_encode(assign, [id_col, "cent_id"], "_r", cbm, m, sub)
     return {
         "cent": cent,
         "cbm": cbm,
@@ -615,7 +733,7 @@ def append_ivfpq_index(
     codebook) is IMMUTABLE post-build: new vectors pay only the
     encode-side cost (one assignment pass against the broadcast centroids,
     one ADC encode against the broadcast codebook — the same shared
-    ``_ivfpq_assign``/``_ivfpq_encode`` definitions the build uses, so an
+    ``_ivfpq_assign``/``_pq_encode`` definitions the build uses, so an
     appended vector gets bit-identical codes to a rebuilt one), written as
     a marker-committed snapshot ``codes_snap/<id>`` partitioned by
     ``cent_id`` (not ``stage_table``'s unpartitioned ``run_id=`` dirs, so the
@@ -635,10 +753,10 @@ def append_ivfpq_index(
 
     index = load_ivfpq_index(spark, path)
     snap = snapshot_id or "s" + _uuid.uuid4().hex[:12]
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    corpus_d = corpus.select(index["id_col"], dbl(F.col(vec_col)).alias("_v"))
-    assign = _ivfpq_assign(corpus_d, index["cent"], index["id_col"])
-    codes = _ivfpq_encode(assign, index["cbm"], index["m"], index["sub"], index["id_col"])
+    id_col = index["id_col"]
+    corpus_d = corpus.select(id_col, _as_double(vec_col).alias("_v"))
+    assign = _ivfpq_assign(corpus_d, index["cent"], id_col)
+    codes = _pq_encode(assign, [id_col, "cent_id"], "_r", index["cbm"], index["m"], index["sub"])
     codes.write.mode("overwrite").partitionBy("cent_id").parquet(
         f"{path}/codes_snap/{snap}"
     )
@@ -677,10 +795,7 @@ def load_ivfpq_index(spark: SparkSession, path: str, corpus: DataFrame | None = 
             f"match the stored codebook at {path}"
         )
     if corpus is not None:
-        index["corpus_d"] = corpus.select(
-            meta["id_col"],
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-        )
+        index["corpus_d"] = corpus.select(meta["id_col"], _as_double(vec_col).alias("_v"))
     return index
 
 
@@ -700,14 +815,13 @@ def ivfpq_query(
     re-ranking. Cost is probe-bounded: nothing here scans the corpus."""
     cent, cbm, codes = index["cent"], index["cbm"], index["codes"]
     m, n_codes, sub, id_col = index["m"], index["n_codes"], index["sub"], index["id_col"]
-    dbl = lambda c: F.transform(c, lambda x: x.cast("double"))  # noqa: E731
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-
-    def subvec(col):
-        return F.slice(col, F.col("m") * sub + 1, sub)
-
+    if rerank and index.get("corpus_d") is None:
+        raise ValueError(
+            "rerank>0 needs the true vectors: pass corpus= to load_ivfpq_index "
+            "(a loaded index carries only centroids/codebook/codes)"
+        )
     # probe: nprobe nearest cells per query, with per-cell query residuals
-    qd = queries.select(q_id_col, dbl(F.col(q_vec_col)).alias("_q"))
+    qd = queries.select(q_id_col, _as_double(q_vec_col).alias("_q"))
     w_probe = Window.partitionBy(q_id_col).orderBy("_cd", "cent_id")
     probe = (
         qd.crossJoin(F.broadcast(cent))
@@ -720,69 +834,12 @@ def ivfpq_query(
             F.zip_with(F.col("_q"), F.col("_cv"), lambda x, y: x - y).alias("_qr"),
         )
     )
-    # per-(query, cell) ADC lookup table, packed in (m, code) order
-    qtab = (
-        probe.select(q_id_col, "cent_id", F.col("_qr").alias("_qrv"), ms)
-        .select(q_id_col, "cent_id", "m", subvec(F.col("_qrv")).alias("_qs"))
-        .join(F.broadcast(cbm), "m")
-        .withColumn("dist", F.round(_sq_l2(F.col("_qs"), F.col("_cs")), 6))
-        .groupBy(q_id_col, "cent_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code", "dist"))),
-                lambda s: s["dist"],
-            ).alias("_qd")
-        )
-    )
+    # per-(query, cell) ADC lookup tables, broadcast
+    qtab = _adc_table(probe, [q_id_col, "cent_id"], "_qr", cbm, m, sub)
     # cell-restricted ADC: the join key IS the pruning — a query only meets
     # the codes of its probed cells (contrast pq_topk's full crossJoin)
-    adc = (
-        codes.join(F.broadcast(qtab), "cent_id")
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(
-            q_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0.0),
-                    lambda acc, i: acc
-                    + F.element_at(
-                        F.col("_qd"),
-                        (i * n_codes + F.element_at(F.col("_codes"), i + 1)).cast("int"),
-                    ),
-                ),
-                6,
-            ).alias("approx_dist"),
-        )
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
-    if not rerank:
-        return adc.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    if index.get("corpus_d") is None:
-        raise ValueError(
-            "rerank>0 needs the true vectors: pass corpus= to load_ivfpq_index "
-            "(a loaded index carries only centroids/codebook/codes)"
-        )
-    shortlist = (
-        adc.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") <= rerank).drop("_rn")
-    )
-    vecs = index["corpus_d"].select(
-        F.col(id_col).alias("neighbor_id"), F.col("_v").alias("_nv")
-    )
-    # broadcast the R×Q shortlist (small by construction) so the corpus
-    # vector fetch is a map-side semi-join — never a corpus shuffle
-    exact = (
-        vecs.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qd), q_id_col)
-        .withColumn("exact_dist", F.round(_sq_l2(F.col("_nv"), F.col("_q")), 6))
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "neighbor_id", "approx_dist", "exact_dist", "rank")
-    )
+    joined = codes.join(F.broadcast(qtab), "cent_id")
+    return _adc_rank(joined, m, n_codes, k, rerank, id_col, q_id_col, index["corpus_d"], qd)
 
 
 def ivfpq_topk(
@@ -885,38 +942,9 @@ def train_pq_codebook(
     remainder instead of every corpus row. The fit is m tiny single-group
     fits; the model is m·n_codes rows — broadcast-size by construction.
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    md5_id = F.md5(F.col(id_col).cast("string"))
-    keyed = corpus.select(
-        md5_id.alias("_ord"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
-    )
-    samp = _md5_presample(keyed, F.col("_ord"), sample_size, corpus_hint)
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-    rows = samp.select("_ord", "_v", ms).select(
-        "_ord", "m", F.slice(F.col("_v"), F.col("m") * sub + 1, sub).alias("_vs")
-    )
-
-    def fit(pdf):
-        import pandas as pd
-
-        from ..functions.kmeans import kmeans_fit
-
-        pdf = pdf.sort_values("_ord")
-        X = np.array(pdf["_vs"].tolist(), dtype=np.float64)
-        mm = int(pdf["m"].iloc[0])
-        C = kmeans_fit(X, n_codes, iters, seed * 1000 + mm)
-        return pd.DataFrame(
-            {
-                "m": mm,
-                "code": np.arange(1, len(C) + 1),
-                "center": [[float(x) for x in c] for c in C],
-            }
-        )
-
-    return rows.groupBy("m").applyInPandas(fit, "m int, code int, center array<double>")
+    sub = _sub_width(dim, m)
+    samp = _train_sample(corpus, id_col, vec_col, sample_size, corpus_hint)
+    return _fit_subspace_codebooks(samp, "_v", m, sub, n_codes, iters, seed)
 
 
 def pq_topk(
@@ -969,125 +997,16 @@ def pq_topk(
     double internally so float-array inputs (the parquet embeddings are
     FLOAT[]) get the same IEEE math the oracle uses.
     """
-    if dim % m:
-        raise ValueError("dim must divide into m sub-spaces")
-    sub = dim // m
-    ms = F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("m")
-
-    def subvec(col):
-        return F.transform(
-            F.slice(col, F.col("m") * sub + 1, sub), lambda x: x.cast("double")
-        )
-
-    if codebook is not None:
-        # trained model (train_pq_codebook) — same (code, m, _cs) shape, so
-        # everything downstream is unchanged
-        cbm = codebook.select(
-            "code", "m", F.col("center").alias("_cs")
-        ).localCheckpoint(eager=True)
-        n_codes = _validate_codebook(cbm, m, "pq_topk")
-    else:
-        md5_order = F.md5(F.col(id_col).cast("string"))
-        cb = (
-            corpus.select(id_col, vec_col)
-            .orderBy(md5_order)
-            .limit(n_codes)
-            .withColumn("code", F.row_number().over(Window.orderBy(md5_order)))
-            .localCheckpoint(eager=True)  # ≤ n_codes rows; also fixes the count
-        )
-        # a corpus smaller than n_codes yields a short codebook — the ADC
-        # position arithmetic must use the ACTUAL size or lookups land in the
-        # wrong (or out-of-range) slots; degrade gracefully like ivf_cosine_topk
-        n_codes = cb.count()
-        cbm = cb.select("code", F.col(vec_col).alias("_cv"), ms).select(
-            "code", "m", subvec(F.col("_cv")).alias("_cs")
-        )
-
-    def encode(df: DataFrame, key: str, vcol: str, keep_dist: bool) -> DataFrame:
-        rows = df.select(key, F.col(vcol).alias("_v"), ms).select(
-            key, "m", subvec(F.col("_v")).alias("_vs")
-        )
-        scored = rows.join(F.broadcast(cbm), "m").withColumn(
-            "dist", F.round(_sq_l2(F.col("_vs"), F.col("_cs")), 6)
-        )
-        if keep_dist:
-            return scored.select(key, "m", "code", "dist")
-        # per-(key, m) argmin as min(struct(dist, code)): partial (map-side)
-        # aggregation collapses the ×n_codes scored rows before the
-        # exchange — no shuffle+sort window over the full scored frame
-        return (
-            scored.groupBy(key, "m")
-            .agg(F.min(F.struct("dist", "code")).alias("_mc"))
-            .select(key, "m", F.col("_mc.code").alias("code"))
-        )
-
-    # corpus → m codes per vector, packed in m-order
-    codes = (
-        encode(corpus, id_col, vec_col, keep_dist=False)
-        .groupBy(id_col)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code"))), lambda s: s["code"]
-            ).alias("_codes")
-        )
-    )
-    # queries → full (m, code) distance table, packed as one lookup array
-    # in (m, code) order: position = m*n_codes + code (1-based codes)
-    qtab = (
-        encode(queries, q_id_col, q_vec_col, keep_dist=True)
-        .groupBy(q_id_col)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("m", "code", "dist"))),
-                lambda s: s["dist"],
-            ).alias("_qd")
-        )
-    )
-    adc = (
-        codes.crossJoin(F.broadcast(qtab))
-        .filter(F.col(id_col) != F.col(q_id_col))
-        .select(
-            q_id_col,
-            F.col(id_col).alias("neighbor_id"),
-            F.round(
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    F.lit(0.0),
-                    lambda acc, i: acc
-                    + F.element_at(
-                        F.col("_qd"), (i * n_codes + F.element_at(F.col("_codes"), i + 1)).cast("int")
-                    ),
-                ),
-                6,
-            ).alias("approx_dist"),
-        )
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.asc("approx_dist"), F.asc("neighbor_id"))
-    if not rerank:
-        return adc.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    shortlist = adc.withColumn("_rn", F.row_number().over(w)).filter(
-        F.col("_rn") <= rerank
-    ).drop("_rn")
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_nv"),
-    )
-    qv = queries.select(
-        q_id_col, F.transform(F.col(q_vec_col), lambda x: x.cast("double")).alias("_qv")
-    )
-    # broadcast the R×Q shortlist so the true-vector fetch is a map-side
-    # semi-join over the corpus — never a corpus shuffle
-    exact = (
-        vecs.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qv), q_id_col)
-        .withColumn("exact_dist", F.round(_sq_l2(F.col("_nv"), F.col("_qv")), 6))
-    )
-    w2 = Window.partitionBy(q_id_col).orderBy(F.asc("exact_dist"), F.asc("neighbor_id"))
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, "neighbor_id", "approx_dist", "exact_dist", "rank")
-    )
+    sub = _sub_width(dim, m)
+    corpus_d = corpus.select(id_col, _as_double(vec_col).alias("_v"))
+    qd = queries.select(q_id_col, _as_double(q_vec_col).alias("_q"))
+    cbm, n_codes = _accept_codebook(codebook, corpus_d, "_v", id_col, m, sub, n_codes, "pq_topk")
+    codes = _pq_encode(corpus_d, [id_col], "_v", cbm, m, sub)
+    qtab = _adc_table(qd, [q_id_col], "_q", cbm, m, sub)
+    # flat ADC: every query meets every code row (no cell assignment — the
+    # IVF×PQ tier restricts this join to the probed cells)
+    joined = codes.crossJoin(F.broadcast(qtab))
+    return _adc_rank(joined, m, n_codes, k, rerank, id_col, q_id_col, corpus_d, qd)
 
 
 def semdedup(
@@ -1125,31 +1044,10 @@ def semdedup(
             raise ValueError(f"semdedup: centroids frame missing {sorted(missing)}")
         cent = centroids.select("cent_id", "cent_vec")
     else:
-        cent = (
-            corpus.select(
-                F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
-            )
-            .orderBy(F.md5(F.col(id_col).cast("string")))
-            .limit(n_centroids)
-        )
-    # argmax assignment as a map-side-combinable MIN over struct(-cos,
-    # cent_id, v): negation of the rounded cosine is exact and (cos,
-    # cent_id) is unique per group, so this is the row_number window's
-    # argmax without the per-vector shuffle+sort.
+        cent = _md5_centroids(corpus, id_col, vec_col, n_centroids)
+    vecs = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     assign = (
-        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .crossJoin(F.broadcast(cent))
-        .withColumn("_cs", cosine_sim(F.col("_v"), F.col("cent_vec")))
-        .groupBy("_id")
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("_cs")).alias("n"),
-                    F.col("cent_id").alias("c"),
-                    F.col("_v").alias("v"),
-                )
-            ).alias("_b")
-        )
+        _nearest_cosine(vecs, "_id", "_v", cent)
         # precompute each vector's norm ONCE here: the within-cell pair
         # scan below evaluates Σ|cell|² cosines, and recomputing the norm
         # HOF per PAIR costs two extra array folds per comparison. The

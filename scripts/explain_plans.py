@@ -10,10 +10,11 @@ Checks (printed per query):
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from batch_doc_vqa_spark.session import get_spark  # noqa: E402

@@ -11,13 +11,14 @@ from __future__ import annotations
 
 import datetime
 import math
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from batch_doc_vqa_spark.session import get_spark  # noqa: E402

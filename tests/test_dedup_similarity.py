@@ -629,6 +629,33 @@ def test_ivfpq_topk_capture_and_cell_restriction(vectors):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.parametrize("rerank", [0, 20])
+@pytest.mark.parametrize("trained", [True, False], ids=["trained", "sample"])
+def test_flat_pq_is_one_cell_ivfpq(vectors, spark, trained, rerank):
+    """Flat PQ is IVF×PQ with one zero-vector cell: every residual is the
+    vector itself and every query probes that cell, so ``pq_topk`` and
+    ``ivfpq_build`` + ``ivfpq_query(nprobe=1)`` must return the same rows
+    for the same codebook — a trained one, or the md5-sample one both
+    tiers cut from the (residual) vectors. A difference means the encoder,
+    ADC ranker or re-ranker the two tiers share has drifted."""
+    q = vectors.filter(F.col("vec_id") % 25 == 0).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
+    )
+    kw = dict(m=8, n_codes=8, dim=16)
+    cbk = None
+    if trained:
+        cbk = similarity.train_pq_codebook(vectors, iters=20, seed=11, **kw)
+        cbk = cbk.localCheckpoint(eager=True)
+    zero = spark.createDataFrame([(1, [0.0] * 16)], "cent_id long, cent_vec array<double>")
+    flat = similarity.pq_topk(vectors, q, k=5, rerank=rerank, codebook=cbk, **kw)
+    index = similarity.ivfpq_build(vectors, n_centroids=1, centroids=zero, codebook=cbk, **kw)
+    ivf = similarity.ivfpq_query(index, q, nprobe=1, k=5, rerank=rerank)
+    assert flat.columns == ivf.columns
+    rows = sorted(map(tuple, flat.collect()))
+    assert len(rows) == 5 * q.count()
+    assert rows == sorted(map(tuple, ivf.collect()))
+
+
 def test_trained_pq_codebook_capture_and_determinism(vectors):
     """K-means-trained codebooks (VERDICT r4 #7) drop into pq_topk with zero
     plan change: capture >= 0.9 at the committed R=30 config, ADC-only

@@ -151,6 +151,23 @@ def test_url_dedup_single_shuffle_on_canonical_key(plans):
     assert _n_exchanges(p) == 1, p[:1500]
 
 
+@pytest.mark.parametrize(
+    "query,bound",
+    [
+        ("ann_ivf_topk", 3),
+        ("ann_pq_topk", 5),
+        ("ann_pq_trained_topk", 5),
+        ("ann_ivfpq_topk", 5),
+        ("semdedup", 1),
+    ],
+)
+def test_ann_shuffle_counts_bounded(plans, query, bound):
+    # the ANN tiers share one encoder, ADC ranker, re-ranker and centroid
+    # assignment (operators/similarity.py): a change to a shared helper
+    # must not add a shuffle to any of them unnoticed
+    assert _n_exchanges(plans(query)) <= bound, query
+
+
 def test_scan_repair_gate_counts_part_files(spark, tmp_path):
     """_tp's size gate reads a multi-file parquet directory as one split per
     part file (no repair exchange) and a single file of the same rows as one
