@@ -58,8 +58,9 @@ def extract_udf(html: pd.Series) -> pd.DataFrame:
 
 
 def host_of(url_col):
-    """Column expr: url → host (the skew key for Common-Crawl-style data)."""
-    return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)/", 1)
+    """Column expr: url → lowercased host, ``user[:pass]@`` and port stripped."""
+    authority = F.lower(F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1))
+    return F.regexp_replace(F.regexp_replace(authority, r"^.*@", ""), r":\d+$", "")
 
 
 BLOCK_ROW_TYPE = T.ArrayType(

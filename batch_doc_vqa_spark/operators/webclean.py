@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.udfs import host_of
+
 # tracking params dropped during canonicalization (the common analytics set)
 TRACKING_PARAMS = (
     "utm_source", "utm_medium", "utm_campaign", "utm_term", "utm_content",
@@ -145,16 +147,6 @@ def strip_boilerplate_lines(
     return joined.withColumn(text_col, cleaned).drop("_deny")
 
 
-def _host_of(url_col):
-    """Lowercased hostname of a URL, ``user[:pass]@`` userinfo and port
-    stripped — the matching unit domain blocklists are published in
-    (UT1/Shallalist-style)."""
-    authority = F.lower(
-        F.regexp_extract(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)", 1)
-    )
-    return F.regexp_replace(F.regexp_replace(authority, r"^.*@", ""), r":\d+$", "")
-
-
 def blocklist_matches(
     df: DataFrame,
     url_col: str,
@@ -189,7 +181,7 @@ def blocklist_matches(
         raise ValueError(f"blocklist_matches: reserved column names in input: {reserved}")
     if out_col in df.columns:
         raise ValueError(f"blocklist_matches: out_col collides: {out_col}")
-    labels = F.split(_host_of(F.col(url_col)), r"\.")
+    labels = F.split(host_of(F.col(url_col)), r"\.")
     out = df.withColumn("_host_labels", labels)
     nl = F.size("_host_labels")
     # lowercase + distinct the dim once: hosts compare lowercased, and a

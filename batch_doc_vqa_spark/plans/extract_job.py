@@ -14,7 +14,7 @@ Contract (BASELINE.json north rule):
 - partitioning: hash(url) buckets, salted for skewed hosts (plans/skew.py);
   bucket ids are pure functions of the data so reruns see the same layout;
 - lineage: one row per (run_id, bucket): doc count, byte count, failure count,
-  failure urls, status;
+  the first 100 failure urls in sorted order, status;
 - resume: rerunning with the same output dir processes only urls absent from
   the committed results — reruns are idempotent, a torn run leaves no trace,
   and the final table is identical to a single-shot run;
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from .. import __version__ as ENGINE_VERSION
 from ..functions.udfs import extract_udf
 from .publish import (
+    _fs,
     commit_marker,
     committed_publish_ids,
     read_committed_table,
@@ -59,8 +60,7 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
     """True iff the directory exists and holds at least one non-hidden data
     file. Recursive listing with an early break: returns at the FIRST data
     file, so a populated store costs one listing step."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return False
     it = fs.listFiles(jpath, True)
@@ -190,8 +190,9 @@ def run_extraction(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_input_bytes").alias("n_bytes"),
         F.sum((F.col("status") == "failed").cast("long")).alias("n_failed"),
+        # sorted: the first 100 in delivery order would differ between runs
         F.slice(
-            F.collect_list(F.when(F.col("status") == "failed", F.col("url"))),
+            F.array_sort(F.collect_list(F.when(F.col("status") == "failed", F.col("url")))),
             1,
             MAX_FAILURE_URLS_PER_PARTITION,
         ).alias("failure_urls"),

@@ -1,4 +1,5 @@
-from .event_rollup import hourly_rollup_stream, extraction_stream  # noqa: F401
+from .event_rollup import hourly_rollup_stream  # noqa: F401
+from .publish_stream import extraction_stream  # noqa: F401
 from .dedup_stream import dedup_events_stream  # noqa: F401
 from .sessions_stream import session_stream  # noqa: F401
 from .decontam_stream import decontam_screen_stream  # noqa: F401

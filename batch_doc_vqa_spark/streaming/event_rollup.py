@@ -1,19 +1,9 @@
-"""Structured Streaming variants of the batch plans.
-
-The reference's only streaming-ish behavior is incremental result persistence
-(/root/reference/src/batch_doc_vqa/openrouter/inference.py:2206-2207); the
-Spark-native generalization is a real stream: pages/events arrive as files,
-the same extraction UDF / windowed aggregations run incrementally, watermarks
-bound state for late data, and checkpointing gives exactly-once sinks — the
-streaming twin of the batch lineage/resume discipline.
-"""
+"""``hourly_rollup_stream``: watermarked hourly event counts as files arrive."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..functions.udfs import extract_udf
 
 
 def hourly_rollup_stream(
@@ -37,22 +27,4 @@ def hourly_rollup_stream(
             "n",
             "sum_value",
         )
-    )
-
-
-def extraction_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
-    """Streaming extraction: same Arrow UDF, incremental over arriving files.
-
-    Pair with an available-now trigger + checkpointLocation for an
-    incremental batch job with exactly-once sink semantics.
-    """
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    stream = spark.readStream.schema(schema).parquet(pages_dir)
-    return stream.withColumn("_ex", extract_udf(F.col("html"))).select(
-        "url",
-        "warc_ts",
-        "lang",
-        F.col("_ex.text").alias("text"),
-        F.col("_ex.status").alias("status"),
-        F.length("_ex.text").alias("n_chars"),
     )

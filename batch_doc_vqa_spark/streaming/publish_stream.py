@@ -1,16 +1,16 @@
-"""Streaming twin of the validation-gated publish sink (S11), and the ONE
-epoch driver every marker-committed streaming sink runs on.
+"""Streaming twins of the validation-gated publish sink (S11) and the
+extraction job, on the ONE epoch driver every marker-committed sink uses.
 
-``epoch_stream`` owns the streaming half of the commit protocol: it reads
-new files, gives each micro-batch an EPOCH-scoped run id (``e<batch_id>``)
-and hands the tables a sink's ``tables_of(batch, run_id)`` callback returns
-to ``plans/publish.commit_run`` — the same staged-write + marker commit the
-batch publisher uses. A replayed epoch overwrites its own run directories
-idempotently, and a crash between table writes leaves the epoch invisible to
-``read_committed_table`` until the marker lands — end-to-end exactly-once,
-not just at-least-once appends. The trigger always drains what is available
-and stops, which turns each sink into an incremental batch job: rerun it
-after new files land and only the new files flow through.
+``run_epochs`` owns the streaming half of the commit protocol: it reads new
+files and runs a sink's step on each micro-batch under an EPOCH-scoped run
+id (``e<batch_id>``): ``epoch_stream``'s ``plans/publish.commit_run`` of the
+tables ``tables_of(batch, run_id)`` returns, or the extraction sink's
+``run_extraction``. A replayed epoch overwrites its own run directories
+idempotently, and a crash between table writes leaves the epoch invisible
+to ``read_committed_table`` until the marker lands — end-to-end
+exactly-once, not just at-least-once appends. The trigger always drains
+what is available and stops, which turns each sink into an incremental
+batch job: rerun it after new files land and only the new files flow through.
 
 Batch form of the publish sink: ``plans/publish.publish_run`` tags rows
 with a reject reason and splits them into published/quarantine tables.
@@ -27,12 +27,14 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..plans.extract_job import run_extraction
 from ..plans.publish import (
     _fs,
     commit_run,
     publish_reject_reason,
     tagged_tables,
 )
+from ..sources.pages import PAGES_SCHEMA
 
 
 def epoch_stream(
@@ -43,8 +45,22 @@ def epoch_stream(
     checkpoint_dir: str,
     tables_of: Callable[[DataFrame, str], dict[str, DataFrame]],
 ) -> StreamingQuery:
-    """File-source stream → one ``commit_run`` per epoch of the tables
-    ``tables_of(batch, run_id)`` returns.
+    """``run_epochs`` with ``commit_run`` of ``tables_of(batch, run_id)``."""
+    return run_epochs(
+        spark, src_dir, schema, out_dir, checkpoint_dir,
+        lambda b, r: commit_run(b.sparkSession, out_dir, r, tables_of(b, r)),
+    )
+
+
+def run_epochs(
+    spark: SparkSession,
+    src_dir: str,
+    schema: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    step: Callable[[DataFrame, str], None],
+) -> StreamingQuery:
+    """File-source stream → ``step(batch, run_id)``, which commits the epoch.
 
     An epoch whose run id is already committed is skipped: it is either a
     true replay (crash after the marker, before the stream checkpoint
@@ -69,7 +85,7 @@ def epoch_stream(
             fs.mkdirs(flag.getParent())
             fs.create(flag, True).close()
             return
-        commit_run(sess, out_dir, run_id, tables_of(batch, run_id))
+        step(batch, run_id)
 
     return (
         spark.readStream.schema(schema)
@@ -99,4 +115,20 @@ def gated_publish_stream(
         lambda batch, run_id: tagged_tables(
             batch.withColumn("_reject", reason).localCheckpoint(eager=True)
         ),
+    )
+
+
+def extraction_stream(
+    spark: SparkSession, pages_dir: str, out_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """Pages files → the batch ``run_extraction`` per epoch (reference:
+    inference.py:2206-2207): a re-delivered url is extracted once, and
+    ``read_results``/``read_lineage`` read streamed and batch runs alike.
+    After a lost checkpoint the first epoch collides with ``e00000000`` and
+    is flagged in ``<out_dir>/_collisions``; recover with a batch
+    ``run_extraction`` over ``pages_dir`` into the same ``out_dir``, whose
+    anti-join skips the urls already done."""
+    return run_epochs(
+        spark, pages_dir, PAGES_SCHEMA, out_dir, checkpoint_dir,
+        lambda batch, run_id: run_extraction(batch.sparkSession, batch, out_dir, run_id=run_id),
     )

@@ -25,6 +25,9 @@ rows accumulate per run_id. A --run-id that is already committed is refused.
 The extraction stage runs min(--num-buckets, spark.sql.shuffle.partitions)
 tasks: the bucket count fixes the lineage and salting key, the session's
 shuffle parallelism fixes the task count (Spark's default is 200).
+
+The session applies batch_doc_vqa_spark.session.SESSION_CONF, over --conf
+for its keys; the master and the shuffle parallelism come from spark-submit.
 """
 
 from __future__ import annotations
@@ -52,15 +55,11 @@ def main() -> None:
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.appName("extract_pages")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-
     from batch_doc_vqa_spark.plans.extract_job import run_extraction
+    from batch_doc_vqa_spark.session import SESSION_CONF
     from batch_doc_vqa_spark.sources.pages import pages_df
+
+    spark = SparkSession.builder.appName("extract_pages").config(map=SESSION_CONF).getOrCreate()
 
     if args.pages:
         pages = spark.read.parquet(args.pages)

@@ -76,6 +76,19 @@ def test_strict_mode_routes_failures_to_lineage(spark, tmp_path):
     assert s2["n_failed"] == 0
 
 
+def test_failure_urls_are_the_first_hundred_in_sorted_order(spark, tmp_path):
+    """A bucket with more than 100 failures records the first 100 failed
+    urls in sorted order, not in whatever order the shuffle delivered."""
+    pages = pages_df(spark, 130, seed=SEED).withColumn("html", F.lit(b""))
+    out = str(tmp_path / "many_failed")
+    s = run_extraction(spark, pages, out, run_id="f", num_buckets=1, strict=True)
+    assert s["n_failed"] == 130
+    failed = sorted(r["url"] for r in read_results(spark, out).collect())
+    (lineage,) = read_lineage(spark, out).collect()
+    assert lineage["n_failed"] == 130
+    assert lineage["failure_urls"] == failed[:100]
+
+
 def test_resume_is_idempotent_and_incremental(spark, tmp_path):
     full = pages_df(spark, N, seed=SEED)
     prefix = full.filter(F.xxhash64("url") % 2 == 0)  # deterministic half
@@ -121,6 +134,14 @@ def test_salted_partitioning_bounds_hot_host(spark, tmp_path):
     )
     assert buckets > 1  # not funneled into a single task
     assert res.count() == N
+
+
+def test_salted_host_stats_pools_case_userinfo_and_port(spark):
+    """The salting key is the lowercased host without userinfo or port, also
+    for a url with no path: these three urls are one host."""
+    urls = ("http://a.com", "HTTP://A.com/x", "http://u:p@a.com:8080/y")
+    df = spark.createDataFrame([(u, b"<p>x</p>") for u in urls], "url string, html binary")
+    assert [(r["host"], r["n_rows"]) for r in salted_host_stats(df).collect()] == [("a.com", 3)]
 
 
 def test_task_count_is_min_of_buckets_and_shuffle_partitions(spark):

@@ -18,3 +18,31 @@ def test_default_cpus_follows_affinity_and_env_wins(monkeypatch):
     assert session.default_cpus() == 2
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
     assert session.default_cpus() == 6
+
+
+def test_get_spark_and_extract_submit_apply_session_conf(spark, monkeypatch):
+    """The spark-submit job runs with every fixed setting a local session
+    has (string run_id partitions, UTC, ...) and leaves the master to
+    spark-submit."""
+    import runpy
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    for key, value in session.SESSION_CONF.items():
+        assert spark.sparkContext.getConf().get(key) == value, key
+
+    class Built(Exception):
+        pass
+
+    def capture(builder):
+        raise Built(dict(builder._options))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    monkeypatch.setattr(sys, "argv", ["extract_submit.py", "--synthesize", "1", "--out", "unused"])
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with pytest.raises(Built) as built:
+        runpy.run_path(os.path.join(root, "jobs", "extract_submit.py"), run_name="__main__")
+    options = built.value.args[0]
+    assert {k: options.get(k) for k in session.SESSION_CONF} == session.SESSION_CONF
+    assert "spark.master" not in options

@@ -1,14 +1,23 @@
 """Structured Streaming twins + enrichment backfill.
 
-The streaming extraction test is the incremental-persistence analogue of the
-reference's save-after-every-image (inference.py:2206-2207): files arrive,
-availableNow drains them through the same Arrow UDF with a checkpoint, and a
-second trigger after new files only processes the delta."""
+The streaming extraction tests are the incremental-persistence analogue of
+the reference's save-after-every-image (inference.py:2206-2207): files
+arrive, availableNow runs the batch extraction job once per epoch with a
+checkpoint, and a second trigger after new files only processes the delta."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from batch_doc_vqa_spark.functions import extract_payload
+from batch_doc_vqa_spark.plans import (
+    committed_publish_ids,
+    read_lineage,
+    read_results,
+    run_extraction,
+)
 from batch_doc_vqa_spark.plans.enrich import backfill_costs, missing_cost_candidates
 from batch_doc_vqa_spark.sources import pages_df
 from batch_doc_vqa_spark.sources.runs_fixture import results_df
@@ -19,39 +28,90 @@ def _drain(q):
     q.awaitTermination(120)
 
 
+def _extraction_store(spark, out):
+    """Sorted result rows and per-bucket (docs, bytes, failed) lineage sums."""
+    rows = sorted(
+        tuple(r)
+        for r in read_results(spark, out)
+        .select("url", "text", "status", "bucket", "n_chars", "n_input_bytes")
+        .collect()
+    )
+    lineage = sorted(
+        tuple(r)
+        for r in read_lineage(spark, out)
+        .groupBy("bucket")
+        .agg(F.sum("n_docs"), F.sum("n_bytes"), F.sum("n_failed"))
+        .collect()
+    )
+    return rows, lineage
+
+
 def test_streaming_extraction_incremental(spark, tmp_path):
-    src = str(tmp_path / "pages_in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
+    src, out, ckpt = (str(tmp_path / d) for d in ("pages_in", "out", "ckpt"))
     pages_df(spark, 100, seed=42).write.parquet(src)
-    stream = extraction_stream(spark, src)
-    assert stream.isStreaming
-    q = stream.writeStream.format("parquet").option("path", out).option(
-        "checkpointLocation", ckpt
-    ).trigger(availableNow=True).start()
-    _drain(q)
-    first = spark.read.parquet(out)
-    assert first.count() == 100
+    extraction_stream(spark, src, out, ckpt).awaitTermination(120)
+    assert committed_publish_ids(spark, out) == ["e00000000"]
 
-    # new files arrive; the checkpoint means only the delta is processed
-    pages_df(spark, 150, seed=42).filter(
-        ~F.col("url").isin([r["url"] for r in first.select("url").collect()])
-    ).write.mode("append").parquet(src)
-    q = extraction_stream(spark, src).writeStream.format("parquet").option(
-        "path", out
-    ).option("checkpointLocation", ckpt).trigger(availableNow=True).start()
-    _drain(q)
-    final = spark.read.parquet(out)
-    assert final.count() == 150
-    assert final.select("url").distinct().count() == 150
-    # streamed text identical to batch kernel output
-    batch = {r["url"]: r for r in pages_df(spark, 150, seed=42).collect()}
-    sample = final.limit(20).collect()
-    from batch_doc_vqa_spark.functions import extract_payload
+    # 50 new pages and 10 already extracted ones arrive in new files; the
+    # checkpoint passes only the new files, the done-set drops the 10
+    all_pages = pages_df(spark, 150, seed=42)
+    new = all_pages.join(pages_df(spark, 100, seed=42).select("url"), "url", "left_anti")
+    new.unionByName(pages_df(spark, 10, seed=42)).write.mode("append").parquet(src)
+    extraction_stream(spark, src, out, ckpt).awaitTermination(120)
+    assert committed_publish_ids(spark, out) == ["e00000000", "e00000001"]
+    res = read_results(spark, out)
+    assert res.count() == res.select("url").distinct().count() == 150
 
-    for r in sample:
-        assert r["text"] == extract_payload(batch[r["url"]]["html"]).text
+    # stream == one batch run over the same pages: rows and bucket lineage
+    batch_out = str(tmp_path / "batch")
+    run_extraction(spark, all_pages, batch_out, run_id="batch")
+    assert _extraction_store(spark, out) == _extraction_store(spark, batch_out)
+
+    # streamed text byte-identical to the kernel
+    html = {r["url"]: r["html"] for r in all_pages.collect()}
+    for r in res.filter(F.col("status") != "failed").collect():
+        assert r["text"] == extract_payload(html[r["url"]]).text
+
+
+def test_streaming_extraction_exactly_once_across_crashed_epoch(spark, tmp_path, monkeypatch):
+    """An epoch that dies after staging results + lineage, before its
+    marker, is invisible; the restart on the same checkpoint replays it, and
+    the store equals a clean stream's: each url once, no lineage hole."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from batch_doc_vqa_spark.plans import extract_job
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("pages_in", "out", "ckpt"))
+    pages_df(spark, 60, seed=42).write.parquet(src)
+    commit_marker, calls = extract_job.commit_marker, []
+
+    def crash_once(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == 1:
+            raise RuntimeError("killed before the commit marker")
+        return commit_marker(*args, **kwargs)
+
+    monkeypatch.setattr(extract_job, "commit_marker", crash_once)
+    with pytest.raises(StreamingQueryException, match="killed before the commit marker"):
+        extraction_stream(spark, src, out, ckpt).awaitTermination(120)
+    assert committed_publish_ids(spark, out) == []
+    assert os.path.isdir(f"{out}/lineage/run_id=e00000000")  # staged, not committed
+
+    extraction_stream(spark, src, out, ckpt).awaitTermination(120)
+    assert committed_publish_ids(spark, out) == ["e00000000"]
+    urls = [r["url"] for r in read_results(spark, out).select("url").collect()]
+    assert len(urls) == len(set(urls)) == 60
+    lineage = read_lineage(spark, out).collect()
+    assert len({r["bucket"] for r in lineage}) == len(lineage)
+    assert {r["bucket"] for r in lineage} == {
+        r["bucket"] for r in read_results(spark, out).select("bucket").distinct().collect()
+    }
+    assert sum(r["n_docs"] for r in lineage) == 60
+
+    clean = str(tmp_path / "clean")
+    extraction_stream(spark, src, clean, str(tmp_path / "clean_ckpt")).awaitTermination(120)
+    assert _extraction_store(spark, out) == _extraction_store(spark, clean)
 
 
 def test_streaming_hourly_rollup(spark, tmp_path, sf_dir):

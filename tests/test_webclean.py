@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from batch_doc_vqa_spark.functions.udfs import host_of
 from batch_doc_vqa_spark.operators import webclean
 
 
@@ -71,5 +72,5 @@ def test_host_of_strips_userinfo_and_port(spark):
         ("https://g.example.org/path@not-userinfo", "g.example.org"),
     ]
     df = spark.createDataFrame(cases, "url string, want string")
-    got = df.select("want", webclean._host_of(F.col("url")).alias("host")).collect()
+    got = df.select("want", host_of(F.col("url")).alias("host")).collect()
     assert [r["host"] for r in got] == [r["want"] for r in got]
