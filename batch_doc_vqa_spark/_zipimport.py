@@ -8,6 +8,12 @@ task spent 170-245 ms of CPU before it read its UDF. CPython 3.13 made the
 invalidation lazy: drop the cached directory, read it again on the next
 lookup. This module backports that behaviour. Importing the package installs
 it, and a worker imports the package when it unpickles its first UDF.
+
+Tasks that never import the package keep the old cost. A Python-RDD task
+(``createDataFrame`` over a list of rows plans as ``Scan ExistingRDD``) runs
+only pyspark's own serializers, so frames built from driver-side rows go
+through pandas instead: Arrow decodes them in the JVM, as a local scan with
+no Python task at all.
 """
 
 import sys

@@ -44,9 +44,8 @@ EXTRACT_TYPE = T.StructType(
 )
 
 
-@F.pandas_udf(EXTRACT_TYPE)
-def extract_udf(html: pd.Series) -> pd.DataFrame:
-    """binary html/SPDF payload → struct(text, spans, status, error)."""
+def extract_frame(html: pd.Series) -> pd.DataFrame:
+    """binary html/SPDF payloads → frame of (text, spans, status, error)."""
     texts, spans, status, errors = [], [], [], []
     for payload in html:
         r = extract_payload(payload)
@@ -55,6 +54,9 @@ def extract_udf(html: pd.Series) -> pd.DataFrame:
         status.append(r.status)
         errors.append(r.error)
     return pd.DataFrame({"text": texts, "spans": spans, "status": status, "error": errors})
+
+
+extract_udf = F.pandas_udf(extract_frame, EXTRACT_TYPE)
 
 
 def host_of(url_col):

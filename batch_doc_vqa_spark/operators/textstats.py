@@ -611,9 +611,13 @@ def classifier_score(
     """
     from .dedup import normalized_tokens, portable_hash64
 
-    w_rows = [(int(b), float(w)) for b, w in sorted(weights.items())]
+    w_rows = sorted(weights.items()) or [(0, 0.0)]
     spark = df.sparkSession
-    w_df = spark.createDataFrame(w_rows or [(0, 0.0)], "_b long, _w double")
+    # a pandas frame is a local scan; a list of tuples runs Python-RDD tasks
+    w_df = spark.createDataFrame(
+        pd.DataFrame({"_b": [int(b) for b, _ in w_rows], "_w": [float(w) for _, w in w_rows]}),
+        "_b long, _w double",
+    )
     toks = df.select(F.col(id_col), normalized_tokens(F.col(text_col)).alias("_t"))
     tok = toks.select(id_col, F.explode_outer("_t").alias("_tok"))
     bucketed = tok.withColumn(

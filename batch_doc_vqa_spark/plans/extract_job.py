@@ -1,5 +1,5 @@
 """The extraction job: scan → resume filter → salted repartition → vectorized
-extract → validate → results + per-partition lineage.
+extract → validate → results + per-bucket lineage.
 
 This is the Spark-native shape of the reference's inference run
 (/root/reference/src/batch_doc_vqa/openrouter/inference.py:2173-2294): its
@@ -14,7 +14,9 @@ Contract (BASELINE.json north rule):
 - partitioning: hash(url) buckets, salted for skewed hosts (plans/skew.py);
   bucket ids are pure functions of the data so reruns see the same layout;
 - lineage: one row per (run_id, bucket): doc count, byte count, failure count,
-  the first 100 failure urls in sorted order, status;
+  the first 100 failure urls in sorted order, status. The extraction UDF folds
+  these counts into an accumulator while the results are written, so the
+  lineage costs no read-back and no extra Spark job;
 - resume: rerunning with the same output dir processes only urls absent from
   the committed results — reruns are idempotent, a torn run leaves no trace,
   and the final table is identical to a single-shot run;
@@ -28,11 +30,14 @@ import hashlib
 import json
 import uuid
 
+import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import __version__ as ENGINE_VERSION
-from ..functions.udfs import extract_udf
+from ..functions.udfs import EXTRACT_TYPE, extract_frame
 from .publish import (
     _fs,
     commit_marker,
@@ -44,6 +49,44 @@ from .publish import (
 from .skew import BUCKET_COL, with_salted_partition
 
 MAX_FAILURE_URLS_PER_PARTITION = 100
+
+# one row per (run, bucket); run_id is the partition directory
+LINEAGE_SCHEMA = T.StructType(
+    [
+        T.StructField(BUCKET_COL, T.IntegerType()),
+        T.StructField("n_docs", T.LongType(), nullable=False),
+        T.StructField("n_bytes", T.LongType()),
+        T.StructField("n_failed", T.LongType()),
+        T.StructField("failure_urls", T.ArrayType(T.StringType(), containsNull=False), nullable=False),
+        T.StructField("status", T.StringType(), nullable=False),
+        T.StructField("finished_at", T.TimestampType(), nullable=False),
+        T.StructField("config_hash", T.StringType(), nullable=False),
+        T.StructField("config_json", T.StringType(), nullable=False),
+        T.StructField("engine_version", T.StringType(), nullable=False),
+    ]
+)
+
+
+class _LineageFold(AccumulatorParam):
+    """``{bucket: (n_docs, n_bytes, n_failed, failure_urls)}``, merged per
+    bucket: counts add (``n_bytes`` stays None while every payload was null,
+    as SQL ``sum`` does) and the failure urls keep the first
+    ``MAX_FAILURE_URLS_PER_PARTITION`` in sorted order. The merge is
+    associative and commutative, so a bucket spread over several Arrow
+    batches folds to the same row in any order."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, acc: dict, more: dict) -> dict:
+        for bucket, (n_docs, n_bytes, n_failed, urls) in more.items():
+            if bucket in acc:
+                d, b, f, u = acc[bucket]
+                n_docs, n_failed = d + n_docs, f + n_failed
+                n_bytes = b if n_bytes is None else n_bytes + (b or 0)
+                urls = sorted(u + urls)[:MAX_FAILURE_URLS_PER_PARTITION]
+            acc[bucket] = (n_docs, n_bytes, n_failed, urls)
+        return acc
 
 
 def config_fingerprint(config: dict) -> tuple[str, str]:
@@ -101,11 +144,13 @@ def run_extraction(
     makes both visible at once. A run that dies before its marker is
     invisible to ``read_results``/``read_lineage`` and to the done-set, so
     the next resume re-extracts its urls and the lineage never has holes.
-    The per-run lineage read-back prunes to this run's directory —
-    O(|run|), not O(corpus), per incremental run. This is the parquet
-    emulation of the reference's run-scoped artifact dirs
-    (core/run_manager.py:368-407); an Iceberg table with identity
-    partitioning on run_id is the drop-in upgrade.
+    The lineage is a by-product of the results write: the extraction UDF
+    folds each Arrow batch's per-bucket counts into an accumulator, whose
+    updates Spark merges once per result partition and never from a failed
+    attempt. A run costs O(|run|), not O(corpus), and reads nothing back.
+    The run_id directories are the parquet emulation of the reference's
+    run-scoped artifact dirs (core/run_manager.py:368-407); an Iceberg table
+    with identity partitioning on run_id is the drop-in upgrade.
 
     A ``run_id`` that is already committed in ``out_dir`` is refused with
     ``FileExistsError``: restaging it would overwrite the committed rows.
@@ -164,9 +209,38 @@ def run_extraction(
     failure_statuses = (
         ("error", "unsupported_format", "empty") if strict else ("error", "unsupported_format")
     )
+    # lineage folds inside the extraction UDF: the accumulator's updates
+    # arrive with the results write's own result tasks (once per partition,
+    # none from a failed attempt), so no read-back, aggregate or collect
+    folds = spark.sparkContext.accumulator({}, _LineageFold())
+
+    @F.pandas_udf(EXTRACT_TYPE)
+    def extract_and_fold(html: pd.Series, bucket: pd.Series, url: pd.Series) -> pd.DataFrame:
+        out = extract_frame(html)
+        batch = pd.DataFrame(
+            {
+                "bucket": bucket,
+                "url": url,
+                "n_bytes": html.map(len, na_action="ignore"),
+                "failed": out["status"].isin(failure_statuses),
+            }
+        )
+        fold = {}
+        for b, g in batch.groupby("bucket", sort=False, dropna=False):
+            n_bytes = g["n_bytes"].sum(min_count=1)
+            failed = g["url"][g["failed"]].dropna()
+            fold[int(b)] = (
+                len(g),
+                None if pd.isna(n_bytes) else int(n_bytes),
+                int(g["failed"].sum()),
+                sorted(failed)[:MAX_FAILURE_URLS_PER_PARTITION],
+            )
+        folds.add(fold)
+        return out
+
     is_failed = F.col("_ex.status").isin(*failure_statuses)
     extracted = (
-        bucketed.withColumn("_ex", extract_udf(F.col("html")))
+        bucketed.withColumn("_ex", extract_and_fold("html", BUCKET_COL, "url"))
         .select(
             "url",
             "warc_ts",
@@ -182,36 +256,26 @@ def run_extraction(
     )
     stage_table(spark, out_dir, run_id, "results", extracted)
 
-    # lineage from what was actually staged (read-back, not recompute),
-    # pruned to THIS run's directory and read with the schema just written;
-    # ≤ num_buckets rows, collected once and staged as a single file
-    staged = spark.read.schema(extracted.schema).parquet(f"{out_dir}/results/run_id={run_id}")
-    lineage = staged.groupBy(BUCKET_COL).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_input_bytes").alias("n_bytes"),
-        F.sum((F.col("status") == "failed").cast("long")).alias("n_failed"),
-        # sorted: the first 100 in delivery order would differ between runs
-        F.slice(
-            F.array_sort(F.collect_list(F.when(F.col("status") == "failed", F.col("url")))),
-            1,
-            MAX_FAILURE_URLS_PER_PARTITION,
-        ).alias("failure_urls"),
-        F.lit("done").alias("status"),
-        F.current_timestamp().alias("finished_at"),
-        F.lit(config_hash).alias("config_hash"),
-        F.lit(config_json).alias("config_json"),
-        F.lit(ENGINE_VERSION).alias("engine_version"),
-    )
-    rows = lineage.toPandas()
+    buckets = sorted(folds.value.items())
     summary = {
-        "n_partitions": len(rows),
-        "n_docs": int(rows["n_docs"].sum()),
-        "n_bytes": int(rows["n_bytes"].sum()),
-        "n_failed": int(rows["n_failed"].sum()),
+        "n_partitions": len(buckets),
+        "n_docs": sum(f[0] for _, f in buckets),
+        "n_bytes": sum(f[1] or 0 for _, f in buckets),
+        "n_failed": sum(f[2] for _, f in buckets),
         "run_id": run_id,
     }
-    if rows.empty:
+    if not buckets:
         return summary  # nothing left to do: no lineage, no marker
-    stage_table(spark, out_dir, run_id, "lineage", spark.createDataFrame(rows, lineage.schema).coalesce(1))
+    finished_at = pd.Timestamp.now(tz="UTC")
+    # a pandas frame is Arrow-decoded in the JVM (a local scan, no job);
+    # a list of tuples would run Python-RDD tasks inside the write
+    lineage = pd.DataFrame(
+        [
+            (b, *f, "done", finished_at, config_hash, config_json, ENGINE_VERSION)
+            for b, f in buckets
+        ],
+        columns=LINEAGE_SCHEMA.names,
+    )
+    stage_table(spark, out_dir, run_id, "lineage", spark.createDataFrame(lineage, LINEAGE_SCHEMA).coalesce(1))
     commit_marker(spark, out_dir, run_id)  # results + lineage visible at once
     return summary

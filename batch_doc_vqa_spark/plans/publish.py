@@ -537,8 +537,8 @@ def commit_run(
     all known up front (batch publish, every streaming epoch via
     ``streaming.publish_stream.epoch_stream``): ``stage_table`` per table,
     then ``commit_marker``. ``run_extraction`` stages its two tables itself
-    (lineage is computed from the staged results) and commits the same
-    way. ``_crash_after`` is a test-only fault-injection point: raise right
+    (lineage is known only once the results write has run) and commits the
+    same way. ``_crash_after`` is a test-only fault-injection point: raise right
     after the named table's write."""
     for name, df in tables.items():
         stage_table(spark, out_dir, run_id, name, df)

@@ -19,6 +19,7 @@ from dataclasses import dataclass
 from functools import reduce
 from typing import Any
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -88,7 +89,9 @@ def _axis_df(spark: SparkSession, axis: SweepAxis) -> DataFrame:
         if any(isinstance(v, float) for v in axis.values)
         else ("long" if all(isinstance(v, int) for v in axis.values) else "string")
     )
-    vals = [(float(v),) if dtype == "double" else ((int(v),) if dtype == "long" else (str(v),)) for v in axis.values]
+    cast = {"double": float, "long": int, "string": str}[dtype]
+    # a pandas frame is a local scan; a list of tuples runs Python-RDD tasks
+    vals = pd.DataFrame({axis.name: [cast(v) for v in axis.values]})
     return spark.createDataFrame(vals, f"{axis.name} {dtype}")
 
 

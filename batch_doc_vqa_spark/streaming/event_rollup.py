@@ -5,11 +5,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .dedup_stream import EVENTS_SCHEMA
+
 
 def hourly_rollup_stream(
     spark: SparkSession,
     events_dir: str,
-    schema: str = "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
+    schema: str = EVENTS_SCHEMA,
     watermark: str = "2 hours",
 ) -> DataFrame:
     """File-source stream → watermarked tumbling-window counts per type."""

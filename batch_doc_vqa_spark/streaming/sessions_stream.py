@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .dedup_stream import EVENTS_SCHEMA
+
 SESSION_SCHEMA = "user_id long, session_start timestamp, session_end timestamp, n_events long"
 _STATE_SCHEMA = "start long, last long, n long"
 
@@ -97,8 +99,7 @@ def _update(key, pdfs, state: GroupState):
 
 
 def session_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = spark.readStream.schema(schema).parquet(events_dir)
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_dir)
     return (
         stream.withWatermark("ts", "1 hour")
         .groupBy("user_id")

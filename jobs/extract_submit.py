@@ -26,8 +26,10 @@ The extraction stage runs min(--num-buckets, spark.sql.shuffle.partitions)
 tasks: the bucket count fixes the lineage and salting key, the session's
 shuffle parallelism fixes the task count (Spark's default is 200).
 
-The session applies batch_doc_vqa_spark.session.SESSION_CONF, over --conf
-for its keys; the master and the shuffle parallelism come from spark-submit.
+The session applies batch_doc_vqa_spark.session.SESSION_CONF for the keys
+that spark-submit (--conf or spark-defaults.conf) leaves unset, so a --conf
+value always wins; the master and the shuffle parallelism come from
+spark-submit.
 """
 
 from __future__ import annotations
@@ -35,7 +37,17 @@ from __future__ import annotations
 import argparse
 import json
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+
+def unset_session_conf(launch: SparkConf) -> dict[str, str]:
+    """The ``SESSION_CONF`` entries whose keys ``launch`` does not set.
+    Builder options override the launch conf, so only these may go through
+    the builder."""
+    from batch_doc_vqa_spark.session import SESSION_CONF
+
+    return {k: v for k, v in SESSION_CONF.items() if not launch.contains(k)}
 
 
 def main() -> None:
@@ -56,10 +68,13 @@ def main() -> None:
     args = ap.parse_args()
 
     from batch_doc_vqa_spark.plans.extract_job import run_extraction
-    from batch_doc_vqa_spark.session import SESSION_CONF
     from batch_doc_vqa_spark.sources.pages import pages_df
 
-    spark = SparkSession.builder.appName("extract_pages").config(map=SESSION_CONF).getOrCreate()
+    # before the gateway JVM starts, SparkConf() is an empty Python-side
+    # conf; after, it holds spark-submit's --conf and spark-defaults.conf
+    SparkContext._ensure_initialized()
+    conf = unset_session_conf(SparkConf())
+    spark = SparkSession.builder.appName("extract_pages").config(map=conf).getOrCreate()
 
     if args.pages:
         pages = spark.read.parquet(args.pages)

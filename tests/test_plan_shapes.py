@@ -64,6 +64,15 @@ def test_extraction_path_is_shuffle_lean(plans):
     assert "BatchEvalPython" not in p  # never a row-at-a-time Python UDF
 
 
+def test_driver_built_frames_are_local_scans(plans):
+    # frames built from driver-side lists (classifier weights, sweep axes)
+    # go through pandas: Arrow-decoded in the JVM as a LocalTableScan, never
+    # a Scan ExistingRDD whose Python-RDD tasks run inside the action
+    for q in ("classifier_quality_score", "sweep_grid"):
+        p = plans(q)
+        assert "ExistingRDD" not in p and "LocalTableScan" in p, q
+
+
 def test_minhash_band_join_not_nested_loop(plans):
     p = plans("minhash_lsh_pairs")
     # the band self-join must be a hash join on the band key, never BNLJ

@@ -27,6 +27,7 @@ def test_get_spark_and_extract_submit_apply_session_conf(spark, monkeypatch):
     import runpy
     import sys
 
+    import pyspark
     from pyspark.sql import SparkSession
 
     for key, value in session.SESSION_CONF.items():
@@ -39,6 +40,9 @@ def test_get_spark_and_extract_submit_apply_session_conf(spark, monkeypatch):
         raise Built(dict(builder._options))
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    # a spark-submit launch that sets none of the keys
+    conf_class = pyspark.SparkConf
+    monkeypatch.setattr(pyspark, "SparkConf", lambda: conf_class(loadDefaults=False))
     monkeypatch.setattr(sys, "argv", ["extract_submit.py", "--synthesize", "1", "--out", "unused"])
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with pytest.raises(Built) as built:
@@ -46,3 +50,19 @@ def test_get_spark_and_extract_submit_apply_session_conf(spark, monkeypatch):
     options = built.value.args[0]
     assert {k: options.get(k) for k in session.SESSION_CONF} == session.SESSION_CONF
     assert "spark.master" not in options
+
+
+def test_extract_submit_leaves_launch_conf_keys_alone(spark):
+    """A key spark-submit already set (``--conf``) keeps its launch value:
+    the job passes only the unset ``SESSION_CONF`` keys to the builder,
+    whose options would override the launch conf."""
+    import runpy
+
+    from pyspark import SparkConf
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    job = runpy.run_path(os.path.join(root, "jobs", "extract_submit.py"), run_name="extract_submit")
+    launch = SparkConf(loadDefaults=False).set("spark.ui.enabled", "true")
+    assert job["unset_session_conf"](launch) == {
+        k: v for k, v in session.SESSION_CONF.items() if k != "spark.ui.enabled"
+    }
