@@ -33,14 +33,14 @@ before this layout (``snap`` partition dirs) has no ``run_id`` column, so
 its reads raise a ValueError naming the path instead of coming back
 empty; rebuild it at a new path with ``build_dedup_index``.
 
-Maintenance is the shared protocol too: ``compact_dedup_index`` holds the
-store's maintenance lease (``commit_marker`` refuses under it) and swaps
-the marker dir through ``swap_marker_dir``, which rolls the compaction back
-if a racer committed (the racer always wins — a committed snapshot is
-never lost; ``ConcurrentCommitError``). Crashes are adjudicated by
-``recover_marker_store``; disk for superseded snapshots is reclaimed by
-the separate ``vacuum_store`` step, never mid-swap (concurrent readers keep
-scanning old files safely).
+Maintenance is the shared protocol too: ``compact_dedup_index`` is a
+rebuild step on ``compact_store``'s skeleton (``plans.publish._compact``):
+the lease blocks commits, the folded snapshot ids are recorded
+(``consolidated_run_ids``), and ``swap_marker_dir`` settles through
+``recover_marker_store``, which rolls back if a racer committed (the racer
+always wins; ``ConcurrentCommitError``) and adjudicates crashes. Disk for
+superseded snapshots is reclaimed by the separate ``vacuum_store`` step,
+never mid-swap (concurrent readers keep scanning old files safely).
 """
 
 from __future__ import annotations
@@ -51,14 +51,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.publish import (
+    _compact,
     _read_table,
-    begin_maintenance,
     clear_for_create,
     commit_run,
     committed_publish_ids,
     read_committed_table,
     stage_table,
-    swap_marker_dir,
 )
 from .dedup import banded_rows, minhash_signatures
 
@@ -121,11 +120,12 @@ def compact_dedup_index(
     emulation keeps a re-ingested id's ORIGINAL signature until this runs;
     an Iceberg MERGE would update in place).
 
-    The publish store's protocol (``begin_maintenance`` → staged tables →
-    ``swap_marker_dir``), with one snapshot rebuilt from ``current_docs``
-    in place of consolidated runs: the live ``_committed`` dir is replaced
-    by one holding only the new snapshot's marker. A snapshot that commits
-    mid-compaction rolls the compaction back (``ConcurrentCommitError``) —
+    ``compact_store``'s skeleton (``plans.publish._compact``), with one
+    snapshot rebuilt from ``current_docs`` in place of consolidated runs:
+    the live ``_committed`` dir is replaced by one holding only the new
+    snapshot's marker, and every snapshot it replaced is recorded as
+    consolidated (an index with none raises ValueError). A snapshot that
+    commits mid-compaction rolls the compaction back (``ConcurrentCommitError``) —
     re-run it from a corpus state that includes the preserved snapshot. A
     crash leaves the lease for ``recover_marker_store``; no window ever
     shows old and new snapshots together (duplicate ids) or a half-written
@@ -136,17 +136,16 @@ def compact_dedup_index(
     /root/reference/src/batch_doc_vqa/benchmarks/published_runs.py:884-911.
     """
     p = {**INDEX_PARAMS, **params}
-    snap = "compact-" + uuid.uuid4().hex[:12]
-    pre_markers = begin_maintenance(spark, path, snap)
-    sigs = minhash_signatures(
-        current_docs, id_col, text_col, p["n"], p["num_hashes"], p["seed"], p["base_hash"]
-    ).localCheckpoint(eager=True)
-    bands = banded_rows(sigs, p["num_hashes"], p["bands"], p["base_hash"])
-    for name, df in _snapshot_tables(sigs, bands).items():
-        stage_table(spark, path, snap, name, df)  # deliberately NOT committed yet
-    if _test_hook_before_swap is not None:
-        _test_hook_before_swap()
-    swap_marker_dir(spark, path, [snap], pre_markers)
+
+    def rebuild(snap: str, _targets: list[str]) -> None:
+        sigs = minhash_signatures(
+            current_docs, id_col, text_col, p["n"], p["num_hashes"], p["seed"], p["base_hash"]
+        ).localCheckpoint(eager=True)
+        bands = banded_rows(sigs, p["num_hashes"], p["bands"], p["base_hash"])
+        for name, df in _snapshot_tables(sigs, bands).items():
+            stage_table(spark, path, snap, name, df)  # deliberately NOT committed yet
+
+    _compact(spark, path, None, rebuild, _test_hook_before_swap)
 
 
 def incremental_dedup_pairs(

@@ -42,6 +42,7 @@ from .publish import (
     _fs,
     commit_marker,
     committed_publish_ids,
+    consolidated_run_ids,
     read_committed_table,
     read_schema_store,
     stage_table,
@@ -152,8 +153,9 @@ def run_extraction(
     run-scoped artifact dirs (core/run_manager.py:368-407); an Iceberg table
     with identity partitioning on run_id is the drop-in upgrade.
 
-    A ``run_id`` that is already committed in ``out_dir`` is refused with
-    ``FileExistsError``: restaging it would overwrite the committed rows.
+    A ``run_id`` that is already committed in ``out_dir``, or consolidated
+    by a ``compact_store`` of it, is refused with ``FileExistsError``:
+    restaging it would overwrite or duplicate the committed rows.
     A call with nothing left to do commits nothing (no lineage, no marker;
     its empty results dir stays an invisible torn run). A ``results``
     directory holding data files but no committed marker and no stored
@@ -184,8 +186,9 @@ def run_extraction(
     )
 
     committed = committed_publish_ids(spark, out_dir)
-    if run_id in committed:
-        # restaging it would overwrite committed rows the done-set reads
+    if run_id in committed or run_id in consolidated_run_ids(spark, out_dir, committed):
+        # restaging it would overwrite committed rows the done-set reads,
+        # or commit a compacted run's rows a second time
         raise FileExistsError(
             f"run {run_id!r} is already committed in {out_dir}: resume under a new run_id"
         )

@@ -15,6 +15,10 @@ half-written directories exist on disk but are invisible until the marker
 appears, and a retry of the same run_id overwrites them idempotently. This
 is the parquet emulation of an Iceberg two-table transaction; the marker
 file plays the snapshot-commit role.
+
+Store maintenance (the expire-snapshots analogue) is one pass for every
+marker-committed store: ``compact_store`` → ``swap_marker_dir``, which
+settles through ``recover_marker_store`` → ``vacuum_store``.
 """
 
 from __future__ import annotations
@@ -97,7 +101,7 @@ class ConcurrentCommitError(RuntimeError):
 def acquire_maintenance_lease(spark: SparkSession, root: str, payload: dict) -> None:
     """Atomic create-if-absent claim of ``{root}/_compact_lease`` — the
     single-writer gate every marker-committed store's maintenance pass uses
-    (publish compaction here, index compaction in operators/dedup_index).
+    (``compact_store`` here, ``compact_dedup_index`` in operators/dedup_index).
     The body records what the pass supersedes, for crash adjudication."""
     import json as _json
 
@@ -124,19 +128,12 @@ def acquire_maintenance_lease(spark: SparkSession, root: str, payload: dict) -> 
 
 
 def read_maintenance_lease(spark: SparkSession, root: str) -> dict | None:
-    import json as _json
-
     fs, lease = _fs(spark, f"{root}/_compact_lease")
     if not fs.exists(lease):
         return None
-    stream = fs.open(lease)
     try:
-        data = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    try:
-        return _json.loads(data.decode())
-    except Exception:
+        return _read_json(spark, f"{root}/_compact_lease")
+    except ValueError:
         # a crash mid-(re)write leaves an empty/torn lease body. The lease
         # FILE existing is what matters: report it as held-with-empty-body
         # so commit/vacuum still refuse and recover can still adjudicate
@@ -150,27 +147,32 @@ def release_maintenance_lease(spark: SparkSession, root: str) -> None:
     fs.delete(lease, False)
 
 
+def _write_json(spark: SparkSession, path: str, obj) -> None:
+    import json as _json
+
+    fs, jpath = _fs(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(_json.dumps(obj).encode()))
+    finally:
+        out.close()
+
+
+def _read_json(spark: SparkSession, path: str):
+    import json as _json
+
+    fs, jpath = _fs(spark, path)
+    stream = fs.open(jpath)
+    try:
+        return _json.loads(bytes(stream.readAllBytes()).decode())
+    finally:
+        stream.close()
+
+
 def _write_lease(spark: SparkSession, root: str, body: dict) -> None:
     """Overwrite the body of a lease this pass already HOLDS (never
     release/re-acquire: that window would let a commit slip in unrecorded)."""
-    import json as _json
-
-    fs, lease = _fs(spark, f"{root}/_compact_lease")
-    out = fs.create(lease, True)
-    out.write(bytearray(_json.dumps(body).encode()))
-    out.close()
-
-
-def begin_maintenance(spark: SparkSession, root: str, distinguished: str) -> list[str]:
-    """The prologue of every store's compaction: claim the lease, capture
-    the committed marker set UNDER it (markers committed between a first
-    look and the claim belong to that set), and record the set in the lease
-    body so ``recover_marker_store`` adjudicates from the same set the live
-    pass uses. Returns the captured markers."""
-    acquire_maintenance_lease(spark, root, {"distinguished": distinguished, "pre_markers": []})
-    pre = committed_publish_ids(spark, root)
-    _write_lease(spark, root, {"distinguished": distinguished, "pre_markers": pre})
-    return pre
+    _write_json(spark, f"{root}/_compact_lease", body)
 
 
 def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
@@ -183,8 +185,8 @@ def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     dirs stay invisible), so the refusal sits at the commit point. Refuses
     while a maintenance lease is held on the same store: a marker committed
     mid-compaction would not be in the rebuilt marker set (the remaining
-    probe-to-commit race is caught by the compaction's post-swap
-    verification, which rolls back rather than lose the run)."""
+    probe-to-commit race is caught when the swap settles through
+    ``recover_marker_store``, which rolls back rather than lose the run)."""
     if read_maintenance_lease(spark, out_dir) is not None:
         raise MaintenanceInProgressError(
             f"commit blocked: store maintenance in progress at {out_dir} "
@@ -223,15 +225,10 @@ def save_index(
     each ``DataFrameWriter`` lands at ``<path>/<name>`` and ``meta.json``
     next to them, then one ``_committed/index`` marker makes the whole
     index visible — a torn save is invisible to ``load_index_meta``."""
-    import json as _json
-
     clear_for_create(spark, path)
     for name, writer in writers.items():
         writer.parquet(f"{path}/{name}")
-    fs, jpath = _fs(spark, f"{path}/meta.json")
-    out = fs.create(jpath, True)
-    out.write(bytearray(_json.dumps(meta).encode()))
-    out.close()
+    _write_json(spark, f"{path}/meta.json", meta)
     commit_marker(spark, path, "index")
 
 
@@ -239,20 +236,13 @@ def load_index_meta(spark: SparkSession, path: str, what: str) -> tuple[list[str
     """(committed markers, meta) of an index saved by ``save_index``;
     raises FileNotFoundError when its ``index`` marker is missing (a torn
     save is invisible by design)."""
-    import json as _json
-
     markers = committed_publish_ids(spark, path)
     if "index" not in markers:
         raise FileNotFoundError(
             f"no committed {what} under {path} (save it first; a torn save is "
             "invisible by design)"
         )
-    fs, jpath = _fs(spark, f"{path}/meta.json")
-    stream = fs.open(jpath)
-    try:
-        return markers, _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    return markers, _read_json(spark, f"{path}/meta.json")
 
 
 def _schema_versions(spark: SparkSession, out_dir: str, table: str) -> list[tuple[int, str]]:
@@ -292,8 +282,6 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
     Iceberg's job). Written BEFORE the run's marker: a torn run's extra
     nullable columns in the union are harmless, while the reverse order
     could commit a run whose columns the stored schema lacks."""
-    import json as _json
-
     from pyspark.sql.types import StructType
 
     for _ in range(50):
@@ -329,23 +317,18 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
         import uuid as _uuid
 
         nonce = _uuid.uuid4().hex
-        payload = {"nonce": nonce, "schema": merged.jsonValue()}
         fs, tmp = _fs(spark, f"{out_dir}/_schema/.tmp-{nonce}")
         fs.mkdirs(tmp.getParent())
-        out = fs.create(tmp, True)
-        out.write(bytearray(_json.dumps(payload).encode()))
-        out.close()
-        jpath = _fs(spark, f"{out_dir}/_schema/{table}.v{latest_n + 1}.json")[1]
-        if not fs.rename(tmp, jpath):
+        payload = {"nonce": nonce, "schema": merged.jsonValue()}
+        _write_json(spark, f"{out_dir}/_schema/.tmp-{nonce}", payload)
+        version = f"{out_dir}/_schema/{table}.v{latest_n + 1}.json"
+        if not fs.rename(tmp, _fs(spark, version)[1]):
             fs.delete(tmp, False)  # lost the version race — re-read, merge
             continue
-        stream = fs.open(jpath)
         try:
-            landed = _json.loads(bytes(stream.readAllBytes()).decode())
-        except Exception:
+            landed = _read_json(spark, version)
+        except ValueError:
             landed = {}
-        finally:
-            stream.close()
         if landed.get("nonce") == nonce:
             return
         # a peer replaced our rename (POSIX semantics) — retry on top
@@ -358,22 +341,14 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
 def _latest_schema(spark: SparkSession, out_dir: str, table: str):
     """(version, StructType) of the latest READABLE schema version, or None.
     A torn newest version file falls back to the version before it."""
-    import json as _json
-
     from pyspark.sql.types import StructType
 
     for n, name in reversed(_schema_versions(spark, out_dir, table)):
-        fs, jpath = _fs(spark, f"{out_dir}/_schema/{name}")
-        stream = fs.open(jpath)
         try:
-            data = bytes(stream.readAllBytes())
-        finally:
-            stream.close()
-        try:
-            d = _json.loads(data.decode())
+            d = _read_json(spark, f"{out_dir}/_schema/{name}")
             # nonce-wrapped (current) or bare StructType json (early r5)
             return n, StructType.fromJson(d["schema"] if "schema" in d else d)
-        except Exception:
+        except (ValueError, KeyError, TypeError):
             continue  # torn version file — try the one before it
     return None
 
@@ -421,10 +396,10 @@ def read_committed_table(spark: SparkSession, out_dir: str, table: str) -> DataF
     Schema comes from the commit-time schema store (one tiny JSON read, no
     per-run footer fetches); stores written before the schema store existed
     fall back to ``mergeSchema``. The isin literal list grows with run
-    count — ``compact_published_store`` consolidates old runs into one
-    partition so the live marker set stays small (the Iceberg analogue is
-    snapshot expiration); compacted rows keep their ORIGINAL ``run_id``
-    via the ``src_run_id`` column, so compaction is invisible in output.
+    count — ``compact_store`` consolidates old runs into one partition so
+    the live marker set stays small (the Iceberg analogue is snapshot
+    expiration); compacted rows keep their ORIGINAL ``run_id`` via the
+    ``src_run_id`` column, so compaction is invisible in output.
     """
     ids = committed_publish_ids(spark, out_dir)
     if not ids:
@@ -483,7 +458,9 @@ def publish_run(
     once, and count + both writes reuse the same materialization.
 
     Atomicity: both halves land in ``<table>/run_id=<id>`` directories
-    (mode=overwrite, so a retried run_id is idempotent); the run becomes
+    (mode=overwrite, so a retried run_id is idempotent; once a compaction
+    has consolidated the run, its id is refused with ``FileExistsError``,
+    since a re-commit would sit beside the compacted rows); the run becomes
     visible to ``read_published``/``read_quarantine`` only when the single
     ``_committed/<id>`` marker file is created after both writes succeed.
     ``_crash_before_commit`` is a test-only fault-injection point: 'published'
@@ -491,6 +468,11 @@ def publish_run(
     before the marker — the kill-between-writes test drives both.
     """
     run_id = run_id or "p" + uuid.uuid4().hex[:12]
+    if run_id in consolidated_run_ids(spark, out_dir):
+        raise FileExistsError(
+            f"run {run_id!r} was consolidated by a compaction of {out_dir}: its "
+            "rows are committed — publish under a new run_id"
+        )
     if scrub_pii and text_col is not None:
         from ..operators.pii import redact_columns
 
@@ -560,60 +542,112 @@ def stage_table(spark: SparkSession, out_dir: str, run_id: str, name: str, df: D
     df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_id={run_id}")
 
 
-def compact_published_store(
+def _store_tables(spark: SparkSession, root: str) -> dict[str, tuple | None]:
+    """Each child dir of ``root`` not named ``_…`` → its latest readable
+    stored schema ``(version, StructType)``, or None: a dir without one was
+    not written through ``stage_table`` (a pre-protocol store, an index)."""
+    fs, jroot = _fs(spark, root)
+    if not fs.exists(jroot):
+        return {}
+    return {
+        st.getPath().getName(): _latest_schema(spark, root, st.getPath().getName())
+        for st in fs.listStatus(jroot)
+        if st.isDirectory() and not st.getPath().getName().startswith("_")
+    }
+
+
+def consolidated_run_ids(
+    spark: SparkSession, root: str, live: list[str] | None = None
+) -> set[str]:
+    """Run ids folded into a compaction whose marker is in ``live`` (the
+    committed set when not given), from its ``_compacted/<compact_id>.json``
+    record; a re-compaction carries its targets' ids forward. Writers treat
+    them like live ids: restaging one would commit its rows twice. Reads
+    files only — no Spark job."""
+    fs, rdir = _fs(spark, f"{root}/_compacted")
+    if not fs.exists(rdir):
+        return set()
+    live = set(committed_publish_ids(spark, root) if live is None else live)
+    ids: set[str] = set()
+    for st in fs.listStatus(rdir):
+        name = st.getPath().getName()
+        if name.removesuffix(".json") in live:
+            ids.update(_read_json(spark, f"{root}/_compacted/{name}"))
+    return ids
+
+
+def compact_store(
     spark: SparkSession,
-    out_dir: str,
+    root: str,
     run_ids: list[str] | None = None,
     _test_hook_before_swap=None,
 ) -> str:
-    """Consolidate committed runs into ONE partition and shrink the live
-    marker set — the Iceberg snapshot-expiration analogue that removes the
-    documented ~10^4-run ceiling of the ``isin``-literal marker list
-    (VERDICT r4 #5). ``read_published``/``read_quarantine`` output is
-    IDENTICAL before and after: compacted rows keep their original
-    ``run_id`` through the ``src_run_id`` column the readers coalesce.
+    """Consolidate committed runs of any marker-committed store into ONE
+    partition per table and shrink the live marker set — the Iceberg
+    expire-snapshots analogue that removes the ~10^4-run ceiling of the
+    ``isin``-literal marker list (VERDICT r4 #5). Every table with a stored
+    schema is consolidated; ``read_committed_table`` output is IDENTICAL
+    before and after (rows keep their original ``run_id`` through
+    ``src_run_id``). ``run_ids=None`` compacts every committed run; an
+    explicit subset keeps the others individually addressable. A root
+    with a table dir lacking a stored schema (a ``save_index`` root)
+    raises ValueError naming it. Returns the compaction id.
 
-    ``run_ids=None`` compacts every currently committed run; pass an
-    explicit subset to keep recent runs individually addressable (their
-    markers and directories are untouched).
+    Lease, racer rollback (``ConcurrentCommitError``) and crash recovery
+    are ``_compact``'s; superseded run dirs stay for concurrent readers
+    until ``vacuum_store``."""
+    tables = _store_tables(spark, root)
+    for table, latest in tables.items():
+        if latest is None:
+            raise ValueError(
+                f"compact_store: {root}/{table} has no stored schema — compacting "
+                "the other tables of this store would hide it"
+            )
 
-    Concurrency: same protocol as ``compact_dedup_index`` — a maintenance
-    lease blocks new commits (``commit_marker`` refuses under it), the
-    marker-dir swap is verified post-swap, and a run that slipped the
-    probe-to-commit window triggers a full rollback that preserves it
-    (``ConcurrentCommitError``). Crashes are adjudicated by
-    ``recover_marker_store``; superseded run directories are reclaimed
-    by the separate ``vacuum_store`` step so concurrent readers never lose
-    files mid-scan.
-    """
-    compact_id = "compact" + uuid.uuid4().hex[:12]
-    pre = begin_maintenance(spark, out_dir, compact_id)
+    def consolidate(compact_id: str, targets: list[str]) -> None:
+        for table in tables:
+            df = _read_table(spark, root, table).filter(F.col("run_id").isin(targets))
+            src = F.col("run_id")
+            if "src_run_id" in df.columns:  # re-compacting an already-compacted store
+                src = F.coalesce(F.col("src_run_id"), src)
+            df = df.withColumn("_src", src).drop("run_id", "src_run_id")
+            df = df.withColumnRenamed("_src", "src_run_id")
+            # stage_table's order, but only src_run_id joins the stored
+            # schema: the all-nullable read-back would clash with
+            # non-nullable nested fields (lineage.failure_urls)
+            update_schema_store(spark, root, table, df.select("src_run_id").schema)
+            df.write.mode("overwrite").parquet(f"{root}/{table}/run_id={compact_id}")
+
+    return _compact(spark, root, run_ids, consolidate, _test_hook_before_swap)
+
+
+def _compact(spark: SparkSession, root: str, run_ids, stage, _test_hook_before_swap) -> str:
+    """The one compaction skeleton (``compact_store``, ``compact_dedup_index``):
+    lease → target check → ``stage(compact_id, targets)`` → hook → record
+    of the consolidated ids → swap. ``compact-<hex12>`` ids sort before
+    the streaming twins' ``e…`` epochs (``pairs_for_snapshot``)."""
+    compact_id = "compact-" + uuid.uuid4().hex[:12]
+    # claim the lease, then capture the marker set UNDER it (a marker
+    # committed between a first look and the claim belongs to that set) and
+    # record it, so recover adjudicates from the set this pass uses
+    acquire_maintenance_lease(spark, root, {"distinguished": compact_id, "pre_markers": []})
+    pre = committed_publish_ids(spark, root)
+    _write_lease(spark, root, {"distinguished": compact_id, "pre_markers": pre})
     targets = list(run_ids) if run_ids is not None else list(pre)
     unknown = [r for r in targets if r not in pre]
-    if unknown:
-        release_maintenance_lease(spark, out_dir)
-        raise ValueError(f"compact_published_store: not committed: {unknown}")
-    if not targets:
-        release_maintenance_lease(spark, out_dir)
-        raise ValueError("compact_published_store: nothing to compact")
-
-    for table in ("published", "quarantine"):
-        df = _read_table(spark, out_dir, table).filter(F.col("run_id").isin(targets))
-        if "src_run_id" in df.columns:  # re-compacting an already-compacted store
-            df = df.withColumn(
-                "_src", F.coalesce(F.col("src_run_id"), F.col("run_id"))
-            ).drop("src_run_id")
-        else:
-            df = df.withColumn("_src", F.col("run_id"))
-        stage_table(
-            spark, out_dir, compact_id, table,
-            df.drop("run_id").withColumnRenamed("_src", "src_run_id"),
+    if unknown or not targets:
+        release_maintenance_lease(spark, root)
+        raise ValueError(
+            f"compaction of {root}: "
+            + (f"not committed: {unknown}" if unknown else "nothing to compact")
         )
+    stage(compact_id, targets)
     if _test_hook_before_swap is not None:
         _test_hook_before_swap()
-
-    new_markers = sorted(set(pre) - set(targets)) + [compact_id]
-    swap_marker_dir(spark, out_dir, new_markers, pre)
+    # before the swap: the record exists whenever its marker is live
+    folded = consolidated_run_ids(spark, root, targets) | set(targets)
+    _write_json(spark, f"{root}/_compacted/{compact_id}.json", sorted(folded))
+    swap_marker_dir(spark, root, sorted(set(pre) - set(targets)) + [compact_id], pre)
     return compact_id
 
 
@@ -623,35 +657,32 @@ def swap_marker_dir(
     new_markers: list[str],
     pre_markers: list[str],
 ) -> None:
-    """Replace ``{root}/_committed`` with ``new_markers`` — the ONE
-    maintenance-swap implementation every marker-committed store uses
-    (publish compaction here, index compaction in operators/dedup_index),
-    so the racer handling cannot drift between stores.
+    """Replace ``{root}/_committed`` with ``new_markers``, then settle
+    through ``recover_marker_store`` — the decision table a crashed pass
+    gets, so a live and a crashed pass cannot disagree.
 
-    Caller must HOLD the maintenance lease (``begin_maintenance``); this
+    Caller must HOLD the maintenance lease (``_compact``); this
     function releases it on every exit path except a raised IOError
     (crash-equivalent — ``recover_marker_store`` adjudicates).
 
-    Racer handling — a commit whose lease probe passed before the lease
-    landed can appear in THREE windows, all resolved as "the racer wins,
-    the maintenance pass rolls back, nothing is ever lost":
+    A commit whose lease probe passed before the lease landed can appear
+    in three windows, all resolved as "the racer wins, the pass rolls
+    back, nothing is ever lost" (``ConcurrentCommitError``):
 
-    1. before the aside rename: its marker rides into ``_committed_old``
-       and the post-swap verification catches it (marker not in
-       ``pre_markers``) → rollback;
+    1. before the aside rename: its marker rides into ``_committed_old``;
     2. BETWEEN the two renames: ``commit_marker``'s mkdirs recreates the
-       live dir, so the activate rename fails → the racer's markers are
-       merged into the aside dir, the old set is restored, rollback;
-    3. after the activate rename: the marker lands in the NEW live dir —
-       visible, data intact, simply not part of the compacted partition
-       (for the publish store that is exactly right; the dedup index
-       additionally documents the possible duplicate-signature overlap).
-    """
+       live dir, so the new set is not activated (or lands nested inside
+       it) and the distinguished marker is not live;
+    3. after activation, before recover lists the live dir: its marker is
+       live but not in ``new_markers``.
+
+    A commit after that listing is simply live: visible, data intact, not
+    part of the compacted partition."""
     fs, committed = _fs(spark, f"{root}/_committed")
     nxt = _fs(spark, f"{root}/_committed_next")[1]
     old = _fs(spark, f"{root}/_committed_old")[1]
     # record the full plan in the HELD lease so recover can tell racer
-    # markers from our own in every crash state
+    # markers from our own in every state
     dist = sorted(set(new_markers) - set(pre_markers))
     _write_lease(spark, root, {
         "distinguished": dist[0] if dist else new_markers[-1],
@@ -666,102 +697,39 @@ def swap_marker_dir(
         fs.create(_fs(spark, f"{root}/_committed_next/{m}")[1], True).close()
     if fs.exists(committed) and not fs.rename(committed, old):
         raise IOError(f"maintenance swap: could not move live marker dir aside at {root}")
-
-    def _fold_live_racers_into_old() -> list[str]:
-        """Copy every FILE marker in the live dir that is not part of the
-        new set into the aside dir (racer commits must survive any
-        rollback); subdirectories (nested-rename artifacts) are skipped —
-        they contain only our own new markers."""
-        if not fs.exists(committed):
-            return []
-        racers = sorted(
-            s.getPath().getName()
-            for s in fs.listStatus(committed)
-            if s.isFile() and s.getPath().getName() not in new_markers
-        )
-        fs.mkdirs(old)
-        for m in racers:
-            fs.create(_fs(spark, f"{root}/_committed_old/{m}")[1], True).close()
-        return racers
-
-    def _rollback(racers: list[str], where: str) -> None:
-        # fold window-3 racers (markers that landed in the NEW live dir
-        # after activation) into the aside set BEFORE retracting it — a
-        # bare delete would destroy their commits
-        racers = sorted(set(racers) | set(_fold_live_racers_into_old()))
-        if fs.exists(committed) and not fs.delete(committed, True):
-            raise IOError(
-                f"maintenance rollback: could not retract marker dir at {root} "
-                "(run recover_marker_store)"
-            )
-        if not fs.rename(old, committed):
-            raise IOError(
-                f"maintenance rollback: could not restore marker dir at {root} "
-                "(run recover_marker_store)"
-            )
-        if fs.exists(nxt):
-            fs.delete(nxt, True)
-        release_maintenance_lease(spark, root)
-        raise ConcurrentCommitError(
-            f"commits {sorted(racers)} landed {where} the maintenance swap of "
-            f"{root}; the pass rolled back and every committed marker is "
-            "intact — re-run it"
-        )
-
-    # window 2 (pre-activation): a racer recreated the live dir in the gap
-    # after the aside rename — never rely on the activate rename failing
-    # (HDFS renames INTO an existing dir; POSIX replaces an empty one)
-    if fs.exists(committed):
-        _rollback([], "inside")
-    if not fs.rename(nxt, committed):
-        if fs.exists(committed):  # racer appeared between the check and the rename
-            _rollback([], "inside")
+    # never activate over a live dir a racer recreated (window 2): HDFS
+    # renames INTO an existing dir, POSIX replaces an empty one
+    if not fs.exists(committed) and not fs.rename(nxt, committed) and not fs.exists(committed):
         raise IOError(
             f"maintenance swap: could not activate new marker dir at {root} "
             "(run recover_marker_store)"
         )
-    # post-activation audit: unwind a nested move (the racer-dir-existed
-    # rename semantics that return true), then verify the live set
-    nested = _fs(spark, f"{root}/_committed/_committed_next")[1]
-    if fs.exists(nested):
-        for st in fs.listStatus(nested):
-            if st.isFile():
-                fs.rename(st.getPath(), _fs(spark, f"{root}/_committed/{st.getPath().getName()}")[1])
-        fs.delete(nested, True)
-    live_now = sorted(
-        s.getPath().getName() for s in fs.listStatus(committed) if s.isFile()
-    )
-    aside = (
-        sorted(s.getPath().getName() for s in fs.listStatus(old) if s.isFile())
-        if fs.exists(old)
-        else []
-    )
-    racers = [m for m in aside if m not in pre_markers] + [
-        m for m in live_now if m not in new_markers
-    ]
-    if racers:  # window 1 (rode the aside rename) or window 2/3 (in live)
-        _rollback(racers, "during")
-    if fs.exists(old):
-        fs.delete(old, True)
-    release_maintenance_lease(spark, root)
+    if recover_marker_store(spark, root).startswith("rolled_back"):
+        racers = sorted(set(committed_publish_ids(spark, root)) - set(pre_markers))
+        raise ConcurrentCommitError(
+            f"commits {racers} landed during the maintenance swap of {root}; "
+            "the pass rolled back and every committed marker is intact — re-run it"
+        )
 
 
 def recover_marker_store(spark: SparkSession, root: str) -> str:
-    """Adjudicate a crashed maintenance swap from the lease record:
-    complete it or roll it back. Idempotent; 'clean' when nothing is wrong.
-    ONE implementation for every marker-committed store (publish archive,
-    dedup index). Decision table (the lease body records the distinguished
-    marker, the marker set it superseded and, once the swap started, the
-    new set):
+    """Settle a maintenance swap from the lease record — the last step of
+    every ``swap_marker_dir`` and the repair of a crashed one: complete it
+    or roll it back. Idempotent; 'clean' when nothing is wrong. ONE
+    implementation for every marker-committed store. Decision table (the
+    lease body records the distinguished marker, the marker set it
+    superseded and, once the swap started, the new set):
 
     - no lease → 'clean';
     - live ``_committed`` holds the distinguished marker: racers in the
       aside dir or live dir → ROLL BACK (restore the aside set, racers
       folded in; the maintenance pass loses); no racers, or no aside dir
-      left (the swap's audit already passed) → COMPLETE;
-    - live ``_committed`` missing or pre-swap → ROLL BACK: restore the
-      aside dir, merging in any markers a mid-swap racer committed into a
-      recreated live dir — committed markers are never stranded in
+      left (the swap had completed) → COMPLETE;
+    - otherwise (never activated, activated into a racer's recreated
+      live dir, or a torn lease body) → ROLL BACK: restore the aside dir,
+      folding in every FILE marker a racer committed into the live dir; a
+      nested ``_committed_next`` holds only our own markers and goes with
+      the retracted dir — committed markers are never stranded in
       ``_committed_old``."""
     lease = read_maintenance_lease(spark, root)
     if lease is None:
@@ -772,53 +740,33 @@ def recover_marker_store(spark: SparkSession, root: str) -> str:
     fs, committed = _fs(spark, f"{root}/_committed")
     old = _fs(spark, f"{root}/_committed_old")[1]
     nxt = _fs(spark, f"{root}/_committed_next")[1]
-    live = (
-        sorted(s.getPath().getName() for s in fs.listStatus(committed) if s.isFile())
-        if fs.exists(committed)
-        else []
-    )
-    if dist is not None and dist in live:  # swap happened
+    live = committed_publish_ids(spark, root)
+    swapped = dist is not None and dist in live
+    racers = sorted(m for m in live if m not in new)
+    if swapped:
         aside = (
-            sorted(s.getPath().getName() for s in fs.listStatus(old) if s.isFile())
+            [s.getPath().getName() for s in fs.listStatus(old) if s.isFile()]
             if fs.exists(old)
             else []
         )
-        racers = sorted(
-            {m for m in aside if m not in pre} | {m for m in live if m not in new}
-        )
-        if racers and not fs.exists(old):
-            # post-audit crash: the swap deletes the aside dir only AFTER
-            # its racer audit passed, so a missing aside means the swap
-            # fully completed — live racers are commits that landed after
-            # activation and are already visible. Rolling back here would
-            # rebuild the live set from the racers alone, dropping the
-            # distinguished marker and every pre marker (all compacted
-            # data would go invisible, then vacuum-deletable).
+        racers = sorted({*racers, *(m for m in aside if m not in pre)})
+        if not racers or not fs.exists(old):
+            # a missing aside dir means the swap had completed (it is
+            # deleted only then): live racers landed after it and are
+            # already visible. Rolling back here would rebuild the live set
+            # from the racers alone, dropping the distinguished marker and
+            # every pre marker (compacted data invisible, then vacuumed).
+            if fs.exists(old):
+                fs.delete(old, True)
             release_maintenance_lease(spark, root)
-            return f"completed (post-audit; concurrent commits already live: {racers})"
-        if racers:
-            # fold racers that landed in the live dir into the aside set
-            # before retracting it — their commits must survive
-            fs.mkdirs(old)
-            for m in racers:
-                fs.create(_fs(spark, f"{root}/_committed_old/{m}")[1], True).close()
-            fs.delete(committed, True)
-            if not fs.rename(old, committed):
-                raise IOError(f"recover: could not restore marker dir at {root}")
-            release_maintenance_lease(spark, root)
-            return f"rolled_back (preserved concurrent commits: {racers})"
-        if fs.exists(old):
-            fs.delete(old, True)
-        release_maintenance_lease(spark, root)
-        return "completed"
-    # swap incomplete (or mid-swap racer crash, or torn lease body):
-    # restore the aside set, folding in any FILE markers a racer committed
-    # into a recreated live dir (nested-rename artifact dirs hold only our
-    # own new markers — skipped)
+            if racers:
+                return f"completed (concurrent commits already live: {racers})"
+            return "completed"
+    # ROLL BACK: restore the aside set with every racer folded in before
+    # the live dir is retracted — their commits must survive
     if fs.exists(old):
-        for m in live:
-            if m not in new:
-                fs.create(_fs(spark, f"{root}/_committed_old/{m}")[1], True).close()
+        for m in racers:
+            fs.create(_fs(spark, f"{root}/_committed_old/{m}")[1], True).close()
         if fs.exists(committed):
             fs.delete(committed, True)
         if not fs.rename(old, committed):
@@ -826,21 +774,21 @@ def recover_marker_store(spark: SparkSession, root: str) -> str:
     if fs.exists(nxt):
         fs.delete(nxt, True)
     release_maintenance_lease(spark, root)
-    return "rolled_back"
+    return f"rolled_back (preserved concurrent commits: {racers})" if swapped else "rolled_back"
 
 
 def vacuum_store(spark: SparkSession, root: str, grace_seconds: int = 86400) -> list[str]:
     """The deferred-GC half of compaction, one for every marker-committed
     store: delete run directories whose marker is gone (compacted away, or
-    torn runs that never committed) and prune superseded schema versions.
-    A table is each child dir of ``root`` whose name does not start with
-    ``_`` and that has a stored schema (``stage_table`` writes the schema
-    before any data, so every run dir the protocol wrote has one); only
-    its ``run_id=`` dirs are candidates. Anything else is never touched: a
-    pre-protocol extraction store's unmarked ``results|lineage/run_id=``
-    dirs (no schema store), a pre-protocol index's ``snap=`` dirs, a
-    persisted index's files. Refuses under a live lease. Returns the
-    removed run_ids.
+    torn runs that never committed), prune superseded schema versions, and
+    drop the ``_compacted`` records of compactions whose marker is gone
+    (a re-compaction carried their ids forward; a rolled-back pass's
+    record never counted). Only the ``run_id=`` dirs of tables with a
+    stored schema (``_store_tables``) are candidates. Anything else is
+    never touched: a pre-protocol extraction store's unmarked
+    ``results|lineage/run_id=`` dirs (no schema store), a pre-protocol
+    index's ``snap=`` dirs, a persisted index's files. Refuses under a
+    live lease. Returns the removed run_ids.
 
     ``grace_seconds`` (Iceberg/Delta vacuum-retention analogue): a
     marker-less directory modified within the window is SKIPPED — it may be
@@ -855,18 +803,12 @@ def vacuum_store(spark: SparkSession, root: str, grace_seconds: int = 86400) -> 
         )
     live = set(committed_publish_ids(spark, root))
     now_ms = spark._jvm.System.currentTimeMillis()
-    fs, jroot = _fs(spark, root)
-    tables = [
-        st.getPath()
-        for st in (fs.listStatus(jroot) if fs.exists(jroot) else [])
-        if st.isDirectory() and not st.getPath().getName().startswith("_")
-    ]
+    fs, _ = _fs(spark, root)
     deleted: set[str] = set()
-    for tdir in tables:
-        latest = _latest_schema(spark, root, tdir.getName())
+    for table, latest in _store_tables(spark, root).items():
         if latest is None:
             continue  # not written through the protocol
-        for st in fs.listStatus(tdir):
+        for st in fs.listStatus(_fs(spark, f"{root}/{table}")[1]):
             name = st.getPath().getName()
             if not name.startswith("run_id=") or name[len("run_id="):] in live:
                 continue
@@ -876,7 +818,11 @@ def vacuum_store(spark: SparkSession, root: str, grace_seconds: int = 86400) -> 
             deleted.add(name[len("run_id="):])
         # keep everything from the latest READABLE version up (a torn
         # newest file must keep its predecessor)
-        for n, name in _schema_versions(spark, root, tdir.getName()):
+        for n, name in _schema_versions(spark, root, table):
             if n < latest[0]:
                 fs.delete(_fs(spark, f"{root}/_schema/{name}")[1], False)
+    rdir = _fs(spark, f"{root}/_compacted")[1]
+    for st in fs.listStatus(rdir) if fs.exists(rdir) else []:
+        if st.getPath().getName().removesuffix(".json") not in live:
+            fs.delete(st.getPath(), False)
     return sorted(deleted)

@@ -16,7 +16,10 @@ id as the snapshot id, so the index grows exactly-once:
   already persisted; the pinned hash family makes them bit-comparable), so
   the pairs output is identical to what the crashed attempt would have
   written. Without this path a replay would find the epoch's docs already
-  indexed and emit an EMPTY pair set — silently wrong.
+  indexed and emit an EMPTY pair set — silently wrong. If a compaction
+  folded the snapshot before the retry (the epoch's id is among the index's
+  ``consolidated_run_ids``), the pairs cannot be recomputed: the retry
+  warns and commits the empty set.
 
 The index must be bootstrapped first (``build_dedup_index`` over the base
 corpus) — same contract as the batch operator. Zero-padded epoch ids sort
@@ -34,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup_index import incremental_dedup_pairs, pairs_for_snapshot
-from ..plans.publish import committed_publish_ids, read_committed_table
+from ..plans.publish import (
+    committed_publish_ids,
+    consolidated_run_ids,
+    read_committed_table,
+)
 from .publish_stream import epoch_stream
 
 
@@ -58,11 +65,6 @@ def dedup_index_stream(
     (publish's ``_crash_before_commit`` precedent): raise after the named
     batch ids' index snapshot committed but before their pairs landed —
     the exact window the ``pairs_for_snapshot`` heal exists for."""
-    # only the FIRST batch this stream instance processes can be a replay
-    # of a crashed epoch (later batches imply their predecessors committed)
-    # — scopes the compacted-away audit below to one batch per (re)start
-    first_processed = {"v": True}
-
     def ingest(batch: DataFrame, run_id: str) -> dict[str, DataFrame]:
         import logging
 
@@ -74,41 +76,24 @@ def dedup_index_stream(
             # index (bit-identical — same signatures, same band joins)
             pairs = pairs_for_snapshot(sess, index_path, run_id, threshold, **params)
         else:
-            if first_processed["v"] and any(s.startswith("compact") for s in snaps):
-                # a compaction folded snapshot history, and this is the
-                # first batch after a (re)start — i.e. the only batch that
-                # can be a replay of a crashed epoch. If all its docs are
-                # already indexed, the original pairs may have been
-                # absorbed by the compaction and cannot be recomputed; it
-                # may equally be a routine fully-duplicate redelivery.
-                # Warn LOUDLY (the two cases are indistinguishable here —
-                # a hard failure would wedge legitimate streams forever)
-                # and proceed with the re-ingestion-safe semantics.
-                from ..operators.dedup_index import read_index_sigs
-
-                n_batch = batch.count()
-                indexed_ids = read_index_sigs(sess, index_path).select("_id")
-                n_already = batch.join(
-                    indexed_ids, batch[id_col] == indexed_ids["_id"], "left_semi"
-                ).count()
-                if n_batch > 0 and n_already == n_batch:
-                    logging.getLogger(__name__).warning(
-                        "epoch %s: all %d docs already indexed, the epoch never "
-                        "committed its pairs, and the index history was "
-                        "compacted. If this epoch crashed pre-compaction its "
-                        "original pairs are unrecoverable (an empty set will "
-                        "commit); if it is a duplicate redelivery this is "
-                        "correct. Avoid compacting the index while the stream "
-                        "has uncommitted epochs.",
-                        run_id, n_batch,
-                    )
+            if run_id in consolidated_run_ids(sess, index_path, snaps):
+                # the epoch committed its index snapshot, died before its
+                # pairs landed, and a compaction then folded the snapshot:
+                # its band rows are gone, so its pairs cannot be recomputed
+                # and the re-ingestion below commits an empty set
+                logging.getLogger(__name__).warning(
+                    "epoch %s: its index snapshot was compacted into %s before "
+                    "its pairs committed — its original pairs are unrecoverable "
+                    "and an empty set will commit. Avoid compacting the index "
+                    "while the stream has uncommitted epochs.",
+                    run_id, index_path,
+                )
             pairs = incremental_dedup_pairs(
                 sess, batch, id_col, text_col, index_path, threshold,
                 update_index=True, snapshot_id=run_id, **params,
             )
             if _crash_after_index_commit and int(run_id[1:]) in _crash_after_index_commit:
                 raise RuntimeError("fault injection: crashed after index commit")
-        first_processed["v"] = False
         return {"pairs": pairs}
 
     return epoch_stream(spark, docs_dir, schema, out_dir, checkpoint_dir, ingest)

@@ -31,6 +31,7 @@ from ..plans.extract_job import run_extraction
 from ..plans.publish import (
     _fs,
     commit_run,
+    consolidated_run_ids,
     publish_reject_reason,
     tagged_tables,
 )
@@ -62,7 +63,8 @@ def run_epochs(
 ) -> StreamingQuery:
     """File-source stream → ``step(batch, run_id)``, which commits the epoch.
 
-    An epoch whose run id is already committed is skipped: it is either a
+    An epoch whose run id is already committed (live, or consolidated by a
+    compaction: ``consolidated_run_ids``) is skipped: it is either a
     true replay (crash after the marker, before the stream checkpoint
     advanced — identical content, so skipping is exact) or a LOST-checkpoint
     restart whose epoch numbering reset over an existing archive (skipping
@@ -75,7 +77,7 @@ def run_epochs(
         sess = batch.sparkSession
         run_id = f"e{batch_id:08d}"
         fs, marker = _fs(sess, f"{out_dir}/_committed/{run_id}")
-        if fs.exists(marker):
+        if fs.exists(marker) or run_id in consolidated_run_ids(sess, out_dir):
             logging.getLogger(__name__).warning(
                 "epoch %s already committed at %s — batch skipped "
                 "(lost-checkpoint restart over an existing archive requires a "

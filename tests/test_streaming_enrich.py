@@ -452,6 +452,70 @@ def test_dedup_index_stream_grows_index_and_heals_crash_window(spark, tmp_path):
     assert stream_pairs == batch_pairs
 
 
+def test_dedup_index_stream_warns_only_for_a_compacted_away_epoch(spark, tmp_path, caplog):
+    """The crash window the heal cannot cover: an epoch committed its index
+    snapshot, died before its pairs landed, and a compaction then folded
+    the snapshot. Its replay warns, decided from the index's consolidated
+    ids alone: no Spark job beyond a routine duplicate redelivery of the
+    same docs, which does not warn."""
+    import logging
+    import shutil
+
+    from batch_doc_vqa_spark.operators.dedup_index import (
+        build_dedup_index,
+        compact_dedup_index,
+        incremental_dedup_pairs,
+    )
+    from batch_doc_vqa_spark.plans.publish import committed_publish_ids, consolidated_run_ids
+    from batch_doc_vqa_spark.streaming.dedup_index_stream import (
+        dedup_index_stream,
+        read_stream_pairs,
+    )
+
+    schema = "doc_id string, text string"
+    base = spark.createDataFrame(
+        [(f"base{i}", " ".join(f"w{i}_{j}" for j in range(30))) for i in range(8)], schema
+    )
+    epoch = spark.createDataFrame(
+        [("n0", " ".join(f"w0_{j}" for j in range(30))),
+         ("n1", " ".join(f"u{j}" for j in range(30)))],
+        schema,
+    )
+    src = str(tmp_path / "crawl_in")
+    epoch.write.parquet(src)
+
+    # the crash state: e00000000's snapshot committed, then compacted away
+    folded = str(tmp_path / "idx_folded")
+    build_dedup_index(base, "doc_id", "text", folded)
+    incremental_dedup_pairs(spark, epoch, "doc_id", "text", folded, snapshot_id="e00000000")
+    compact_dedup_index(spark, base.unionByName(epoch), "doc_id", "text", folded)
+    assert "e00000000" in consolidated_run_ids(spark, folded)
+    # control: the same index without the compaction's record — a routine
+    # redelivery of already-indexed docs under a never-committed epoch id
+    redelivered = str(tmp_path / "idx_redelivered")
+    shutil.copytree(folded, redelivered)
+    shutil.rmtree(f"{redelivered}/_compacted")
+
+    def replay(idx):
+        caplog.clear()
+        name = os.path.basename(idx)
+        out = str(tmp_path / f"out_{name}")
+        with caplog.at_level(logging.WARNING):
+            q = dedup_index_stream(spark, src, schema, idx, out, str(tmp_path / f"ck_{name}"))
+            q.awaitTermination(120)
+        warned = [r for r in caplog.records if "unrecoverable" in r.getMessage()]
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+        assert committed_publish_ids(spark, out) == ["e00000000"]
+        assert read_stream_pairs(spark, out).count() == 0
+        return warned, len(jobs)
+
+    warned, jobs = replay(folded)
+    assert len(warned) == 1 and "e00000000" in warned[0].getMessage()
+    control_warned, control_jobs = replay(redelivered)
+    assert control_warned == []
+    assert jobs == control_jobs
+
+
 def test_quality_gate_stream_incremental(spark, tmp_path):
     """Streaming twin of the learned quality gate (round 6): each
     availableNow run scores only NEW files with the frozen classifier,
