@@ -15,8 +15,10 @@ Contract (BASELINE.json north rule):
   bucket ids are pure functions of the data so reruns see the same layout;
 - lineage: one row per (run_id, bucket): doc count, byte count, failure count,
   the first 100 failure urls in sorted order, status. The extraction UDF folds
-  these counts into an accumulator while the results are written, so the
-  lineage costs no read-back and no extra Spark job;
+  these counts into an accumulator while the results are written, and the
+  driver writes the ≤num_buckets rows as one parquet file, so the lineage
+  costs no read-back and no Spark job: a resume call runs three jobs (the
+  done-set broadcast, the bucket shuffle and the results write);
 - resume: rerunning with the same output dir processes only urls absent from
   the committed results — reruns are idempotent, a torn run leaves no trace,
   and the final table is identical to a single-shot run;
@@ -45,6 +47,7 @@ from .publish import (
     consolidated_run_ids,
     read_committed_table,
     read_schema_store,
+    stage_rows,
     stage_table,
 )
 from .skew import BUCKET_COL, with_salted_partition
@@ -140,11 +143,12 @@ def run_extraction(
     ``pages`` must have columns (url, warc_ts, html, text, lang) — the
     BASELINE.json input shape. Results land at ``{out_dir}/results`` and
     lineage at ``{out_dir}/lineage``, both PARTITIONED BY ``run_id``, as
-    ONE marker-committed run (plans/publish.py): ``stage_table`` writes
-    each table to its ``run_id=<id>`` directory, then ``commit_marker``
-    makes both visible at once. A run that dies before its marker is
-    invisible to ``read_results``/``read_lineage`` and to the done-set, so
-    the next resume re-extracts its urls and the lineage never has holes.
+    ONE marker-committed run (plans/publish.py): ``stage_table`` (results)
+    and ``stage_rows`` (lineage) write each table to its ``run_id=<id>``
+    directory, then ``commit_marker`` makes both visible at once. A run
+    that dies before its marker is invisible to ``read_results``/
+    ``read_lineage`` and to the done-set, so the next resume re-extracts its
+    urls and the lineage never has holes.
     The lineage is a by-product of the results write: the extraction UDF
     folds each Arrow batch's per-bucket counts into an accumulator, whose
     updates Spark merges once per result partition and never from a failed
@@ -241,21 +245,20 @@ def run_extraction(
         folds.add(fold)
         return out
 
-    is_failed = F.col("_ex.status").isin(*failure_statuses)
-    extracted = (
-        bucketed.withColumn("_ex", extract_and_fold("html", BUCKET_COL, "url"))
-        .select(
-            "url",
-            "warc_ts",
-            "lang",
-            F.col(BUCKET_COL),
-            F.when(~is_failed, F.col("_ex.text")).alias("text"),
-            F.when(~is_failed, F.col("_ex.spans")).alias("spans"),
-            F.when(is_failed, F.lit("failed")).otherwise(F.col("_ex.status")).alias("status"),
-            F.col("_ex.error").alias("error"),
-            F.coalesce(F.length("_ex.text"), F.lit(0)).alias("n_chars"),
-            F.length("html").alias("n_input_bytes"),
-        )
+    # the projection as SQL text: one parse instead of a py4j call per
+    # Column operation
+    failed = "_ex.status IN ({})".format(", ".join(f"'{s}'" for s in failure_statuses))
+    extracted = bucketed.withColumn("_ex", extract_and_fold("html", BUCKET_COL, "url")).selectExpr(
+        "url",
+        "warc_ts",
+        "lang",
+        BUCKET_COL,
+        f"CASE WHEN NOT ({failed}) THEN _ex.text END AS text",
+        f"CASE WHEN NOT ({failed}) THEN _ex.spans END AS spans",
+        f"CASE WHEN {failed} THEN 'failed' ELSE _ex.status END AS status",
+        "_ex.error AS error",
+        "coalesce(length(_ex.text), 0) AS n_chars",
+        "length(html) AS n_input_bytes",
     )
     stage_table(spark, out_dir, run_id, "results", extracted)
 
@@ -270,8 +273,8 @@ def run_extraction(
     if not buckets:
         return summary  # nothing left to do: no lineage, no marker
     finished_at = pd.Timestamp.now(tz="UTC")
-    # a pandas frame is Arrow-decoded in the JVM (a local scan, no job);
-    # a list of tuples would run Python-RDD tasks inside the write
+    # the driver holds every lineage row: stage_rows writes them without
+    # a Spark job
     lineage = pd.DataFrame(
         [
             (b, *f, "done", finished_at, config_hash, config_json, ENGINE_VERSION)
@@ -279,6 +282,6 @@ def run_extraction(
         ],
         columns=LINEAGE_SCHEMA.names,
     )
-    stage_table(spark, out_dir, run_id, "lineage", spark.createDataFrame(lineage, LINEAGE_SCHEMA).coalesce(1))
+    stage_rows(spark, out_dir, run_id, "lineage", lineage, LINEAGE_SCHEMA)
     commit_marker(spark, out_dir, run_id)  # results + lineage visible at once
     return summary

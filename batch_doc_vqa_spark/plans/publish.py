@@ -23,6 +23,7 @@ settles through ``recover_marker_store`` → ``vacuum_store``.
 
 from __future__ import annotations
 
+import functools
 import uuid
 
 from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
@@ -73,9 +74,20 @@ def publish_reject_reason(
     return reason
 
 
+@functools.lru_cache(maxsize=1)
+def _hadoop(sc):
+    """(``org.apache.hadoop.fs.Path`` class, Hadoop conf) of one
+    SparkContext. Resolving the class costs five py4j reflection lookups,
+    and a run calls ``_fs`` about a dozen times, so both are resolved once
+    per context. The key is the context itself (held, so never confused
+    with a later one at the same address): a new session gets fresh handles."""
+    return sc._jvm.org.apache.hadoop.fs.Path, sc._jsc.hadoopConfiguration()
+
+
 def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+    path_cls, conf = _hadoop(spark.sparkContext)
+    jpath = path_cls(path)
+    return jpath.getFileSystem(conf), jpath
 
 
 def committed_publish_ids(spark: SparkSession, out_dir: str) -> list[str]:
@@ -186,12 +198,22 @@ def commit_marker(spark: SparkSession, out_dir: str, run_id: str) -> None:
     while a maintenance lease is held on the same store: a marker committed
     mid-compaction would not be in the rebuilt marker set (the remaining
     probe-to-commit race is caught when the swap settles through
-    ``recover_marker_store``, which rolls back rather than lose the run)."""
+    ``recover_marker_store``, which rolls back rather than lose the run).
+    Refuses, with ``FileExistsError``, a run id that a compaction
+    consolidated: its rows are committed, and a second marker would show
+    them twice. Callers check that early too, but only this check sits
+    after a compaction that ran while the run was staging. On a store
+    never compacted it costs one ``exists`` on ``_compacted``."""
     if read_maintenance_lease(spark, out_dir) is not None:
         raise MaintenanceInProgressError(
             f"commit blocked: store maintenance in progress at {out_dir} "
             "(lease held) — retry after it finishes, or run "
             "recover_marker_store if it crashed"
+        )
+    if run_id in consolidated_run_ids(spark, out_dir):
+        raise FileExistsError(
+            f"run {run_id!r} was consolidated by a compaction of {out_dir}: its "
+            "rows are committed — commit under a new run_id"
         )
     fs, marker = _fs(spark, f"{out_dir}/_committed/{run_id}")
     fs.mkdirs(marker.getParent())
@@ -287,7 +309,8 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
     for _ in range(50):
         versions = _schema_versions(spark, out_dir, table)
         latest_n = versions[-1][0] if versions else 0
-        existing = read_schema_store(spark, out_dir, table)
+        latest = _latest_schema(spark, out_dir, table, versions)
+        existing = latest[1] if latest is not None else None
         if existing is not None:
             by_name = {f.name: f for f in existing.fields}
             for f in schema.fields:
@@ -338,12 +361,15 @@ def update_schema_store(spark: SparkSession, out_dir: str, table: str, schema) -
     )
 
 
-def _latest_schema(spark: SparkSession, out_dir: str, table: str):
+def _latest_schema(spark: SparkSession, out_dir: str, table: str, versions=None):
     """(version, StructType) of the latest READABLE schema version, or None.
-    A torn newest version file falls back to the version before it."""
+    A torn newest version file falls back to the version before it.
+    ``versions`` is a listing the caller already holds (``_schema_versions``)."""
     from pyspark.sql.types import StructType
 
-    for n, name in reversed(_schema_versions(spark, out_dir, table)):
+    if versions is None:
+        versions = _schema_versions(spark, out_dir, table)
+    for n, name in reversed(versions):
         try:
             d = _read_json(spark, f"{out_dir}/_schema/{name}")
             # nonce-wrapped (current) or bare StructType json (early r5)
@@ -540,6 +566,38 @@ def stage_table(spark: SparkSession, out_dir: str, run_id: str, name: str, df: D
     lacks."""
     update_schema_store(spark, out_dir, name, df.schema)
     df.write.mode("overwrite").parquet(f"{out_dir}/{name}/run_id={run_id}")
+
+
+def stage_rows(
+    spark: SparkSession, out_dir: str, run_id: str, name: str, frame, schema
+) -> None:
+    """``stage_table`` for rows the driver already holds (a pandas
+    ``frame`` with ``schema``'s columns, e.g. an extraction run's
+    ≤``num_buckets`` lineage rows), without a Spark job: the same schema
+    store update first, then the rows encoded by pyarrow with ``schema``'s
+    Arrow form as ONE parquet file, written through the store's Hadoop
+    FileSystem (any scheme) over a cleared ``run_id=<run_id>`` dir, so a
+    retried run id keeps one file. Timestamps are floored to µs, since
+    Spark reads no ``TIMESTAMP(NANOS)``; a naive one reads as UTC."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    update_schema_store(spark, out_dir, name, schema)
+    stamps = frame.select_dtypes(include=["datetime", "datetimetz"])
+    frame = frame.assign(**{c: stamps[c].dt.floor("us") for c in stamps})
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        pa.Table.from_pandas(frame, schema=to_arrow_schema(schema), preserve_index=False), buf
+    )
+    part = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    fs, jpath = _fs(spark, f"{out_dir}/{name}/run_id={run_id}/{part}")
+    fs.delete(jpath.getParent(), True)
+    out = fs.create(jpath, False)
+    try:
+        out.write(bytearray(buf.getvalue().to_pybytes()))
+    finally:
+        out.close()
 
 
 def _store_tables(spark: SparkSession, root: str) -> dict[str, tuple | None]:

@@ -824,3 +824,179 @@ def test_retried_task_does_not_double_count(tmp_path):
     assert final.count("ArrowEvalPython") == 1, final
     assert final.index("ArrowEvalPython") < final.index("Exchange"), final
     assert re.search(r"\(\d+\) Exchange\n.*\nArguments: hashpartitioning\(bucket#\d+, 2\)", got["plan"])
+
+
+def _group_job_count(spark, group: str) -> int:
+    """Jobs the status tracker holds for ``group``, once the listener bus
+    has delivered every event posted so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_call_runs_three_jobs_and_stages_lineage_without_one(spark, tmp_path, monkeypatch):
+    """A resume with new docs runs exactly three Spark jobs: the done-set
+    broadcast, the bucket shuffle and the results write. Staging the
+    lineage runs none: the driver writes its one parquet file."""
+    from batch_doc_vqa_spark.plans import extract_job
+
+    out = str(tmp_path / "shape")
+    run_extraction(spark, pages_df(spark, 40, seed=SEED), out, run_id="r1", num_buckets=4)
+    pages = pages_df(spark, 80, seed=SEED)
+    group = "resume-job-shape"
+    staged = []
+
+    def counted(*args):
+        before = _group_job_count(spark, group)
+        real(*args)
+        staged.append(_group_job_count(spark, group) - before)
+
+    real = extract_job.stage_rows
+    monkeypatch.setattr(extract_job, "stage_rows", counted)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "resume")
+    try:
+        s = run_extraction(spark, pages, out, run_id="r2", num_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert s["n_docs"] == 40
+    assert _group_job_count(spark, group) == 3
+    assert staged == [0]
+    assert read_results(spark, out).count() == 80
+
+
+def test_mixed_writer_lineage_store(spark, tmp_path, monkeypatch):
+    """A store whose first run's lineage was staged by Spark (the former
+    ``createDataFrame(…, LINEAGE_SCHEMA).coalesce(1)`` write, kept here as
+    the oracle) and whose second run's by the driver (``stage_rows``):
+    each run's lineage equals the read-back of its results, and
+    ``read_lineage`` gives identical rows after ``compact_store``,
+    ``vacuum_store`` and a further resume. A bucket whose payloads are all
+    null keeps a null ``n_bytes`` in both forms, ``finished_at`` round-trips
+    to the µs, and a retried uncommitted run id leaves one lineage file."""
+    import os
+
+    import pandas as pd
+    import pytest
+
+    from batch_doc_vqa_spark.plans import extract_job
+    from batch_doc_vqa_spark.plans.extract_job import LINEAGE_SCHEMA
+    from batch_doc_vqa_spark.plans.publish import (
+        compact_store,
+        stage_rows,
+        stage_table,
+        vacuum_store,
+    )
+
+    def spark_form(spark_, out_dir, run_id, name, frame, schema):
+        stage_table(spark_, out_dir, run_id, name, spark_.createDataFrame(frame, schema).coalesce(1))
+
+    frames = {}
+
+    def recorded(form):
+        def stage(spark_, out_dir, run_id, name, frame, schema):
+            frames[run_id] = frame
+            form(spark_, out_dir, run_id, name, frame, schema)
+        return stage
+
+    h = F.xxhash64("url")
+    pages = pages_df(spark, 160, seed=SEED).withColumn(
+        "html", F.when(F.pmod(h, F.lit(8)) == 0, F.lit(None).cast("binary")).otherwise(F.col("html"))
+    )
+    out = str(tmp_path / "mixed")
+    config = dict(num_buckets=8, target_rows_per_task=None, strict=False)
+    with monkeypatch.context() as m:
+        m.setattr(extract_job, "stage_rows", recorded(spark_form))
+        run_extraction(spark, pages.limit(80), out, run_id="spark", num_buckets=8)
+
+    def crash(*_args, **_kwargs):
+        raise RuntimeError("killed before the commit marker")
+
+    with monkeypatch.context() as m:
+        m.setattr(extract_job, "commit_marker", crash)
+        for _ in range(2):
+            with pytest.raises(RuntimeError, match="killed"):
+                run_extraction(spark, pages, out, run_id="driver", num_buckets=8)
+    data = [f for f in os.listdir(f"{out}/lineage/run_id=driver") if not f.startswith((".", "_"))]
+    assert len(data) == 1, data
+    with monkeypatch.context() as m:
+        m.setattr(extract_job, "stage_rows", recorded(stage_rows))
+        assert run_extraction(spark, pages, out, run_id="driver", num_buckets=8)["n_docs"] == 80
+
+    for run_id in ("spark", "driver"):
+        lineage = read_lineage(spark, out).filter(F.col("run_id") == run_id).drop("run_id")
+        got = _lineage_rows(lineage)
+        assert got == _lineage_rows(_readback_lineage(spark, out, run_id, **config))
+        assert [r[2] for r in got if r[0] == 0] == [None]  # null-only bucket
+        assert all(r[2] is not None for r in got if r[0] != 0)
+        stamps = lineage.select(F.unix_micros("finished_at").alias("us")).distinct().collect()
+        expected = frames[run_id]["finished_at"].iloc[0]
+        assert [r["us"] for r in stamps] == [expected.value // 1000]
+
+    def rows():
+        df = read_lineage(spark, out)
+        return sorted(repr(tuple(r[c] for c in sorted(df.columns))) for r in df.collect())
+
+    before = rows()
+    assert len(before) == 16
+    compact_store(spark, out)
+    assert rows() == before
+    vacuum_store(spark, out, grace_seconds=0)
+    assert rows() == before
+    assert run_extraction(spark, pages, out, run_id="again", num_buckets=8)["n_docs"] == 0
+    assert rows() == before
+
+    # a ns timestamp is floored to the µs, which Spark reads
+    ns = str(tmp_path / "ns")
+    stamp = pd.Timestamp("2026-01-02 03:04:05.123456789", tz="UTC")
+    frame = pd.DataFrame(
+        [(0, 1, None, 0, [], "done", stamp, "h", "{}", ENGINE_VERSION)], columns=LINEAGE_SCHEMA.names
+    )
+    stage_rows(spark, ns, "x", "lineage", frame, LINEAGE_SCHEMA)
+    got = spark.read.schema(LINEAGE_SCHEMA).parquet(f"{ns}/lineage/run_id=x")
+    assert got.select(F.unix_micros("finished_at")).first()[0] == stamp.value // 1000
+
+
+_NEW_SESSION_PROBE = r"""
+import json, sys
+from batch_doc_vqa_spark.plans import publish, run_extraction
+from batch_doc_vqa_spark.session import get_spark
+from batch_doc_vqa_spark.sources import pages_df
+
+work = sys.argv[1]
+got = []
+for run_id, n in (("r1", 20), ("r2", 40)):
+    spark = get_spark("fs-handles", master="local[2]", shuffle_partitions=2)
+    s = run_extraction(spark, pages_df(spark, n, seed=3), work, run_id=run_id, num_buckets=2)
+    conf = publish._hadoop(spark.sparkContext)[1]
+    got.append({
+        "n_docs": s["n_docs"],
+        "fresh_conf": conf.equals(spark._jsc.hadoopConfiguration()),
+        "committed": publish.committed_publish_ids(spark, work),
+    })
+    spark.stop()
+print(json.dumps(got))
+"""
+
+
+def test_hadoop_handles_are_per_spark_context(tmp_path):
+    """``_fs``'s cached Path class and Hadoop conf belong to one
+    SparkContext: a run committed after the session was stopped and a new
+    one started uses the new context's conf, and both runs commit."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _NEW_SESSION_PROBE, str(tmp_path / "ex")],
+        cwd=repo, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got == [
+        {"n_docs": 20, "fresh_conf": True, "committed": ["r1"]},
+        {"n_docs": 20, "fresh_conf": True, "committed": ["r1", "r2"]},
+    ]

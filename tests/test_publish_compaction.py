@@ -19,9 +19,11 @@ from batch_doc_vqa_spark.plans.publish import (
     ConcurrentCommitError,
     MaintenanceInProgressError,
     acquire_maintenance_lease,
+    commit_run,
     committed_publish_ids,
     compact_store,
     consolidated_run_ids,
+    publish_reject_reason,
     publish_run,
     read_committed_table,
     read_maintenance_lease,
@@ -30,6 +32,7 @@ from batch_doc_vqa_spark.plans.publish import (
     recover_marker_store,
     release_maintenance_lease,
     save_index,
+    tagged_tables,
     vacuum_store,
 )
 from batch_doc_vqa_spark.sources import pages_df
@@ -449,14 +452,18 @@ def test_compact_store_refuses_index_root(spark, tmp_path):
 def test_consolidated_run_id_is_not_reusable(spark, tmp_path):
     """A run id folded into a compaction stays taken: a retried publish
     raises instead of committing the run a second time beside its
-    compacted rows, and a replayed stream epoch is skipped and flagged
-    like a live one."""
+    compacted rows, so does ``commit_marker`` itself (a writer that checked
+    before the compaction folded its run), and a replayed stream epoch is
+    skipped and flagged like a live one."""
     out = str(tmp_path / "retry")
     df = spark.createDataFrame([("d1", "clean text")], "doc_id string, text string")
     publish_run(spark, df, out, text_col="text", run_id="r1")
     cid = compact_store(spark, out)
     with pytest.raises(FileExistsError, match="'r1'"):
         publish_run(spark, df, out, text_col="text", run_id="r1")
+    tagged = df.withColumn("_reject", publish_reject_reason("text"))
+    with pytest.raises(FileExistsError, match="'r1' was consolidated"):
+        commit_run(spark, out, "r1", tagged_tables(tagged))
     assert committed_publish_ids(spark, out) == [cid]
     got = read_published(spark, out).select("run_id", "doc_id").collect()
     assert [tuple(r) for r in got] == [("r1", "d1")]
