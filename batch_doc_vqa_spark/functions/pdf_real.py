@@ -32,7 +32,6 @@ import zlib
 PDF_MAGIC = b"%PDF-"
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _FILTER_RE = re.compile(rb"/Filter\s*(?:\[\s*)?/(\w+)")

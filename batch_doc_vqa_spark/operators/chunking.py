@@ -12,7 +12,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import portable_hash64
+from .dedup import seeded_hash
+from .packing import prefix_sum
+
+# every sampler here draws pmod(h(id#seed), 2^20): an integer in [0, 2^20)
+_BUCKETS = 1 << 20
+
+
+def _draw(id_col: str, seed: int, base_hash: str):
+    return F.pmod(seeded_hash(id_col, seed, base_hash), F.lit(_BUCKETS))
 
 
 def chunk_documents(
@@ -97,10 +105,7 @@ def deterministic_sample(
     function of the row id — identical under any partitioning, resumable,
     and reproducible in SQL with ``base_hash='md5'`` (portable_hash64).
     """
-    bucket = F.lit(1 << 20)
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-    h = F.xxhash64(key) if base_hash == "xxhash64" else portable_hash64(key)
-    return df.filter(F.pmod(h, bucket) < int(fraction * (1 << 20)))
+    return df.filter(_draw(id_col, seed, base_hash) < int(fraction * _BUCKETS))
 
 
 def score_resample(
@@ -122,12 +127,7 @@ def score_resample(
     ``draw < score``; the draw is returned (rounded 6) for auditability.
     Pure column math, no shuffle at all — a map-side filter.
     """
-    from .dedup import portable_hash64
-
-    bucket = 1 << 20
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-    h = F.xxhash64(key) if base_hash == "xxhash64" else portable_hash64(key)
-    draw = F.pmod(h, F.lit(bucket)).cast("double") / F.lit(float(bucket))
+    draw = _draw(id_col, seed, base_hash).cast("double") / F.lit(float(_BUCKETS))
     return (
         df.withColumn("draw", F.round(draw, 6))
         .filter(draw < F.col(score_col))
@@ -174,16 +174,13 @@ def epoch_expand(
     distinguishable. Membership and copy count are pure functions of
     (id, seed) — identical under any partitioning.
     """
-    bucket = F.lit(1 << 20)
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-    h = F.xxhash64(key) if base_hash == "xxhash64" else portable_hash64(key)
     epochs = epochs_col if not isinstance(epochs_col, str) else F.col(epochs_col)
     n_full = F.floor(epochs).cast("int")
     frac = epochs - n_full
     # explicit floor before the long cast: Spark's double→long cast truncates
     # but DuckDB's rounds, so a SQL mirror must write FLOOR(frac * 2^20) too
     # (matters for fractions like 0.1 that aren't binary-representable)
-    extra = (F.pmod(h, bucket) < F.floor(frac * (1 << 20)).cast("long")).cast("int")
+    extra = (_draw(id_col, seed, base_hash) < F.floor(frac * _BUCKETS).cast("long")).cast("int")
     copies = (n_full + extra).alias("_copies")
     return (
         df.withColumn("_copies", copies)
@@ -209,59 +206,23 @@ def budget_select(
     row that would overshoot the budget is dropped, rows after it too
     (contiguous prefix by construction).
 
-    Scale: the plain form windows per group — fine when no group dominates.
-    A mega-group (one "web" source owning most of a 10^12-doc corpus) would
-    collapse onto one task, so ``order_block`` switches to the same
-    two-layer prefix sum as ``packing.pack_sequences``, with blocks cut
-    along the ORDER direction: block index = floor(-order_col /
-    order_block) rises as order falls, so per-(group, block) totals
-    cumulated over the small per-group block table + a within-block running
-    sum reproduce the global descending cumsum exactly (requires a numeric
-    ``order_col``; results are identical to the plain form — tested).
-    Value-skew caveat: if most rows share ONE order value they share a
-    block; pick ``order_block`` small relative to the value spread.
+    A NULL token count adds 0, so a group's leading NULL-token rows are
+    kept with ``cum_tokens`` 0.
+
+    Scale: the running total is ``packing.prefix_sum``. The plain form is
+    one window per group — fine when no group dominates. A mega-group (one
+    "web" source owning most of a 10^12-doc corpus) would collapse onto one
+    task, so ``order_block`` switches to its two-layer form with blocks cut
+    along the descending order (requires a numeric ``order_col``; results
+    are identical to the plain form — tested). Value-skew caveat: if most
+    rows share ONE order value they share a block; pick ``order_block``
+    small relative to the value spread.
     """
-    from pyspark.sql import Window
-
     toks = F.col(tokens_col).cast("long")
-    if order_block is None:
-        w = (
-            Window.partitionBy(group_col)
-            .orderBy(F.col(order_col).desc(), F.col(id_col))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return df.withColumn("cum_tokens", F.sum(toks).over(w)).filter(
-            F.col("cum_tokens") <= budget
-        )
-
-    # exact floor-division on longs (double-routed division loses exactness
-    # past 2^53 and could mis-block a row near a boundary): subtract the
-    # non-negative pmod, then integer `div` of the exact multiple
-    blocked = df.withColumn(
-        "_oblk",
-        F.expr(
-            f"((-CAST({order_col} AS BIGINT)) - pmod(-CAST({order_col} AS BIGINT), {order_block}))"
-            f" div {order_block}"
-        ),
-    )
-    blk_totals = blocked.groupBy(group_col, "_oblk").agg(F.sum(toks).alias("_blk_tokens"))
-    w_blocks = (
-        Window.partitionBy(group_col).orderBy("_oblk").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    blk_offsets = blk_totals.withColumn(
-        "_blk_offset", F.coalesce(F.sum("_blk_tokens").over(w_blocks), F.lit(0))
-    ).drop("_blk_tokens")
-    w_in = (
-        Window.partitionBy(group_col, "_oblk")
-        .orderBy(F.col(order_col).desc(), F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        blocked.join(F.broadcast(blk_offsets), [group_col, "_oblk"])
-        .withColumn("cum_tokens", F.col("_blk_offset") + F.sum(toks).over(w_in))
-        .filter(F.col("cum_tokens") <= budget)
-        .drop("_oblk", "_blk_offset")
-    )
+    return prefix_sum(
+        df, toks, [f"-{order_col}", id_col], "cum_tokens",
+        partition_by=[group_col], block=order_block, inclusive=True,
+    ).filter(F.col("cum_tokens") <= budget)
 
 
 def weighted_sample(
@@ -292,10 +253,7 @@ def weighted_sample(
     over 10^12 docs pick groups like (source, shard) and merge, or use
     ``budget_select`` for token-denominated quotas.
     """
-    bucket = 1 << 20
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-    h = F.xxhash64(key) if base_hash == "xxhash64" else portable_hash64(key)
-    u = (F.pmod(h, F.lit(bucket)) + 1).cast("double") / F.lit(float(bucket + 1))
+    u = (_draw(id_col, seed, base_hash) + 1).cast("double") / F.lit(float(_BUCKETS + 1))
     w = F.col(weight_col).cast("double")
     base = df.filter(w.isNotNull() & (w > 0)).withColumn(
         "wkey", F.round(-F.log(u) / w, 6)
@@ -353,8 +311,7 @@ def stratified_split(
         raise ValueError("stratified_split: fractions must be non-negative")
     if out_col in df.columns:
         raise ValueError(f"stratified_split: out_col collides: {out_col}")
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-    h = F.xxhash64(key) if base_hash == "xxhash64" else portable_hash64(key)
+    h = seeded_hash(id_col, seed, base_hash)
     w = Window.partitionBy(strata_col).orderBy(h.asc(), F.col(id_col).asc())
     wn = Window.partitionBy(strata_col)
     ranked = df.withColumn("_rk", F.row_number().over(w)).withColumn(
@@ -431,13 +388,7 @@ def temperature_resample(
             F.least(F.lit(1.0), t_budget * q / F.col("_tm_n").cast("double")), 6
         ).alias("keep_prob"),
     )
-    bucket = 1 << 20
-    key = F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}"))
-    h = F.xxhash64(key) if base_hash == "xxhash64" else portable_hash64(key)
-    return (
-        df.join(F.broadcast(dim), group_col)
-        .filter(
-            F.pmod(h, F.lit(bucket))
-            < F.floor(F.col("keep_prob") * F.lit(float(bucket))).cast("long")
-        )
+    return df.join(F.broadcast(dim), group_col).filter(
+        _draw(id_col, seed, base_hash)
+        < F.floor(F.col("keep_prob") * F.lit(float(_BUCKETS))).cast("long")
     )

@@ -161,6 +161,14 @@ def _base_hash(col, base_hash: str):
     raise ValueError(f"unknown base_hash: {base_hash}")
 
 
+def seeded_hash(id_col: str, seed: int, base_hash: str):
+    """The repo's deterministic draw ``h(id#seed)``: ``base_hash`` over the
+    id's string form with ``#<seed>`` appended. A pure function of (id,
+    seed), so every sample, split and shuffle keyed on it is partition- and
+    rerun-stable (never ``rand()``); ``'md5'`` reproduces it in SQL."""
+    return _base_hash(F.concat(F.col(id_col).cast("string"), F.lit(f"#{seed}")), base_hash)
+
+
 def _base_hash_sql(expr: str, base_hash: str) -> str:
     """SQL text of ``_base_hash`` over the SQL expression ``expr`` — for the
     wide expressions emitted as one parsed string (see minhash_signatures)."""

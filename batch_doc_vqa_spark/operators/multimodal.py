@@ -39,7 +39,6 @@ FRAME_SCHEMA = "media_id string, frame_idx int, ts_ms long, frame_sha string"
 
 # Full pixel/frame decode exists for PNG/BMP/WAV; GIF/JPEG probe header
 # dimensions only ('probe'); anything else is labeled decode_status='stub'.
-REAL_DECODE_AVAILABLE = True
 _FULL_DECODE_KINDS = {"image/png", "image/bmp", "audio/wav"}
 
 

@@ -672,14 +672,13 @@ def ppl_buckets(
     6-decimal values, orders of magnitude smaller); per-lang totals are a
     tiny broadcast aggregate; the rank window runs over the VALUE table
     only. When even that table is too big for a single per-lang sort task,
-    ``value_block`` switches the running rank to the same two-layer block
-    prefix sum as ``budget_select``/``pack_sequences`` (block = floor(ppl /
-    value_block); per-(lang, block) totals cumulated over the small block
-    table + an in-block window — identical results, tested). The bucket
-    map joins back broadcast when small (counted once on the
-    localCheckpointed value table — the decontam auto-tier pattern).
+    ``value_block`` switches the running rank to ``packing.prefix_sum``'s
+    two-layer form over blocks of ``value_block`` ppl width (identical
+    results, tested). The bucket map joins back broadcast when small
+    (counted once on the localCheckpointed value table — the decontam
+    auto-tier pattern).
     """
-    from pyspark.sql import Window
+    from .packing import prefix_sum
 
     if n_buckets < 2:
         raise ValueError(f"ppl_buckets: n_buckets={n_buckets} must be >= 2")
@@ -692,38 +691,11 @@ def ppl_buckets(
     )
     lang_n = vals.groupBy(lang_col).agg(F.sum("_cnt").alias("_n"))
 
-    if value_block is None:
-        w_r = (
-            Window.partitionBy(lang_col)
-            .orderBy(ppl_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        ranked = vals.withColumn("_r0", F.coalesce(F.sum("_cnt").over(w_r), F.lit(0)))
-    else:
-        blocked = vals.withColumn(
-            "_vblk", F.floor(F.col(ppl_col) / F.lit(float(value_block))).cast("long")
-        )
-        blk_tot = blocked.groupBy(lang_col, "_vblk").agg(F.sum("_cnt").alias("_bc"))
-        w_blk = (
-            Window.partitionBy(lang_col)
-            .orderBy("_vblk")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        blk_off = blk_tot.withColumn(
-            "_boff", F.coalesce(F.sum("_bc").over(w_blk), F.lit(0))
-        ).drop("_bc")
-        w_in = (
-            Window.partitionBy(lang_col, "_vblk")
-            .orderBy(ppl_col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        ranked = (
-            blocked.join(F.broadcast(blk_off), [lang_col, "_vblk"])
-            .withColumn(
-                "_r0", F.col("_boff") + F.coalesce(F.sum("_cnt").over(w_in), F.lit(0))
-            )
-            .drop("_vblk", "_boff")
-        )
+    # _r0: docs strictly below this value in its language
+    ranked = prefix_sum(
+        vals, "_cnt", [ppl_col], "_r0", partition_by=[lang_col],
+        block=None if value_block is None else float(value_block),
+    )
 
     bucket = sum(
         ((F.col("_r0") * n_buckets) >= (F.lit(k) * F.col("_n"))).cast("int")

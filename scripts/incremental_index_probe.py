@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from batch_doc_vqa_spark.operators import dedup_index  # noqa: E402
-from batch_doc_vqa_spark.session import get_spark  # noqa: E402
+from batch_doc_vqa_spark.session import default_cpus, get_spark  # noqa: E402
 
 VOCAB = [f"w{k}" for k in range(4000)]
 
@@ -40,7 +40,7 @@ def doc_text(seed: int, i: int) -> str:
 def main() -> None:
     corpus_n = int(sys.argv[1]) if len(sys.argv) > 1 else 900_000
     snap_n = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
-    spark = get_spark("incprobe", master="local[32]", shuffle_partitions=64)
+    spark = get_spark("incprobe")
 
     def gen_df(n, tag, dup_of=None):
         def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -56,7 +56,7 @@ def main() -> None:
                         rows.append((f"{tag}{i}", doc_text(1 if dup_of is None else 2, i)))
                 yield pd.DataFrame(rows, columns=["doc_id", "text"])
 
-        return spark.range(0, n, numPartitions=64).mapInPandas(
+        return spark.range(0, n, numPartitions=2 * default_cpus()).mapInPandas(
             gen, schema="doc_id string, text string"
         )
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from batch_doc_vqa_spark.operators import chunking, decontam, dedup  # noqa: E402
 from batch_doc_vqa_spark.operators.packing import pack_sequences  # noqa: E402
 from batch_doc_vqa_spark.operators.pii import redact_pii  # noqa: E402
-from batch_doc_vqa_spark.session import get_spark  # noqa: E402
+from batch_doc_vqa_spark.session import default_cpus, get_spark  # noqa: E402
 
 VOCAB = [f"w{k}" for k in range(4000)]
 N_BENCH = 200
@@ -63,7 +63,7 @@ def doc_text(seed: int, i: int) -> str:
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    spark = get_spark("recipe_probe", master="local[32]", shuffle_partitions=64)
+    spark = get_spark("recipe_probe")
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -71,7 +71,7 @@ def main() -> None:
             yield pd.DataFrame({"doc_id": ids, "text": [doc_text(1, int(i)) for i in ids]})
 
     docs = (
-        spark.range(0, n, numPartitions=64)
+        spark.range(0, n, numPartitions=2 * default_cpus())
         .mapInPandas(gen, schema="doc_id long, text string")
         .persist()
     )

@@ -2,12 +2,12 @@
 multiple parallelism levels on identical input (local[k] standing in for a
 k-executor cluster), reporting docs/sec at each + N→4N efficiency.
 
-Hardware note (measured, see BENCH/BASELINE.md): this sandbox exposes 32
-logical CPUs but throughput saturates near 16 — classic SMT/hyperthreading.
-A pure-multiprocessing probe of the extraction kernel (no Spark) shows the
-same ceiling, so the 8→32 ratio measures the hardware, not the engine. The
-within-physical-core pair local[2] → local[8] is the honest N→4N comparison;
-both pairs are reported.
+Hardware note (measured, see BENCH/BASELINE.md): on a 32-logical-CPU host
+throughput saturated near 16 — classic SMT/hyperthreading. A
+pure-multiprocessing probe of the extraction kernel (no Spark) showed the
+same ceiling, so an 8→32 ratio measures the hardware, not the engine. The
+local[1] → local[4] pair is the headline N→4N comparison; the 8→32 pair runs
+only when ``default_cpus()`` is at least 32.
 
 Each level runs in a fresh subprocess (clean JVM/thread pool); Python UDF
 workers are warmed before timing (real clusters run long-lived executors).
@@ -23,38 +23,9 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-_WORKER = r"""
-import json, sys, time
-sys.path.insert(0, %(repo)r)
-from pyspark.sql import functions as F
-from batch_doc_vqa_spark.session import get_spark
-from batch_doc_vqa_spark.functions.udfs import extract_udf
-from batch_doc_vqa_spark.sources.pages import pages_df
-
-cores = int(sys.argv[1]); n = int(sys.argv[2]); reps = int(sys.argv[3])
-spark = get_spark("scaling", master=f"local[{cores}]", shuffle_partitions=cores)
-pages = pages_df(spark, n, seed=42, partitions=cores * 2)
-pages = pages.persist()
-pages.count()  # materialize input so we time extraction, not generation
-# warm up the Python UDF workers (long-lived executors on a real cluster)
-warm = pages_df(spark, cores * 64, seed=7, partitions=cores)
-warm.withColumn("_ex", extract_udf(F.col("html"))).select(F.length("_ex.text")).count()
-# the sandbox is a shared host with significant CPU steal (see BENCH notes):
-# repeat the timed run and report best + median
-times = []
-for _ in range(reps):
-    t0 = time.perf_counter()
-    out = pages.withColumn("_ex", extract_udf(F.col("html"))).select(
-        F.length("_ex.text").alias("nc"))
-    out.agg(F.count(F.lit(1)), F.sum("nc")).collect()
-    times.append(time.perf_counter() - t0)
-times.sort()
-med = times[len(times) // 2]
-print(json.dumps({"cores": cores, "rows": n, "sec": times[0], "sec_median": med,
-                  "docs_per_sec": n / times[0], "docs_per_sec_median": n / med}))
-"""
-
+from batch_doc_vqa_spark.session import default_cpus  # noqa: E402
 
 _PAIRED_WORKER = r"""
 import sys, time
@@ -130,16 +101,6 @@ def paired_efficiency(lo_cores: int, hi_cores: int, n_pages: int, reps: int = 8)
     }
 
 
-def run_level(cores: int, n_pages: int, reps: int = 6) -> dict:
-    code = _WORKER % {"repo": REPO}
-    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-    out = subprocess.run(
-        [sys.executable, "-c", code, str(cores), str(n_pages), str(reps)],
-        capture_output=True, text=True, check=True, env=env,
-    )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
 _LINEAGE_WORKER = r"""
 import json, shutil, sys, tempfile
 sys.path.insert(0, %(repo)r)
@@ -149,7 +110,7 @@ from batch_doc_vqa_spark.plans import read_lineage, run_extraction
 from batch_doc_vqa_spark.sources.pages import pages_df
 
 n = int(sys.argv[1])
-spark = get_spark("lineage", master="local[16]", shuffle_partitions=16)
+spark = get_spark("lineage")
 out = tempfile.mkdtemp(prefix="lineage_bench_")
 try:
     run_extraction(spark, pages_df(spark, n, seed=42), out, run_id="dist", num_buckets=64)
@@ -183,19 +144,28 @@ def main() -> None:
     # interleaved paired reps: both levels of a pair sample the same host-noise
     # window, so the efficiency ratio is robust to CPU-steal drift
     p14 = paired_efficiency(1, 4, n_pages, reps=8)
-    p832 = paired_efficiency(8, 32, n_pages, reps=8)
+    p832 = paired_efficiency(8, 32, n_pages, reps=8) if default_cpus() >= 32 else None
     dist = partition_distribution(min(n_pages, 50_000))
     report = {
         "n_pages": n_pages,
         "local1_docs_per_sec": p14["lo_docs_per_sec_best"],
         "local4_docs_per_sec": p14["hi_docs_per_sec_best"],
-        "local8_docs_per_sec": p832["lo_docs_per_sec_best"],
-        "local32_docs_per_sec": p832["hi_docs_per_sec_best"],
         "efficiency_1_to_4_median_pair": p14["eff_median_pair"],
         "efficiency_1_to_4_pairs": p14["pairs"],
-        "efficiency_8_to_32_median_pair": p832["eff_median_pair"],
         "partition_distribution": dist,
     }
+    rows_832 = ""
+    if p832:
+        report.update(
+            local8_docs_per_sec=p832["lo_docs_per_sec_best"],
+            local32_docs_per_sec=p832["hi_docs_per_sec_best"],
+            efficiency_8_to_32_median_pair=p832["eff_median_pair"],
+        )
+        rows_832 = (
+            f"| docs/sec @ local[8] (best) | {p832['lo_docs_per_sec_best']} |\n"
+            f"| docs/sec @ local[32] (best) | {p832['hi_docs_per_sec_best']} |\n"
+            f"| efficiency local[8]→local[32] (median pair) | {p832['eff_median_pair']} |\n"
+        )
     print(json.dumps(report))
     os.makedirs(f"{REPO}/BENCH", exist_ok=True)
     pair_rows = "\n".join(
@@ -225,10 +195,8 @@ def main() -> None:
             f"| pages | {n_pages} |\n"
             f"| docs/sec @ local[1] (best) | {report['local1_docs_per_sec']} |\n"
             f"| docs/sec @ local[4] (best) | {report['local4_docs_per_sec']} |\n"
-            f"| docs/sec @ local[8] (best) | {report['local8_docs_per_sec']} |\n"
-            f"| docs/sec @ local[32] (best) | {report['local32_docs_per_sec']} |\n"
             f"| **efficiency N→4N (local[1]→local[4], median pair)** | **{p14['eff_median_pair']}** |\n"
-            f"| efficiency local[8]→local[32] (median pair) | {p832['eff_median_pair']} |\n\n"
+            f"{rows_832}\n"
             "Target (BASELINE.json): efficiency ≥ 0.8 from N to 4N executors.\n\n"
             "Per-pair detail for the N→4N claim (sec@1, sec@4, efficiency):\n\n"
             "| pair | local[1] | local[4] | eff |\n|---|---|---|---|\n"
@@ -242,10 +210,11 @@ def main() -> None:
             "Reading the pairs: **local[1]→local[4] is the honest N→4N pair** on\n"
             "this box. Each Spark local core drives one JVM task thread plus one\n"
             "Python UDF worker, so local[k] consumes ~2k hardware threads — the\n"
-            "sandbox's 32 logical CPUs are ~16 physical cores (SMT), so local[8]\n"
-            "already saturates the machine and local[8]→local[32] measures the\n"
+            "32-logical-CPU host of round 7 had ~16 physical cores (SMT), so\n"
+            "local[8] already saturated it and local[8]→local[32] measured the\n"
             "hardware ceiling, not the engine (a no-Spark multiprocessing probe of\n"
-            "the same kernel also gets only 2.7× from 8→32 procs). The job itself\n"
+            "the same kernel also got only 2.7× from 8→32 procs); that pair runs\n"
+            "only on hosts with at least 32 CPUs. The job itself\n"
             "is embarrassingly parallel — map-side-only extraction over\n"
             "data-defined hash(url) buckets, no driver bottleneck, no hot-path\n"
             "shuffle — which is exactly the property that transfers to N→4N\n"

@@ -30,16 +30,16 @@ sys.path.insert(0, %(repo)r)
 from pyspark.sql import functions as F
 from batch_doc_vqa_spark.operators import dedup
 from batch_doc_vqa_spark.plans import read_lineage, read_results, run_extraction
-from batch_doc_vqa_spark.session import get_spark
+from batch_doc_vqa_spark.session import default_cpus, get_spark
 from batch_doc_vqa_spark.sources.pages import pages_df
 
 n = int(sys.argv[1])
-spark = get_spark("sf1", master="local[32]", shuffle_partitions=64)
+spark = get_spark("sf1")
 out = tempfile.mkdtemp(prefix="sf1_bench_")
 try:
     t0 = time.perf_counter()
     summary = run_extraction(
-        spark, pages_df(spark, n, seed=42, partitions=64), out,
+        spark, pages_df(spark, n, seed=42, partitions=2 * default_cpus()), out,
         run_id="sf1", num_buckets=256,
     )
     t_extract = time.perf_counter() - t0
@@ -78,7 +78,7 @@ try:
     n_dupes = resolved.filter(F.col("id") != F.col("cluster_id")).count()
     t_resolve = time.perf_counter() - t0
     print(json.dumps({
-        "n_pages": n, "extract_sec": round(t_extract, 1),
+        "n_pages": n, "cpus": default_cpus(), "extract_sec": round(t_extract, 1),
         "extract_docs_per_sec": round(n / t_extract, 1),
         "n_failed": summary["n_failed"], "lineage": dist,
         "lsh_pairs_sec": round(t_pairs, 1), "n_candidate_pairs": n_pairs,
@@ -114,12 +114,12 @@ def main() -> None:
     )
     section = (
         "\n## sf1 (~500k pages): does it hold an order of magnitude up?\n\n"
-        f"One full extraction run (local[32], 256 hash(url) buckets) + the\n"
+        f"One full extraction run (local[{stats['cpus']}], 256 hash(url) buckets) + the\n"
         f"production dedup composition over the *extracted text*, plus the\n"
         f"interleaved local[1]→local[4] pair suite on the same 500k input.\n\n"
         "| metric | value |\n|---|---|\n"
         f"| pages | {stats['n_pages']} |\n"
-        f"| extraction (local[32]) | {stats['extract_sec']}s — {stats['extract_docs_per_sec']} docs/s |\n"
+        f"| extraction (local[{stats['cpus']}]) | {stats['extract_sec']}s — {stats['extract_docs_per_sec']} docs/s |\n"
         f"| failed rows | {stats['n_failed']} |\n"
         f"| docs/bucket min / p50 / max (256 buckets) | {d['min_docs']} / {d['p50_docs']:.0f} / {d['max_docs']} |\n"
         f"| bytes/bucket min / p50 / max | {d['min_bytes']} / {d['p50_bytes']:.0f} / {d['max_bytes']} |\n"

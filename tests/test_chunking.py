@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from batch_doc_vqa_spark.operators import chunking
@@ -97,16 +98,32 @@ def test_budget_select_contiguous_prefix(spark):
 
 def test_budget_select_two_layer_equals_plain(spark):
     """order_block mode (the mega-source scale path) must reproduce the
-    plain per-group window exactly, for several block sizes."""
+    plain per-group window exactly, for several block sizes — NULL token
+    counts included: they add 0 in both forms, whether the NULL row leads
+    its group, sits mid-block, leads a block mid-group, or fills a block."""
     import random as _r
 
     rng = _r.Random(21)
     rows = [(f"s{i % 3}", i, rng.randint(1, 300), rng.randint(5, 50)) for i in range(600)]
+    rows += [
+        ("s0", 9001, 1000, None),  # leads its group
+        ("s0", 9002, 800, 7),
+        ("s0", 9003, 700, None),  # 9003-9005: a whole NULL block (widths 8, 64)
+        ("s0", 9004, 701, None),
+        ("s0", 9005, 702, None),
+        ("s0", 9006, 400, None),  # leads its block mid-group (widths 8, 64)
+        ("s0", 9007, 250, None),  # after equal-quality rows: mid-block
+        ("s0", 9008, 250, 11),
+    ]
     df = spark.createDataFrame(rows, "src string, doc_id long, quality int, toks int")
     plain = sorted(
         (r["src"], r["doc_id"], r["cum_tokens"])
         for r in chunking.budget_select(df, "src", "toks", 2000, "quality", "doc_id").collect()
     )
+    got = {d: c for _, d, c in plain}
+    assert got[9001] == 0
+    assert got[9003] == got[9004] == got[9005] == got[9006] == 7
+    assert got[9008] == got[9007] + 11
     for ob in (8, 64, 1000):
         two = sorted(
             (r["src"], r["doc_id"], r["cum_tokens"])
@@ -115,6 +132,35 @@ def test_budget_select_two_layer_equals_plain(spark):
             ).collect()
         )
         assert two == plain, ob
+
+
+@pytest.mark.parametrize(
+    "sample",
+    [
+        lambda df, bh: chunking.deterministic_sample(df, "doc_id", 0.5, seed=3, base_hash=bh),
+        lambda df, bh: chunking.score_resample(df, "doc_id", "score", base_hash=bh),
+        lambda df, bh: chunking.epoch_expand(df, "doc_id", "score", base_hash=bh),
+        lambda df, bh: chunking.weighted_sample(df, "doc_id", "score", 5, base_hash=bh),
+        lambda df, bh: chunking.stratified_split(
+            df, "doc_id", "src", {"train": 0.5, "test": 0.5}, base_hash=bh
+        ),
+        lambda df, bh: chunking.temperature_resample(df, "doc_id", "src", 0.5, base_hash=bh),
+        lambda df, bh: chunking.weighted_mixture([(df, 0.5), (df, 0.2)], "doc_id", base_hash=bh),
+    ],
+    ids=[
+        "deterministic_sample", "score_resample", "epoch_expand", "weighted_sample",
+        "stratified_split", "temperature_resample", "weighted_mixture",
+    ],
+)
+def test_samplers_refuse_an_unknown_base_hash(spark, sample):
+    """Every seeded sampler draws through dedup.seeded_hash, so a mistyped
+    base_hash raises (naming it) instead of silently drawing the md5
+    sample."""
+    df = spark.createDataFrame([(1, "a", 0.5)], "doc_id long, src string, score double")
+    with pytest.raises(ValueError, match=r"unknown base_hash: xxh$"):
+        sample(df, "xxh")
+    sample(df, "md5")
+    sample(df, "xxhash64")
 
 
 def test_weighted_sample_race_semantics(spark):

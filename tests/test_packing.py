@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import random
 
-from batch_doc_vqa_spark.operators.packing import pack_sequences, packing_stats
+import pytest
+
+from batch_doc_vqa_spark.operators.packing import pack_sequences, packing_stats, prefix_sum
 
 CTX = 100
 
@@ -71,3 +73,40 @@ def test_no_global_single_partition_shuffle(spark):
     plan = spark._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "formatted")
     # the corpus-side window must be hash-partitioned on the block key
     assert "hashpartitioning(_blk" in plan, plan[:2000]
+
+
+@pytest.mark.parametrize("inclusive", [False, True])
+@pytest.mark.parametrize("partition_by", [[], ["g"]], ids=["global", "partitioned"])
+@pytest.mark.parametrize("order", [["k"], ["-k"]], ids=["asc", "desc"])
+def test_prefix_sum_equals_one_global_window(spark, order, partition_by, inclusive):
+    """Every block width of the two-layer form equals the one-window form
+    and a Python running sum: negative keys, NULL values (counted as 0),
+    ascending and descending keys, partitioned and global sums, exclusive
+    and inclusive frames, exact BIGINT (int) and double (float) cuts."""
+    rng = random.Random(17)
+    keys = list(range(-400, 400, 3))
+    rng.shuffle(keys)
+    rows = [(k, k % 3, None if k % 11 == 0 else rng.randint(0, 50)) for k in keys]
+    df = spark.createDataFrame(rows, "k long, g int, v int").repartition(5)
+    widths = (None, 1, 7, 64, 5000, 2.5)
+    out = df
+    for i, b in enumerate(widths):
+        out = prefix_sum(out, "v", order, f"s{i}", partition_by, block=b, inclusive=inclusive)
+    assert out.columns == ["k", "g", "v"] + [f"s{i}" for i in range(len(widths))]
+
+    expect, run = {}, {}
+    for k, g, v in sorted(rows, reverse=order == ["-k"]):
+        part = g if partition_by else None
+        before = run.get(part, 0)
+        run[part] = before + (v or 0)
+        expect[k] = run[part] if inclusive else before
+    for r in out.collect():
+        assert [r[f"s{i}"] for i in range(len(widths))] == [expect[r["k"]]] * len(widths), r
+
+
+def test_prefix_sum_refuses_colliding_columns(spark):
+    df = spark.createDataFrame([(1, 2, 3)], "k long, v long, _blk long")
+    with pytest.raises(ValueError, match="collide with internals"):
+        prefix_sum(df, "v", ["k"], "s", block=4)
+    with pytest.raises(ValueError, match="collide with internals"):
+        prefix_sum(df.drop("_blk"), "v", ["k"], "v")
